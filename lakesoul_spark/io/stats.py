@@ -77,12 +77,6 @@ def _json_flt(v: float):
     return v
 
 
-def decode_stat_float(v) -> float:
-    """Inverse of :func:`_json_flt` — accepts the raw float or the
-    infinite-sentinel string."""
-    return float(v)
-
-
 def file_sums(pf, cols: list[str]) -> dict | None:
     """Exact per-column commit-log stats for the declared
     ``lakesoul.statsColumns`` of ``cols``, read from an open

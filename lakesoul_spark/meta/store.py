@@ -236,15 +236,6 @@ class Snapshot:
         return max(counts.values(), default=0)
 
 
-def _atomic_write_json(path: str, payload: dict) -> bool:
-    """Create-if-absent JSON write via the PROCESS-DEFAULT backend —
-    the same backend MetaStore uses, so tests that swap in the
-    S3-semantics double cover this path too."""
-    return default_store_io().put_if_absent(
-        path, json.dumps(payload).encode()
-    )
-
-
 # process-default IO backend: tests swap this for the S3-semantics
 # double so every MetaStore created inside the test (including ones
 # the code under test constructs itself) shares one object store

@@ -1,7 +1,7 @@
 """Incrementally-maintained materialized views.
 
 A capability the reference does not ship but every warehouse on top of
-it rebuilds by hand — two kinds, one refresh contract:
+it rebuilds by hand — three kinds, one refresh protocol:
 
 - :class:`AggMV` — GROUP-BY rollups (sum / count / avg / min / max /
   count_distinct-via-HLL), optionally star-schema (fact batches
@@ -9,13 +9,22 @@ it rebuilds by hand — two kinds, one refresh contract:
   WHERE-filtered;
 - :class:`TransformMV` — insert-only transform pipes (select
   expressions + WHERE + enrichment dims), the staging hop of an
-  ingest DAG.
+  ingest DAG;
+- :class:`JoinMV` — equi-JOIN views over two churning sources.
 
-Both refresh from COMMIT RANGES instead of recomputing the corpus,
-carry the applied source version atomically in the refresh commit,
-and are auto-refreshed by the maintenance daemon (``service.py``);
-the catalog SQL dispatcher exposes CREATE / REFRESH [FULL] / DROP /
-SHOW MATERIALIZED VIEWS (a SELECT without GROUP BY creates a pipe).
+All three refresh from COMMIT RANGES instead of recomputing the
+corpus, carry the applied source versions atomically in the refresh
+commit, and are auto-refreshed by the maintenance daemon
+(``service.py``); the catalog SQL dispatcher exposes CREATE / REFRESH
+[FULL] / DROP / SHOW MATERIALIZED VIEWS (a SELECT without GROUP BY
+creates a pipe, a SELECT over a JOIN a join view).
+
+The protocol lives once, in :class:`_View`: one retry loop
+(:meth:`_View.refresh`), one full recompute (:meth:`_View.rebuild`)
+and one marker format. A kind supplies only its source paths (from
+its spec), its delta for a window of N sources — a frame plus the
+vanished-key frames to delete — its full-recompute frame, and its
+marker keys.
 
 The aggregate trick is that LakeSoul's own MOR machinery already is an
 incremental aggregator:
@@ -41,10 +50,13 @@ or compactor — including ones that know nothing about mv.py — applies
 them; scan paths that can't (the Python Data Source / Arrow readers)
 refuse loudly instead of returning a partial.
 
-Exactly-once: the refresh commit carries the applied source version in
-its ``extra`` metadata AND as a ``(query_id, batch_id)`` idempotence
-key — the same mechanism the streaming sink uses — so a crashed or
-re-run refresh can never double-count a window.
+Exactly-once: the refresh commit carries the applied source versions
+in its ``extra`` metadata (``mv.source_end_version``; a join view's
+``mv.left_end_version`` / ``mv.right_end_version``) AND as a
+``(query_id, batch_id)`` idempotence key — ``mv:<id>`` / head, or
+``mv:<id>:<left head>`` / right head — the same mechanism the
+streaming sink uses, so a crashed or re-run refresh can never
+double-count a window.
 
 Why append-only sources: LakeSoul CDC update/delete rows carry no
 pre-image (``ProcessCDCTableMergeOnRead.scala:25-27``), so a sum can't
@@ -85,11 +97,14 @@ Deletes in an APPEND-ONLY source's window still refuse toward
 from __future__ import annotations
 
 import json
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lakesoul_spark.io.writer import write_table_data
 from lakesoul_spark.meta.store import (
+    CommitConflict,
+    FileOp,
     MetaStore,
     OP_APPEND,
     OP_COMPACTION,
@@ -100,7 +115,13 @@ from lakesoul_spark.meta.store import (
 from lakesoul_spark.table import LakeSoulTable, create_table
 
 SPEC_PROP = "lakesoul.mv.spec"
+# applied-source markers in refresh-commit extras: one key per source
 _EXTRA_END = "mv.source_end_version"
+_EXTRA_LEFT_END = "mv.left_end_version"
+_EXTRA_RIGHT_END = "mv.right_end_version"
+_MARKER_KEYS = (_EXTRA_END, _EXTRA_LEFT_END, _EXTRA_RIGHT_END)
+# refresh attempts before lost commit races surface as CommitConflict
+_MAX_ATTEMPTS = 5
 
 # out-column merge operator per aggregate function: partials compose
 # associatively under these, which is what makes compaction safe
@@ -426,15 +447,7 @@ def _validate_agg_source(info, aggs: dict,
                 "sparse-mode threshold)"
             )
         return "append"
-    spec_json = info.properties.get(SPEC_PROP)
-    if spec_json and json.loads(spec_json).get("kind", "agg") == "agg":
-        raise ValueError(
-            "an aggregate view cannot source another aggregate view: "
-            "its stored columns are merge-partial carriers (exact "
-            "decimal sums, avg pairs, HLL sketches) that only "
-            "to_df() finalizes — roll up the base table or the JOIN "
-            "view instead"
-        )
+    _reject_agg_view_source(info, "rollup")
     allowed = {"sum", "count", "avg"}
     if allow_extremum_rescan:
         allowed |= {"min", "max"}
@@ -459,10 +472,11 @@ def _validate_agg_source(info, aggs: dict,
             f"cannot express — {hint}use an append-only source"
         )
     # reserved-name collisions in pk mode: a source column literally
-    # named __sign would be folded as the retraction sign by _delta,
-    # and a group_by name containing '__' can collide with the hidden
-    # __live / *__s / *__c partials — refuse at create, mirroring the
-    # check _signed_partial_aggs applies to agg OUTPUT names
+    # named __sign would be folded as the retraction sign by the
+    # restatement, and a group_by name containing '__' can collide
+    # with the hidden __live / *__s / *__c partials — refuse at
+    # create, mirroring the check _signed_partial_aggs applies to agg
+    # OUTPUT names
     from lakesoul_spark.io.writer import table_schema as _ts
     if "__sign" in {f.name for f in _ts(info).fields}:
         raise ValueError(
@@ -562,6 +576,28 @@ def _window_df(
     ).to_df()
 
 
+def _pin_dims(spark: SparkSession, dims: list[dict] | None) -> list[dict]:
+    """Validated dim entries for a view spec, each pinned to its
+    table's current head (see :meth:`AggMV.create`)."""
+    pinned = []
+    for d in dims or []:
+        how = d.get("how", "inner")
+        if how not in ("inner", "left"):
+            raise ValueError(f"dim join how must be inner/left, got {how!r}")
+        if not d.get("on"):
+            raise ValueError("dim entry needs join columns in 'on'")
+        dt = LakeSoulTable.for_path(spark, d["path"])
+        on = d["on"]
+        pinned.append({
+            "path": dt.path,
+            "on": dict(on) if isinstance(on, dict) else list(on),
+            "columns": list(d["columns"]) if d.get("columns") else None,
+            "how": how,
+            "version": dt.store.head_version(),
+        })
+    return pinned
+
+
 def _joined(
     spark: SparkSession, df: DataFrame, dims: list[dict], where: str | None
 ) -> DataFrame:
@@ -605,7 +641,14 @@ def _key_bounds(delta: DataFrame, cols: list):
     re-ran the probe per term). Returns ``"empty"`` when every delta
     row is NULL in some key (no pair can match) and ``"unscoped"``
     when a NaN/Inf bound poisons the comparison domains (callers scan
-    the full side rather than reason about IEEE specials).
+    the full side rather than reason about IEEE specials)."""
+    return _bounds_probe(delta, cols)[0]
+
+
+def _bounds_probe(df: DataFrame, cols: list, *extra):
+    """``(bounds, row)``: :func:`_key_bounds` of ``df`` over ``cols``,
+    with the ``extra`` aggregate Columns riding the same job (their
+    values are read off ``row``).
 
     TIMESTAMP keys: collect() renders TimestampType in the DRIVER
     SESSION's timezone as a naive datetime, while the commit-log
@@ -620,16 +663,16 @@ def _key_bounds(delta: DataFrame, cols: list):
 
     from pyspark.sql.types import TimestampType
 
-    dtypes = {f.name: f.dataType for f in delta.schema.fields}
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
     ts_cols = {c for c in cols
                if isinstance(dtypes.get(c), TimestampType)}
-    aggs = []
+    aggs = list(extra)
     for c in cols:
         lo_e, hi_e = F.min(c), F.max(c)
         if c in ts_cols:
             lo_e, hi_e = F.unix_micros(lo_e), F.unix_micros(hi_e)
         aggs += [lo_e.alias(f"__lo_{c}"), hi_e.alias(f"__hi_{c}")]
-    row = delta.agg(*aggs).collect()[0]
+    row = df.agg(*aggs).collect()[0]
     epoch = datetime.datetime(1970, 1, 1,
                               tzinfo=datetime.timezone.utc)
     out: list = []
@@ -640,16 +683,16 @@ def _key_bounds(delta: DataFrame, cols: list):
             lo = epoch + datetime.timedelta(microseconds=int(lo))
             hi = epoch + datetime.timedelta(microseconds=int(hi))
         if lo is None:
-            return "empty"
+            return "empty", row
         if any(isinstance(v, float) and (math.isnan(v)
                                          or math.isinf(v))
                for v in (lo, hi)):
             # NaN bounds poison both the Python stats compare
             # (lo <= NaN is False → every file would drop) and the
             # row predicate (Spark pairs NaN = NaN in joins)
-            return "unscoped"
+            return "unscoped", row
         out.append((c, lo, hi))
-    return out
+    return out, row
 
 
 def _scoped_snapshot(spark: SparkSession, path: str, version: int,
@@ -911,111 +954,75 @@ def _probe_window(keys: DataFrame, pk_cols: list, info):
     ``(set(), "empty", 0)`` and every scoped term short-circuits. The
     count (``keys`` is already DISTINCT) rides the same job and gates
     the downstream ``F.broadcast`` hints (:func:`_bcast`)."""
-    import datetime
-    import math
-
-    from pyspark.sql.types import TimestampType
-
-    dtypes = {f.name: f.dataType for f in keys.schema.fields}
-    ts_cols = {c for c in pk_cols
-               if isinstance(dtypes.get(c), TimestampType)}
-    aggs = [F.collect_set(F.pmod(
-        F.hash(*[F.col(c) for c in pk_cols]),
-        F.lit(info.hash_bucket_num))).alias("__bset"),
-        F.count(F.lit(1)).alias("__nkeys")]
-    for c in pk_cols:
-        lo_e, hi_e = F.min(c), F.max(c)
-        if c in ts_cols:
-            lo_e, hi_e = F.unix_micros(lo_e), F.unix_micros(hi_e)
-        aggs += [lo_e.alias(f"__lo_{c}"), hi_e.alias(f"__hi_{c}")]
-    row = keys.agg(*aggs).collect()[0]
-    bset = set(row["__bset"])
-    nkeys = int(row["__nkeys"])
-    epoch = datetime.datetime(1970, 1, 1,
-                              tzinfo=datetime.timezone.utc)
-    bounds: list = []
-    for c in pk_cols:
-        lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
-        if c in ts_cols and lo is not None:
-            lo = epoch + datetime.timedelta(microseconds=int(lo))
-            hi = epoch + datetime.timedelta(microseconds=int(hi))
-        if lo is None:
-            return bset, "empty", nkeys
-        if any(isinstance(v, float) and (math.isnan(v)
-                                         or math.isinf(v))
-               for v in (lo, hi)):
-            return bset, "unscoped", nkeys
-        bounds.append((c, lo, hi))
-    return bset, bounds, nkeys
+    bounds, row = _bounds_probe(
+        keys, pk_cols,
+        F.collect_set(F.pmod(
+            F.hash(*[F.col(c) for c in pk_cols]),
+            F.lit(info.hash_bucket_num))).alias("__bset"),
+        F.count(F.lit(1)).alias("__nkeys"))
+    return set(row["__bset"]), bounds, int(row["__nkeys"])
 
 
-def _refresh_loop(view, commit_op: str, *, max_attempts: int = 5) -> dict:
-    """Shared refresh driver for both view kinds.
-
-    The MV head is captured BEFORE reading the applied marker, so any
-    refresh landing after that point interleaves with our commit; the
-    commit layer then either returns the duplicate (same window —
-    idempotent success) or raises CommitConflict (overlapping window,
-    computed from stale applied state) and we recompute. Files written
-    by an aborted attempt are never committed; vacuum reclaims them."""
-    from lakesoul_spark.meta.store import CommitConflict
-
-    src_store = MetaStore(view.source_path)
-    for _ in range(max_attempts):
-        mv_base = view.table.store.head_version()
-        head = src_store.head_version()
-        last = view.last_applied_version()
-        if head <= last:
-            return {"start_version": last + 1, "end_version": last,
-                    "applied": False}
-        view._check_dims_pinned()
-        view._vanished = None
-        try:
-            out = view._delta_window(src_store, last, head)
-            info = view.table.info
-            ops = write_table_data(out, info, dedup=False)
-            # keys whose restatement produced no output row (source
-            # delete, WHERE flip, inner-dim drop) are DELETED from the
-            # view before the marker commit: a crash in between leaves
-            # the marker unadvanced, so the replay recomputes the same
-            # vanished set and the delete degenerates to a no-op
-            gone = getattr(view, "_vanished", None)
-            if gone is not None:
-                # pinned: take(1), the partition/bucket probes and the
-                # rewrite anti-join inside delete_matching otherwise
-                # each replay the whole anti-join lineage
-                gone = _pin(view, gone)
-                if gone.take(1):
-                    view.table.delete_matching(gone)
-        except CommitConflict:
-            # a compute-phase commit lost a race (an exact-distinct
-            # companion upsert, or the vanished-key view delete,
-            # against a concurrent refresher): recompute from the new
-            # state like a view-commit conflict — files an aborted
-            # attempt wrote are never committed; vacuum reclaims them
-            continue
-        finally:
-            _release_pins(view)
-        try:
-            view.table.store.commit(
-                commit_op,
-                ops,
-                query_id=f"mv:{info.table_id}",
-                batch_id=head,
-                extra={_EXTRA_END: head},
-                base_version=mv_base,
-            )
-        except CommitConflict:
-            continue  # a racing refresh landed: recompute the window
-        return {"start_version": last + 1, "end_version": head,
-                "applied": True}
-    raise CommitConflict(
-        f"refresh of {view.table.path} lost {max_attempts} races in a row"
-    )
+def _source_paths(spec: dict) -> list[str]:
+    """The source tables a view refreshes from, in marker order."""
+    if spec.get("kind") == "join":
+        return [spec["left_path"], spec["right_path"]]
+    return [spec["source_path"]]
 
 
-class AggMV:
-    """Handle on a materialized aggregate view table."""
+def source_heads(info) -> tuple[int, ...] | None:
+    """Head versions of the sources the view described by table info
+    ``info`` refreshes from, read from its spec alone (no view handle
+    is opened); ``None`` when the table is not a view. The maintenance
+    daemon refreshes a view whenever this moves."""
+    spec = info.properties.get(SPEC_PROP)
+    if not spec:
+        return None
+    return tuple(MetaStore(p).head_version()
+                 for p in _source_paths(json.loads(spec)))
+
+
+def applied_marker(store: MetaStore, upto: int | None = None) -> dict:
+    """The applied-source marker — the end-version entries of
+    ``extra``, for every view kind — of the newest refresh commit at
+    or below version ``upto`` (default: head); ``{}`` before the first
+    refresh. The marker is almost always in the newest commit, so the
+    downward scan is O(1) in practice. A clone copies it, so the
+    forked view keeps its applied state."""
+    for seq in range(store.head_version() if upto is None else upto,
+                     0, -1):
+        extra = store.read_commit(seq).extra
+        marker = {k: extra[k] for k in _MARKER_KEYS if k in extra}
+        if marker:
+            return marker
+    return {}
+
+
+def _snapshot(spark: SparkSession, path: str, version: int) -> DataFrame:
+    """``path`` pinned at ``version``; version 0 (nothing applied yet)
+    is the empty frame with the table's schema."""
+    if version == 0:
+        return LakeSoulTable.for_path(spark, path).to_df().limit(0)
+    return LakeSoulTable.for_path_snapshot(
+        spark, path, version=version).to_df()
+
+
+class _View:
+    """The refresh / rebuild protocol every view kind shares.
+
+    A kind supplies what differs: its source paths (from the spec),
+    :meth:`_load` for the rest of its spec, :meth:`_delta_window` (the
+    delta for a window over its N sources), :meth:`_full` (the full
+    recompute) and :attr:`_marker_keys`. The marker is one format for
+    every kind: a refresh commit carries the applied source heads in
+    ``extra`` (one key per source) AND the streaming-sink idempotence
+    key ``query_id=mv:<table_id>[:<head>…]`` over every head but the
+    last, ``batch_id=<last head>`` — so a crashed or re-run refresh can
+    never double-apply a window."""
+
+    _kind: str  # the spec's "kind"
+    _marker_keys: tuple = (_EXTRA_END,)
+    _refresh_op = OP_MERGE
 
     def __init__(self, spark: SparkSession, mv_path: str):
         self.spark = spark
@@ -1024,485 +1031,75 @@ class AggMV:
         if not spec_json:
             raise ValueError(f"{mv_path} is not an mv.py view (no {SPEC_PROP})")
         spec = json.loads(spec_json)
-        if spec.get("kind", "agg") != "agg":
+        kind = spec.get("kind", "agg")
+        if kind != self._kind:
             raise ValueError(
-                f"{mv_path} is a {spec['kind']!r} view, not an aggregate "
-                "view — open it with open_view()"
-            )
-        self.source_path: str = spec["source_path"]
-        self.group_by: list[str] = list(spec["group_by"])
-        # {out_col: [fn, expr]}
-        self.aggs: dict = {k: tuple(v) for k, v in spec["aggs"].items()}
+                f"{mv_path} is a {kind!r} view — open it with open_view()")
+        self.sources: list[str] = _source_paths(spec)
         # optional row filter — stateless, so it distributes over
-        # append batches and stays incrementally maintainable (and,
-        # in pk mode, applies identically to a row's old and new
-        # versions — a churn that flips the filter retracts/adds
-        # exactly the right contribution)
+        # commit windows and stays incrementally maintainable (and
+        # applies identically to a PK row's old and new versions — a
+        # churn that flips the filter retracts/adds exactly the right
+        # contribution)
         self.where: str | None = spec.get("where")
         # optional star-schema dimensions, each PINNED to the snapshot
-        # version recorded at create/rebuild time (see create())
+        # version recorded at create/rebuild time (see AggMV.create)
         self.dims: list[dict] = list(spec.get("dims", []))
-        # "append" (partials only ever add) | "pk" (r14: signed
-        # restatement deltas net out upsert churn — see create())
-        self.source_mode: str = spec.get("source_mode", "append")
-        # r15: min/max over a pk source via evict-triggered rescans
-        self.extremum_rescan: bool = bool(spec.get("extremum_rescan"))
-        # r15: exact count_distinct over a pk source via per-value
-        # companion tables (one per count_distinct output column)
-        self.exact_distinct: bool = bool(spec.get("exact_distinct"))
+        self._load(spec)
 
-    def _dv_path(self, name: str) -> str:
-        """Companion-table path for exact count_distinct column
-        ``name`` — a SIBLING directory of the view (never nested
-        under it, so directory listings of the view see only its own
-        files)."""
-        return self.table.path.rstrip("/") + f"__dv_{name}"
+    def _load(self, spec: dict) -> None:
+        raise NotImplementedError
 
-    # ------------------------------------------------------------ factory
+    def _delta_window(self, stores: list, last: tuple, head: tuple):
+        """``(delta, vanished)`` for source commits (last, head] —
+        ``stores``, ``last`` and ``head`` hold one entry per source:
+        the frame the refresh writes, and a list of ``(gone,
+        view_rows)`` — touched keys whose restatement emitted no row,
+        and the function mapping them to the view rows to delete."""
+        raise NotImplementedError
 
-    @classmethod
-    def create(
-        cls,
-        spark: SparkSession,
-        source_path: str,
-        mv_path: str,
-        *,
-        group_by: list[str],
-        aggs: dict,
-        hash_bucket_num: int = 4,
-        where: str | None = None,
-        dims: list[dict] | None = None,
-        allow_extremum_rescan: bool = False,
-        exact_distinct: bool = False,
-    ) -> "AggMV":
-        """Define the view and load nothing: the first :meth:`refresh`
-        covers the source's full history through one incremental read
-        (version 1..head), so initial load and steady-state share one
-        code path. ``aggs`` maps output column → ``(fn, expr_sql)``
-        with fn in sum/count/min/max (count expr ``None``/``"*"`` means
-        count rows). ``where`` is an optional row-filter SQL expression
-        — stateless per row, so it applies identically to every
-        incremental batch.
+    def _full(self, heads: tuple) -> DataFrame:
+        """The full recompute at source ``heads`` (:meth:`rebuild`)."""
+        raise NotImplementedError
 
-        ``dims`` makes it a STAR-SCHEMA rollup: each entry is
-        ``{"path": <lakesoul table>, "on": [join cols],
-        "columns": [projection] (optional), "how": "inner"|"left"}``.
-        A dimension join distributes over fact batches ONLY while the
-        dimension is frozen, so each dim is pinned to its snapshot
-        version at create/rebuild time: refreshes read the PINNED dim
-        snapshot (concurrent dim writes can't skew a batch) and REFUSE
-        to run once the dim's head moves past the pin — ``rebuild()``
-        re-pins. Dims are broadcast (the star-schema contract: small
-        dimension, huge fact); group-by columns may come from dims.
+    @property
+    def source_path(self) -> str:
+        """The source path (``left,right`` for a join view — the SHOW
+        MATERIALIZED VIEWS display form)."""
+        return ",".join(self.sources)
 
-        A PRIMARY-KEY source (r14) is admitted for sum/count/avg: the
-        view maintains the rollup through upsert churn by folding
-        SIGNED restatement deltas — each refresh reads the touched
-        keys' OLD rows (pinned last-applied snapshot) with sign −1
-        and their NEW rows (head snapshot) with sign +1, both scans
-        pruned to the touched murmur3 buckets and the key range, so a
-        maintained JOIN view (whose output IS a PK table) composes
-        into a maintained rollup with no corpus re-aggregation
-        (reference anchor: ``SumAll``/``SumLast`` merge operators,
-        ``merge_operator.rs:22-50``, and the multi-stream wide-table
-        rollup tutorial). min/max/count_distinct refuse by default —
-        a churned extremum needs a rescan and a sketch cannot unhash
-        a value. ``allow_extremum_rescan=True`` (r15) opts min/max
-        in: refreshes fold new candidates for free and trigger ONE
-        group-scoped head rescan only when a retracted row could own
-        a touched group's current extremum (see
-        :meth:`_extremum_frame` for the exact trigger and the
-        documented worst case). ``exact_distinct=True`` (r15) opts
-        count_distinct in EXACTLY: each such column gets a companion
-        PK table keyed by (group_by…, value) whose signed occurrence
-        counts retract like any sum, and the view stores the per-group
-        sum of 0↔>0 TRANSITIONS — see :meth:`_exact_distinct_frame`
-        for the per-refresh cost (O(churned (group, value) pairs))."""
-        src = LakeSoulTable.for_path(spark, source_path)
-        mode = _validate_agg_source(src.info, aggs, group_by,
-                                    allow_extremum_rescan,
-                                    exact_distinct)
-        if not group_by:
-            raise ValueError("group_by must name at least one column")
-        clash = set(group_by) & {f"{n}__{s}" for n in aggs
-                                 for s in ("s", "c")}
-        if clash:
-            raise ValueError(
-                f"group_by columns {sorted(clash)} collide with the "
-                "hidden partial-pair columns of the agg spec"
-            )
-        pinned = []
-        for d in dims or []:
-            how = d.get("how", "inner")
-            if how not in ("inner", "left"):
-                raise ValueError(f"dim join how must be inner/left, got {how!r}")
-            if not d.get("on"):
-                raise ValueError("dim entry needs join columns in 'on'")
-            dt = LakeSoulTable.for_path(spark, d["path"])
-            on = d["on"]
-            pinned.append({
-                "path": dt.path,
-                "on": dict(on) if isinstance(on, dict) else list(on),
-                "columns": list(d["columns"]) if d.get("columns") else None,
-                "how": how,
-                "version": dt.store.head_version(),
-            })
-        # derive the MV schema from the partial-agg plan (no job); this
-        # also validates the where/join expressions against the schema
-        probe_src = src.to_df().limit(0)
-        if mode == "pk":
-            probe_src = probe_src.selectExpr("*", "1 AS __sign")
-        probe_j = _joined(spark, probe_src, pinned, where)
-        probe = probe_j.groupBy(*group_by).agg(
-            *(_pk_load_aggs(aggs) if mode == "pk"
-              else _partial_aggs(aggs)))
-        merge_ops = _merge_ops_str(aggs, mode)
-        spec = {
-            "source_path": src.path,
-            "group_by": list(group_by),
-            "aggs": {k: list(v) for k, v in aggs.items()},
-        }
-        cd = _split_cdist(aggs)[0] if exact_distinct else {}
-        if mode != "append":
-            spec["source_mode"] = mode
-            if allow_extremum_rescan and _split_extrema(aggs)[0]:
-                spec["extremum_rescan"] = True
-            if cd:
-                spec["exact_distinct"] = True
-        if where:
-            spec["where"] = where
-        if pinned:
-            spec["dims"] = pinned
-        create_table(
-            spark,
-            mv_path,
-            probe.schema,
-            hash_partitions=list(group_by),
-            hash_bucket_num=hash_bucket_num,
-            properties={
-                SPEC_PROP: json.dumps(spec),
-                "lakesoul.columnMergeOps": merge_ops,
-            },
+    def last_applied(self) -> tuple:
+        """Source versions the view reflects, one per source — read
+        from the newest refresh commit's ``extra`` (atomic with the
+        data it applied)."""
+        marker = applied_marker(self.table.store)
+        return tuple(int(marker.get(k, 0)) for k in self._marker_keys)
+
+    def last_applied_version(self) -> int:
+        """Applied version of the (first) source — the SHOW
+        MATERIALIZED VIEWS column."""
+        return self.last_applied()[0]
+
+    def _report(self, last: tuple | None, end: tuple,
+                applied: bool) -> dict:
+        """Result dict of a refresh (``last`` = the applied marker it
+        started from) or of a rebuild (``last=None``)."""
+        if last is None:
+            return {"end_version": end[0], "applied": applied}
+        return {"start_version": last[0] + 1, "end_version": end[0],
+                "applied": applied}
+
+    def _commit(self, op: str, ops: list, heads: tuple, info,
+                base_version: int | None = None) -> None:
+        self.table.store.commit(
+            op,
+            ops,
+            query_id="mv:" + ":".join(map(str, (info.table_id,
+                                                *heads[:-1]))),
+            batch_id=heads[-1],
+            extra=dict(zip(self._marker_keys, heads)),
+            base_version=base_version,
         )
-        view = cls(spark, mv_path)
-        for n, (_fn, e) in cd.items():
-            # companion PK table, one per exact count_distinct column:
-            # keyed by (group_by…, value), one signed occurrence count
-            # folded sum_all. The PK gate (check_pk_type inside
-            # create_table) refuses value expressions the murmur3
-            # bucketing can't hash — exactly the types that couldn't
-            # be grouped deterministically anyway. PK stats give the
-            # restatement the same file pruning as every MV scan.
-            dv_schema = probe_j.select(
-                *group_by, F.expr(e).alias("__v"),
-                F.lit(0).cast("bigint").alias("__n")).schema
-            create_table(
-                spark,
-                view._dv_path(n),
-                dv_schema,
-                hash_partitions=list(group_by) + ["__v"],
-                hash_bucket_num=hash_bucket_num,
-                properties={
-                    "lakesoul.columnMergeOps": "__n:sum_all",
-                    "lakesoul.mv.companion": mv_path,
-                    # drained values (occurrence count netted to 0)
-                    # are semantically absent — full-fold compaction
-                    # garbage-collects their rows, bounding companion
-                    # growth under long-lived churn
-                    "lakesoul.compaction.dropWhere": "__n <= 0",
-                },
-            )
-        return view
-
-    # ------------------------------------------------------------ refresh
-
-    def _delta(self, df: DataFrame) -> DataFrame:
-        if self.source_mode == "pk":
-            # full loads only (initial refresh, rebuild — all-adds);
-            # the incremental restatement lives in _delta_window
-            df = df.selectExpr("*", "1 AS __sign")
-            df = _joined(self.spark, df, self.dims, self.where)
-            return df.groupBy(*self.group_by).agg(
-                *_pk_load_aggs(self.aggs))
-        df = _joined(self.spark, df, self.dims, self.where)
-        return df.groupBy(*self.group_by).agg(*_partial_aggs(self.aggs))
-
-    def _delta_window(self, src_store: MetaStore, last: int,
-                      head: int) -> DataFrame:
-        """One partial generation for source commits (last, head].
-
-        Append mode: the window's committed rows through the ordinary
-        partial aggregation. PK mode past the initial load: the
-        SIGNED restatement — the touched keys' head-snapshot rows
-        (+1) unioned with their last-applied-snapshot rows (−1), so
-        the netted partials retract exactly what the superseded
-        versions contributed. Both snapshot scans read only the
-        touched buckets' files, further scoped by the key set's
-        stats range (:func:`_scoped_snapshot`) — O(Δ keys) IO at
-        100 TB, never a corpus re-aggregation. Keys new in the window
-        simply have no old rows; a key whose churn flips the WHERE
-        filter (or moves it to another group) nets out per group by
-        construction. DELETE / UPDATE commits (r15) need no new
-        algebra: their keys come from the window's del-files, a
-        deleted key has no head rows so the restatement is pure
-        retraction, and survivors of a rewrite net to a no-op; CDC
-        delete markers behave identically because both snapshot scans
-        already filter them. The key frame is cached for the window —
-        the bucket collect, the two min/max probes and the two
-        semi-joins all reuse one materialization."""
-        if self.source_mode == "pk" and last > 0:
-            info = LakeSoulTable.for_path(self.spark,
-                                          self.source_path).info
-            pk_cols = list(info.hash_partitions)
-            keys = _pin(self, _pk_window_keys(
-                self.spark, src_store, self.source_path, last, head,
-                pk_cols))
-            bset, kb, nk = _probe_window(keys, pk_cols, info)
-            new = _scoped_snapshot(
-                self.spark, self.source_path, head, keys, pk_cols,
-                bset, bounds=kb).join(_bcast(keys, nk), on=pk_cols,
-                                      how="left_semi")
-            old = _scoped_snapshot(
-                self.spark, self.source_path, last, keys, pk_cols,
-                bset, bounds=kb).join(_bcast(keys, nk), on=pk_cols,
-                                      how="left_semi")
-            jn = _joined(self.spark,
-                         new.selectExpr("*", "1 AS __sign"),
-                         self.dims, self.where)
-            jo = _joined(self.spark,
-                         old.selectExpr("*", "-1 AS __sign"),
-                         self.dims, self.where)
-            mm, rest = _split_extrema(self.aggs)
-            cd, rest = (_split_cdist(rest) if self.exact_distinct
-                        else ({}, rest))
-            out = jn.unionByName(jo).groupBy(*self.group_by).agg(
-                *_signed_partial_aggs(rest))
-            if mm:
-                out = _nsjoin(out,
-                              self._extremum_frame(jn, jo, mm, head),
-                              self.group_by, "left")
-            for n, spec in cd.items():
-                g = self._exact_distinct_frame(n, spec[1], jn, jo,
-                                               last, head)
-                if g is not None:
-                    out = _nsjoin(out, g, self.group_by, "left")
-            return out
-        df = _window_df(self.spark, src_store, self.source_path,
-                        last, head)
-        if self.source_mode == "pk":
-            # initial full load (last == 0): all rows carry sign +1;
-            # exact-distinct companions load their full per-value
-            # occurrence counts in the same pass
-            joined = _joined(self.spark,
-                             df.selectExpr("*", "1 AS __sign"),
-                             self.dims, self.where)
-            if self.exact_distinct:
-                self._dv_full_load(joined, _split_cdist(self.aggs)[0],
-                                   head, replace=False)
-            return joined.groupBy(*self.group_by).agg(
-                *_pk_load_aggs(self.aggs))
-        return self._delta(df)
-
-    def _extremum_frame(self, jn: DataFrame, jo: DataFrame, mm: dict,
-                        head: int) -> DataFrame:
-        """Per-TOUCHED-GROUP exact extrema for the opted-in MIN/MAX
-        columns (``allow_extremum_rescan``), emitted use_last so the
-        newest generation is authoritative.
-
-        Cheap path (the common refresh): a group's new extremum is
-        fold(current, extremum of the window's ADDED rows) — no extra
-        scan. A retraction can EVICT the extremum only when a
-        retracted value REACHES the group's current one, so the
-        trigger is exact: only groups where that holds are rescanned
-        from the head snapshot, all in ONE scan semi-joined to those
-        groups — and when no group triggers (the usual case) the scan
-        is skipped entirely. Worst case, documented: the rescan reads
-        the source at full width filtered by the triggering groups —
-        partition-prunable only when the group columns align with the
-        source's range partitions; a workload that churns extrema
-        every refresh should prefer an append-only source or
-        rebuild(). All group joins are NULL-SAFE (a NULL group key is
-        a real group)."""
-        gb = list(self.group_by)
-        touched = jn.select(*gb).unionByName(jo.select(*gb)).distinct()
-        # current extrema of LIVE touched groups: a drained group's
-        # stale value must not resurrect through the fold
-        cur = _nsjoin(
-            self.table.to_df().filter(F.col("__live") > 0).select(
-                *gb, *[F.col(n).alias(f"__cur_{n}") for n in mm]),
-            touched, gb, "left_semi")
-        mk = [(n, fn, e, (F.min if fn == "min" else F.max))
-              for n, (fn, e) in mm.items()]
-        j = _nsjoin(touched, cur, gb, "left")
-        j = _nsjoin(j, jn.groupBy(*gb).agg(
-            *[agg(F.expr(e)).alias(f"__new_{n}")
-              for n, fn, e, agg in mk]), gb, "left")
-        j = _nsjoin(j, jo.groupBy(*gb).agg(
-            *[agg(F.expr(e)).alias(f"__old_{n}")
-              for n, fn, e, agg in mk]), gb, "left")
-        evict = None
-        for n, fn, _e, _agg in mk:
-            hit = (F.col(f"__old_{n}") <= F.col(f"__cur_{n}")
-                   if fn == "min"
-                   else F.col(f"__old_{n}") >= F.col(f"__cur_{n}"))
-            evict = hit if evict is None else (evict | hit)
-        j = _pin(self, j)
-        rescan_groups = j.filter(evict).select(*gb)
-        rs = None
-        self._rescanned = False
-        if rescan_groups.take(1):
-            self._rescanned = True
-            head_df = _joined(
-                self.spark,
-                LakeSoulTable.for_path_snapshot(
-                    self.spark, self.source_path,
-                    version=head).to_df(),
-                self.dims, self.where)
-            rs = _nsjoin(head_df, rescan_groups, gb, "left_semi") \
-                .groupBy(*gb).agg(*[
-                    agg(F.expr(e)).alias(f"__rs_{n}")
-                    for n, fn, e, agg in mk])
-            rs = _nsjoin(rescan_groups.withColumn("__rsflag",
-                                                  F.lit(1)),
-                         rs, gb, "left")
-            j = _nsjoin(j, rs, gb, "left")
-        sel = list(gb)
-        for n, fn, _e, _agg in mk:
-            fold = (F.least if fn == "min" else F.greatest)(
-                F.col(f"__cur_{n}"), F.col(f"__new_{n}"))
-            v = (F.when(F.col("__rsflag").isNotNull(),
-                        F.col(f"__rs_{n}")).otherwise(fold)
-                 if rs is not None else fold)
-            sel.append(v.alias(n))
-        return j.select(*sel)
-
-    # ------------------------------------------- exact count_distinct
-
-    def _dv_qid(self) -> str:
-        return f"mvdv:{self.table.info.table_id}"
-
-    def _dv_full_load(self, joined: DataFrame, cd: dict, batch: int,
-                      *, replace: bool) -> None:
-        """Full per-value occurrence counts into every companion —
-        initial load (append commit) and :meth:`rebuild` (replace
-        commit). Idempotent by ``(qid, batch)``: a replay after a
-        crash between the companion commit and the view commit skips
-        the already-landed contribution (the back-scan in
-        :meth:`_exact_distinct_frame` re-aligns the pre-image even
-        when the source head moved in between)."""
-        from lakesoul_spark.meta.store import FileOp
-
-        qid = self._dv_qid()
-        for n, (_fn, e) in cd.items():
-            dvt = LakeSoulTable.for_path(self.spark, self._dv_path(n))
-            if dvt.store.has_batch(qid, batch):
-                continue
-            rows = joined.filter(F.expr(e).isNotNull()).groupBy(
-                *self.group_by, F.expr(e).alias("__v")).agg(
-                F.count(F.lit(1)).cast("bigint").alias("__n"))
-            ops = write_table_data(rows, dvt.info, dedup=False)
-            if replace:
-                dels = [FileOp(op="del", path=f.path,
-                               partition_desc=f.partition_desc,
-                               bucket=f.bucket)
-                        for f in dvt.store.snapshot().files]
-                dvt.store.commit(OP_UPDATE, dels + ops,
-                                 query_id=qid, batch_id=batch)
-            else:
-                dvt.store.commit(OP_MERGE, ops,
-                                 query_id=qid, batch_id=batch)
-
-    def _exact_distinct_frame(self, n: str, expr: str, jn: DataFrame,
-                              jo: DataFrame, last: int, head: int):
-        """Per-touched-group signed TRANSITION sums for one exact
-        count_distinct column, maintained against its per-value
-        companion table (PK = (group_by…, value), one signed
-        occurrence count ``__n`` folded sum_all).
-
-        A value's occurrence count is a sum, so it retracts exactly
-        under the same head(+1) ∪ old(−1) restatement as every other
-        signed partial; the VIEW's distinct count then moves only on
-        0↔>0 crossings of that count — the transition is decided
-        against the companion state aligned with source@``last``
-        (walking back over commits a crashed refresh left ahead of
-        the view marker; their already-applied part is subtracted
-        from this window's upsert, so replay is exact even when the
-        source head moved in between). Per-refresh cost: O(churned
-        (group, value) pairs) — the companion reads are touched-
-        bucket + PK-stats pruned like every restatement scan, and a
-        window that churns no values for this column skips
-        everything. Returns ``None`` in that case (the caller's
-        left-join then writes NULL, which the additive fold
-        ignores)."""
-        gb = list(self.group_by)
-        qid = self._dv_qid()
-        vd = (jn.select(*gb, F.expr(expr).alias("__v"), "__sign")
-              .unionByName(
-                  jo.select(*gb, F.expr(expr).alias("__v"), "__sign"))
-              .filter(F.col("__v").isNotNull())
-              .groupBy(*gb, "__v")
-              .agg(F.sum("__sign").cast("bigint").alias("__d"))
-              .filter(F.col("__d") != 0))
-        vd = _pin(self, vd)
-        dvp = self._dv_path(n)
-        dvt = LakeSoulTable.for_path(self.spark, dvp)
-        dvs = dvt.store
-        pkc = gb + ["__v"]
-        # ONE materializing job: the fused probe fills the pin,
-        # doubles as the emptiness probe (empty set ⇔ no value churn)
-        # and carries the key bounds for both companion scans
-        bset, kb, _nvd = _probe_window(vd, pkc, dvt.info)
-        if not bset:
-            return None
-        dv_head = dvs.head_version()
-        pre = dv_head
-        seq = dv_head
-        while seq > 0:
-            c = dvs.read_commit(seq)
-            if c.commit_op == OP_COMPACTION:
-                # state-neutral re-statement; keep walking
-                seq -= 1
-                continue
-            if c.query_id == qid and c.batch_id > last:
-                # ahead of the view marker: a crashed refresh's
-                # contribution — the pre-image must predate it
-                pre = seq - 1
-                seq -= 1
-                continue
-            break
-        old = _scoped_snapshot(self.spark, dvp, pre, vd, pkc,
-                               bset, bounds=kb) \
-            .select(*pkc, F.col("__n").alias("__old"))
-        j = _nsjoin(vd, old, pkc, "left")
-        old0 = F.coalesce(F.col("__old"), F.lit(0))
-        if dv_head > pre:
-            cur = _scoped_snapshot(self.spark, dvp, dv_head, vd, pkc,
-                                   bset, bounds=kb) \
-                .select(*pkc, F.col("__n").alias("__cur"))
-            j = _nsjoin(j, cur, pkc, "left")
-            applied = F.coalesce(F.col("__cur"), F.lit(0)) - old0
-        else:
-            applied = F.lit(0)
-        j = _pin(self, j)
-        # companion upsert FIRST, idempotent by (qid, head); the
-        # transition frame below reads only version-PINNED snapshots
-        # and pinned frames, so its lazy re-execution during the view
-        # write is immune to this commit landing
-        if not dvs.has_batch(qid, head):
-            need = (j.withColumn("__need", F.col("__d") - applied)
-                    .filter(F.col("__need") != 0)
-                    .select(*pkc, F.col("__need").alias("__n")))
-            ops = write_table_data(need, dvt.info, dedup=False)
-            if ops:
-                # an all-netted window commits nothing; the companion
-                # marker simply doesn't advance (the back-scan treats
-                # a gap as zero contribution, exactly what it was)
-                dvs.commit(OP_MERGE, ops, query_id=qid, batch_id=head)
-        new_n = old0 + F.col("__d")
-        trans = (F.when((new_n > 0) & (old0 <= 0), 1)
-                 .when((new_n <= 0) & (old0 > 0), -1)
-                 .otherwise(0))
-        return j.groupBy(*gb).agg(F.sum(trans).cast("bigint").alias(n))
 
     def _check_dims_pinned(self) -> None:
         for d in self.dims:
@@ -1515,35 +1112,73 @@ class AggMV:
                     "would mix dim versions — call rebuild()"
                 )
 
-    def last_applied_version(self) -> int:
-        """Source version the MV reflects — read from refresh commits'
-        ``extra`` metadata (atomic with the data they applied)."""
-        for c in reversed(self.table.store.commits()):
-            if _EXTRA_END in c.extra:
-                return int(c.extra[_EXTRA_END])
-        return 0
+    def _save_dims(self, dims: list) -> None:
+        info = self.table.info
+        spec = json.loads(info.properties[SPEC_PROP])
+        spec["dims"] = dims
+        info.properties[SPEC_PROP] = json.dumps(spec)
+        self.table.store.update_table_info(info)
 
     def refresh(self) -> dict:
-        """Apply source commits (last_applied, head] as ONE partial
-        generation. Cost is O(new data): the incremental scan reads
-        only files added by the window's append commits, and the write
-        is the standard single-shuffle bucketed delta.
+        """Apply the sources' commits since the applied marker as ONE
+        generation. Cost is O(new data): each kind reads only the
+        commit windows and the keys they touched, and the write is the
+        standard single-shuffle bucketed delta.
 
-        Concurrency-safe: the (query_id, batch_id) dedupe + extra
-        marker land in the SAME commit as the data, and the commit
-        layer detects a racing refresh that landed mid-computation
-        (its window overlaps ours) — duplicate windows resolve
-        idempotently, overlapping ones retry from the new state."""
-        return _refresh_loop(self, OP_MERGE)
+        Concurrency-safe: the MV head is captured BEFORE reading the
+        applied marker, so any refresh landing after that point
+        interleaves with our commit; the commit layer then either
+        returns the duplicate (same window — idempotent success) or
+        raises CommitConflict (overlapping window, computed from stale
+        applied state) and we recompute. A compute-phase commit that
+        loses a race (an exact-distinct companion upsert, or the
+        vanished-key view delete, against a concurrent refresher)
+        recomputes the same way. Files written by an aborted attempt
+        are never committed; vacuum reclaims them."""
+        stores = [MetaStore(p) for p in self.sources]
+        for _ in range(_MAX_ATTEMPTS):
+            mv_base = self.table.store.head_version()
+            heads = tuple(s.head_version() for s in stores)
+            last = self.last_applied()
+            if all(h <= a for h, a in zip(heads, last)):
+                return self._report(last, last, False)
+            self._check_dims_pinned()
+            try:
+                out, vanished = self._delta_window(stores, last, heads)
+                info = self.table.info
+                ops = write_table_data(out, info, dedup=False)
+                # keys whose restatement produced no output row (source
+                # delete, WHERE flip, inner-dim drop) are DELETED from
+                # the view before the marker commit: a crash in between
+                # leaves the marker unadvanced, so the replay recomputes
+                # the same vanished set and the delete degenerates to a
+                # no-op
+                for gone, view_rows in vanished:
+                    # pinned: take(1), the partition/bucket probes and
+                    # the rewrite anti-join inside delete_matching
+                    # otherwise each replay the whole anti-join lineage
+                    gone = _pin(self, gone)
+                    if gone.take(1):
+                        self.table.delete_matching(view_rows(gone))
+            except CommitConflict:
+                continue  # a compute-phase commit lost a race
+            finally:
+                _release_pins(self)
+            try:
+                self._commit(self._refresh_op, ops, heads, info, mv_base)
+            except CommitConflict:
+                continue  # a racing refresh landed: recompute the window
+            return self._report(last, heads, True)
+        raise CommitConflict(
+            f"refresh of {self.table.path} lost {_MAX_ATTEMPTS} races in a row"
+        )
 
     def rebuild(self) -> dict:
-        """Recovery path after the source stopped being append-only or
-        a pinned dimension changed: re-pin every dim to its CURRENT
-        head, recompute from the current source snapshot, and replace
-        every MV generation in one Update commit stamped with the
-        source head."""
-        from lakesoul_spark.meta.store import FileOp
-
+        """Recovery path after a source stopped being maintainable or a
+        pinned dimension changed: re-pin every dim to its CURRENT head,
+        recompute from the sources' current snapshots, and replace every
+        view generation in one Update commit stamped with the source
+        heads."""
         # order of operations is load-bearing: recompute + commit the
         # DATA first (against the new pins, held in memory only), then
         # persist the pin spec. A failed data commit restores the old
@@ -1554,51 +1189,25 @@ class AggMV:
         # the inverse state on a failed recompute (new pins over OLD
         # generations), which a later refresh would durably extend.
         old_dims = self.dims
-        if self.dims:
-            self.dims = [
-                dict(d, version=MetaStore(d["path"]).head_version())
-                for d in self.dims
-            ]
+        self.dims = [dict(d, version=MetaStore(d["path"]).head_version())
+                     for d in self.dims]
         try:
-            src = LakeSoulTable.for_path(self.spark, self.source_path)
-            head = src.store.head_version()
-            if self.source_mode == "pk" and self.exact_distinct:
-                # companion replace FIRST (idempotent by (qid, head)):
-                # a failed view commit leaves the companion ahead of
-                # the view marker, which the next refresh's back-scan
-                # + applied-correction re-aligns exactly
-                joined = _joined(
-                    self.spark,
-                    src.to_df().selectExpr("*", "1 AS __sign"),
-                    self.dims, self.where)
-                self._dv_full_load(joined, _split_cdist(self.aggs)[0],
-                                   head, replace=True)
-                delta = joined.groupBy(*self.group_by).agg(
-                    *_pk_load_aggs(self.aggs))
-            else:
-                delta = self._delta(src.to_df())
+            heads = tuple(MetaStore(p).head_version() for p in self.sources)
+            out = self._full(heads)
             info = self.table.info
-            adds = write_table_data(delta, info, dedup=False)
+            adds = write_table_data(out, info, dedup=False)
             dels = [
                 FileOp(op="del", path=f.path,
                        partition_desc=f.partition_desc, bucket=f.bucket)
                 for f in self.table.store.snapshot().files
             ]
-            self.table.store.commit(
-                OP_UPDATE, dels + adds,
-                query_id=f"mv:{info.table_id}", batch_id=head,
-                extra={_EXTRA_END: head},
-            )
+            self._commit(OP_UPDATE, dels + adds, heads, info)
         except BaseException:
             self.dims = old_dims
             raise
         if self.dims:
-            info = self.table.info
-            spec = json.loads(info.properties[SPEC_PROP])
-            spec["dims"] = self.dims
-            info.properties[SPEC_PROP] = json.dumps(spec)
-            self.table.store.update_table_info(info)
-        return {"end_version": head, "applied": True}
+            self._save_dims(self.dims)
+        return self._report(None, heads, True)
 
     def repin_dims(self, *, verify: bool = True) -> dict:
         """Move every drifted dimension pin to its CURRENT head WITHOUT
@@ -1717,13 +1326,473 @@ class AggMV:
                 if d["path"] in moved:
                     nd["version"] = moved[d["path"]][1]
                 new_dims.append(nd)
-            info = self.table.info
-            spec = json.loads(info.properties[SPEC_PROP])
-            spec["dims"] = new_dims
-            info.properties[SPEC_PROP] = json.dumps(spec)
-            self.table.store.update_table_info(info)
+            self._save_dims(new_dims)
             self.dims = new_dims
         return moved
+
+    def to_df(self) -> DataFrame:
+        return self.table.to_df()
+
+
+class AggMV(_View):
+    """Handle on a materialized aggregate view table."""
+
+    _kind = "agg"
+
+    def _load(self, spec: dict) -> None:
+        self.group_by: list[str] = list(spec["group_by"])
+        # {out_col: [fn, expr]}
+        self.aggs: dict = {k: tuple(v) for k, v in spec["aggs"].items()}
+        # "append" (partials only ever add) | "pk" (r14: signed
+        # restatement deltas net out upsert churn — see create())
+        self.source_mode: str = spec.get("source_mode", "append")
+        # r15: min/max over a pk source via evict-triggered rescans
+        self.extremum_rescan: bool = bool(spec.get("extremum_rescan"))
+        # r15: exact count_distinct over a pk source via per-value
+        # companion tables (one per count_distinct output column)
+        self.exact_distinct: bool = bool(spec.get("exact_distinct"))
+
+    def _dv_path(self, name: str) -> str:
+        """Companion-table path for exact count_distinct column
+        ``name`` — a SIBLING directory of the view (never nested
+        under it, so directory listings of the view see only its own
+        files)."""
+        return self.table.path.rstrip("/") + f"__dv_{name}"
+
+    # ------------------------------------------------------------ factory
+
+    @classmethod
+    def create(
+        cls,
+        spark: SparkSession,
+        source_path: str,
+        mv_path: str,
+        *,
+        group_by: list[str],
+        aggs: dict,
+        hash_bucket_num: int = 4,
+        where: str | None = None,
+        dims: list[dict] | None = None,
+        allow_extremum_rescan: bool = False,
+        exact_distinct: bool = False,
+    ) -> "AggMV":
+        """Define the view and load nothing: the first :meth:`refresh`
+        covers the source's full history through one incremental read
+        (version 1..head), so initial load and steady-state share one
+        code path. ``aggs`` maps output column → ``(fn, expr_sql)``
+        with fn in sum/count/min/max (count expr ``None``/``"*"`` means
+        count rows). ``where`` is an optional row-filter SQL expression
+        — stateless per row, so it applies identically to every
+        incremental batch.
+
+        ``dims`` makes it a STAR-SCHEMA rollup: each entry is
+        ``{"path": <lakesoul table>, "on": [join cols],
+        "columns": [projection] (optional), "how": "inner"|"left"}``.
+        A dimension join distributes over fact batches ONLY while the
+        dimension is frozen, so each dim is pinned to its snapshot
+        version at create/rebuild time: refreshes read the PINNED dim
+        snapshot (concurrent dim writes can't skew a batch) and REFUSE
+        to run once the dim's head moves past the pin — ``rebuild()``
+        re-pins. Dims are broadcast (the star-schema contract: small
+        dimension, huge fact); group-by columns may come from dims.
+
+        A PRIMARY-KEY source (r14) is admitted for sum/count/avg: the
+        view maintains the rollup through upsert churn by folding
+        SIGNED restatement deltas — each refresh reads the touched
+        keys' OLD rows (pinned last-applied snapshot) with sign −1
+        and their NEW rows (head snapshot) with sign +1, both scans
+        pruned to the touched murmur3 buckets and the key range, so a
+        maintained JOIN view (whose output IS a PK table) composes
+        into a maintained rollup with no corpus re-aggregation
+        (reference anchor: ``SumAll``/``SumLast`` merge operators,
+        ``merge_operator.rs:22-50``, and the multi-stream wide-table
+        rollup tutorial). min/max/count_distinct refuse by default —
+        a churned extremum needs a rescan and a sketch cannot unhash
+        a value. ``allow_extremum_rescan=True`` (r15) opts min/max
+        in: refreshes fold new candidates for free and trigger ONE
+        group-scoped head rescan only when a retracted row could own
+        a touched group's current extremum (see
+        :meth:`_extremum_frame` for the exact trigger and the
+        documented worst case). ``exact_distinct=True`` (r15) opts
+        count_distinct in EXACTLY: each such column gets a companion
+        PK table keyed by (group_by…, value) whose signed occurrence
+        counts retract like any sum, and the view stores the per-group
+        sum of 0↔>0 TRANSITIONS — see :meth:`_exact_distinct_frame`
+        for the per-refresh cost (O(churned (group, value) pairs))."""
+        src = LakeSoulTable.for_path(spark, source_path)
+        mode = _validate_agg_source(src.info, aggs, group_by,
+                                    allow_extremum_rescan,
+                                    exact_distinct)
+        if not group_by:
+            raise ValueError("group_by must name at least one column")
+        clash = set(group_by) & {f"{n}__{s}" for n in aggs
+                                 for s in ("s", "c")}
+        if clash:
+            raise ValueError(
+                f"group_by columns {sorted(clash)} collide with the "
+                "hidden partial-pair columns of the agg spec"
+            )
+        pinned = _pin_dims(spark, dims)
+        # derive the MV schema from the partial-agg plan (no job); this
+        # also validates the where/join expressions against the schema
+        probe_src = src.to_df().limit(0)
+        if mode == "pk":
+            probe_src = probe_src.selectExpr("*", "1 AS __sign")
+        probe_j = _joined(spark, probe_src, pinned, where)
+        probe = probe_j.groupBy(*group_by).agg(
+            *(_pk_load_aggs(aggs) if mode == "pk"
+              else _partial_aggs(aggs)))
+        merge_ops = _merge_ops_str(aggs, mode)
+        spec = {
+            "source_path": src.path,
+            "group_by": list(group_by),
+            "aggs": {k: list(v) for k, v in aggs.items()},
+        }
+        cd = _split_cdist(aggs)[0] if exact_distinct else {}
+        if mode != "append":
+            spec["source_mode"] = mode
+            if allow_extremum_rescan and _split_extrema(aggs)[0]:
+                spec["extremum_rescan"] = True
+            if cd:
+                spec["exact_distinct"] = True
+        if where:
+            spec["where"] = where
+        if pinned:
+            spec["dims"] = pinned
+        create_table(
+            spark,
+            mv_path,
+            probe.schema,
+            hash_partitions=list(group_by),
+            hash_bucket_num=hash_bucket_num,
+            properties={
+                SPEC_PROP: json.dumps(spec),
+                "lakesoul.columnMergeOps": merge_ops,
+            },
+        )
+        view = cls(spark, mv_path)
+        for n, (_fn, e) in cd.items():
+            # companion PK table, one per exact count_distinct column:
+            # keyed by (group_by…, value), one signed occurrence count
+            # folded sum_all. The PK gate (check_pk_type inside
+            # create_table) refuses value expressions the murmur3
+            # bucketing can't hash — exactly the types that couldn't
+            # be grouped deterministically anyway. PK stats give the
+            # restatement the same file pruning as every MV scan.
+            dv_schema = probe_j.select(
+                *group_by, F.expr(e).alias("__v"),
+                F.lit(0).cast("bigint").alias("__n")).schema
+            create_table(
+                spark,
+                view._dv_path(n),
+                dv_schema,
+                hash_partitions=list(group_by) + ["__v"],
+                hash_bucket_num=hash_bucket_num,
+                properties={
+                    "lakesoul.columnMergeOps": "__n:sum_all",
+                    "lakesoul.mv.companion": mv_path,
+                    # drained values (occurrence count netted to 0)
+                    # are semantically absent — full-fold compaction
+                    # garbage-collects their rows, bounding companion
+                    # growth under long-lived churn
+                    "lakesoul.compaction.dropWhere": "__n <= 0",
+                },
+            )
+        return view
+
+    # ------------------------------------------------------------ refresh
+
+    def _partials(self, df: DataFrame, head: int, *,
+                  replace: bool = False) -> DataFrame:
+        """One partial generation over plain source rows: an
+        append-mode window, or a pk-mode FULL load (initial refresh,
+        rebuild) where every row carries sign +1 and exact-distinct
+        companions load their full per-value occurrence counts in the
+        same pass (``replace`` for a rebuild)."""
+        if self.source_mode != "pk":
+            df = _joined(self.spark, df, self.dims, self.where)
+            return df.groupBy(*self.group_by).agg(
+                *_partial_aggs(self.aggs))
+        joined = _joined(self.spark, df.selectExpr("*", "1 AS __sign"),
+                         self.dims, self.where)
+        if self.exact_distinct:
+            self._dv_full_load(joined, _split_cdist(self.aggs)[0], head,
+                               replace=replace)
+        return joined.groupBy(*self.group_by).agg(
+            *_pk_load_aggs(self.aggs))
+
+    def _full(self, heads: tuple) -> DataFrame:
+        # exact-distinct companions are replaced FIRST (idempotent by
+        # (qid, head)): a failed view commit leaves the companion ahead
+        # of the view marker, which the next refresh's back-scan +
+        # applied-correction re-aligns exactly
+        return self._partials(
+            _snapshot(self.spark, self.source_path, heads[0]), heads[0],
+            replace=True)
+
+    def _delta_window(self, stores: list, last: tuple, head: tuple):
+        """One partial generation for source commits (last, head].
+
+        Append mode: the window's committed rows through the ordinary
+        partial aggregation. PK mode past the initial load: the
+        SIGNED restatement — the touched keys' head-snapshot rows
+        (+1) unioned with their last-applied-snapshot rows (−1), so
+        the netted partials retract exactly what the superseded
+        versions contributed. Both snapshot scans read only the
+        touched buckets' files, further scoped by the key set's
+        stats range (:func:`_scoped_snapshot`) — O(Δ keys) IO at
+        100 TB, never a corpus re-aggregation. Keys new in the window
+        simply have no old rows; a key whose churn flips the WHERE
+        filter (or moves it to another group) nets out per group by
+        construction. DELETE / UPDATE commits (r15) need no new
+        algebra: their keys come from the window's del-files, a
+        deleted key has no head rows so the restatement is pure
+        retraction, and survivors of a rewrite net to a no-op; CDC
+        delete markers behave identically because both snapshot scans
+        already filter them. The key frame is cached for the window —
+        the bucket collect, the two min/max probes and the two
+        semi-joins all reuse one materialization. Nothing vanishes: a
+        drained group nets to ``__live = 0`` instead."""
+        (src_store,), (last,), (head,) = stores, last, head
+        if self.source_mode == "pk" and last > 0:
+            info = LakeSoulTable.for_path(self.spark,
+                                          self.source_path).info
+            pk_cols = list(info.hash_partitions)
+            keys = _pin(self, _pk_window_keys(
+                self.spark, src_store, self.source_path, last, head,
+                pk_cols))
+            bset, kb, nk = _probe_window(keys, pk_cols, info)
+            new = _scoped_snapshot(
+                self.spark, self.source_path, head, keys, pk_cols,
+                bset, bounds=kb).join(_bcast(keys, nk), on=pk_cols,
+                                      how="left_semi")
+            old = _scoped_snapshot(
+                self.spark, self.source_path, last, keys, pk_cols,
+                bset, bounds=kb).join(_bcast(keys, nk), on=pk_cols,
+                                      how="left_semi")
+            jn = _joined(self.spark,
+                         new.selectExpr("*", "1 AS __sign"),
+                         self.dims, self.where)
+            jo = _joined(self.spark,
+                         old.selectExpr("*", "-1 AS __sign"),
+                         self.dims, self.where)
+            mm, rest = _split_extrema(self.aggs)
+            cd, rest = (_split_cdist(rest) if self.exact_distinct
+                        else ({}, rest))
+            out = jn.unionByName(jo).groupBy(*self.group_by).agg(
+                *_signed_partial_aggs(rest))
+            if mm:
+                out = _nsjoin(out,
+                              self._extremum_frame(jn, jo, mm, head),
+                              self.group_by, "left")
+            for n, spec in cd.items():
+                g = self._exact_distinct_frame(n, spec[1], jn, jo,
+                                               last, head)
+                if g is not None:
+                    out = _nsjoin(out, g, self.group_by, "left")
+            return out, []
+        # append windows, and a pk source's initial full load
+        return self._partials(_window_df(
+            self.spark, src_store, self.source_path, last, head), head), []
+
+    def _extremum_frame(self, jn: DataFrame, jo: DataFrame, mm: dict,
+                        head: int) -> DataFrame:
+        """Per-TOUCHED-GROUP exact extrema for the opted-in MIN/MAX
+        columns (``allow_extremum_rescan``), emitted use_last so the
+        newest generation is authoritative.
+
+        Cheap path (the common refresh): a group's new extremum is
+        fold(current, extremum of the window's ADDED rows) — no extra
+        scan. A retraction can EVICT the extremum only when a
+        retracted value REACHES the group's current one, so the
+        trigger is exact: only groups where that holds are rescanned
+        from the head snapshot, all in ONE scan semi-joined to those
+        groups — and when no group triggers (the usual case) the scan
+        is skipped entirely. Worst case, documented: the rescan reads
+        the source at full width filtered by the triggering groups —
+        partition-prunable only when the group columns align with the
+        source's range partitions; a workload that churns extrema
+        every refresh should prefer an append-only source or
+        rebuild(). All group joins are NULL-SAFE (a NULL group key is
+        a real group)."""
+        gb = list(self.group_by)
+        touched = jn.select(*gb).unionByName(jo.select(*gb)).distinct()
+        # current extrema of LIVE touched groups: a drained group's
+        # stale value must not resurrect through the fold
+        cur = _nsjoin(
+            self.table.to_df().filter(F.col("__live") > 0).select(
+                *gb, *[F.col(n).alias(f"__cur_{n}") for n in mm]),
+            touched, gb, "left_semi")
+        mk = [(n, fn, e, (F.min if fn == "min" else F.max))
+              for n, (fn, e) in mm.items()]
+        j = _nsjoin(touched, cur, gb, "left")
+        j = _nsjoin(j, jn.groupBy(*gb).agg(
+            *[agg(F.expr(e)).alias(f"__new_{n}")
+              for n, fn, e, agg in mk]), gb, "left")
+        j = _nsjoin(j, jo.groupBy(*gb).agg(
+            *[agg(F.expr(e)).alias(f"__old_{n}")
+              for n, fn, e, agg in mk]), gb, "left")
+        evict = None
+        for n, fn, _e, _agg in mk:
+            hit = (F.col(f"__old_{n}") <= F.col(f"__cur_{n}")
+                   if fn == "min"
+                   else F.col(f"__old_{n}") >= F.col(f"__cur_{n}"))
+            evict = hit if evict is None else (evict | hit)
+        j = _pin(self, j)
+        rescan_groups = j.filter(evict).select(*gb)
+        rs = None
+        self._rescanned = False
+        if rescan_groups.take(1):
+            self._rescanned = True
+            head_df = _joined(
+                self.spark,
+                LakeSoulTable.for_path_snapshot(
+                    self.spark, self.source_path,
+                    version=head).to_df(),
+                self.dims, self.where)
+            rs = _nsjoin(head_df, rescan_groups, gb, "left_semi") \
+                .groupBy(*gb).agg(*[
+                    agg(F.expr(e)).alias(f"__rs_{n}")
+                    for n, fn, e, agg in mk])
+            rs = _nsjoin(rescan_groups.withColumn("__rsflag",
+                                                  F.lit(1)),
+                         rs, gb, "left")
+            j = _nsjoin(j, rs, gb, "left")
+        sel = list(gb)
+        for n, fn, _e, _agg in mk:
+            fold = (F.least if fn == "min" else F.greatest)(
+                F.col(f"__cur_{n}"), F.col(f"__new_{n}"))
+            v = (F.when(F.col("__rsflag").isNotNull(),
+                        F.col(f"__rs_{n}")).otherwise(fold)
+                 if rs is not None else fold)
+            sel.append(v.alias(n))
+        return j.select(*sel)
+
+    # ------------------------------------------- exact count_distinct
+
+    def _dv_qid(self) -> str:
+        return f"mvdv:{self.table.info.table_id}"
+
+    def _dv_full_load(self, joined: DataFrame, cd: dict, batch: int,
+                      *, replace: bool) -> None:
+        """Full per-value occurrence counts into every companion —
+        initial load (append commit) and :meth:`rebuild` (replace
+        commit). Idempotent by ``(qid, batch)``: a replay after a
+        crash between the companion commit and the view commit skips
+        the already-landed contribution (the back-scan in
+        :meth:`_exact_distinct_frame` re-aligns the pre-image even
+        when the source head moved in between)."""
+        qid = self._dv_qid()
+        for n, (_fn, e) in cd.items():
+            dvt = LakeSoulTable.for_path(self.spark, self._dv_path(n))
+            if dvt.store.has_batch(qid, batch):
+                continue
+            rows = joined.filter(F.expr(e).isNotNull()).groupBy(
+                *self.group_by, F.expr(e).alias("__v")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("__n"))
+            ops = write_table_data(rows, dvt.info, dedup=False)
+            if replace:
+                dels = [FileOp(op="del", path=f.path,
+                               partition_desc=f.partition_desc,
+                               bucket=f.bucket)
+                        for f in dvt.store.snapshot().files]
+                dvt.store.commit(OP_UPDATE, dels + ops,
+                                 query_id=qid, batch_id=batch)
+            else:
+                dvt.store.commit(OP_MERGE, ops,
+                                 query_id=qid, batch_id=batch)
+
+    def _exact_distinct_frame(self, n: str, expr: str, jn: DataFrame,
+                              jo: DataFrame, last: int, head: int):
+        """Per-touched-group signed TRANSITION sums for one exact
+        count_distinct column, maintained against its per-value
+        companion table (PK = (group_by…, value), one signed
+        occurrence count ``__n`` folded sum_all).
+
+        A value's occurrence count is a sum, so it retracts exactly
+        under the same head(+1) ∪ old(−1) restatement as every other
+        signed partial; the VIEW's distinct count then moves only on
+        0↔>0 crossings of that count — the transition is decided
+        against the companion state aligned with source@``last``
+        (walking back over commits a crashed refresh left ahead of
+        the view marker; their already-applied part is subtracted
+        from this window's upsert, so replay is exact even when the
+        source head moved in between). Per-refresh cost: O(churned
+        (group, value) pairs) — the companion reads are touched-
+        bucket + PK-stats pruned like every restatement scan, and a
+        window that churns no values for this column skips
+        everything. Returns ``None`` in that case (the caller's
+        left-join then writes NULL, which the additive fold
+        ignores)."""
+        gb = list(self.group_by)
+        qid = self._dv_qid()
+        vd = (jn.select(*gb, F.expr(expr).alias("__v"), "__sign")
+              .unionByName(
+                  jo.select(*gb, F.expr(expr).alias("__v"), "__sign"))
+              .filter(F.col("__v").isNotNull())
+              .groupBy(*gb, "__v")
+              .agg(F.sum("__sign").cast("bigint").alias("__d"))
+              .filter(F.col("__d") != 0))
+        vd = _pin(self, vd)
+        dvp = self._dv_path(n)
+        dvt = LakeSoulTable.for_path(self.spark, dvp)
+        dvs = dvt.store
+        pkc = gb + ["__v"]
+        # ONE materializing job: the fused probe fills the pin,
+        # doubles as the emptiness probe (empty set ⇔ no value churn)
+        # and carries the key bounds for both companion scans
+        bset, kb, _nvd = _probe_window(vd, pkc, dvt.info)
+        if not bset:
+            return None
+        dv_head = dvs.head_version()
+        pre = dv_head
+        seq = dv_head
+        while seq > 0:
+            c = dvs.read_commit(seq)
+            if c.commit_op == OP_COMPACTION:
+                # state-neutral re-statement; keep walking
+                seq -= 1
+                continue
+            if c.query_id == qid and c.batch_id > last:
+                # ahead of the view marker: a crashed refresh's
+                # contribution — the pre-image must predate it
+                pre = seq - 1
+                seq -= 1
+                continue
+            break
+        old = _scoped_snapshot(self.spark, dvp, pre, vd, pkc,
+                               bset, bounds=kb) \
+            .select(*pkc, F.col("__n").alias("__old"))
+        j = _nsjoin(vd, old, pkc, "left")
+        old0 = F.coalesce(F.col("__old"), F.lit(0))
+        if dv_head > pre:
+            cur = _scoped_snapshot(self.spark, dvp, dv_head, vd, pkc,
+                                   bset, bounds=kb) \
+                .select(*pkc, F.col("__n").alias("__cur"))
+            j = _nsjoin(j, cur, pkc, "left")
+            applied = F.coalesce(F.col("__cur"), F.lit(0)) - old0
+        else:
+            applied = F.lit(0)
+        j = _pin(self, j)
+        # companion upsert FIRST, idempotent by (qid, head); the
+        # transition frame below reads only version-PINNED snapshots
+        # and pinned frames, so its lazy re-execution during the view
+        # write is immune to this commit landing
+        if not dvs.has_batch(qid, head):
+            need = (j.withColumn("__need", F.col("__d") - applied)
+                    .filter(F.col("__need") != 0)
+                    .select(*pkc, F.col("__need").alias("__n")))
+            ops = write_table_data(need, dvt.info, dedup=False)
+            if ops:
+                # an all-netted window commits nothing; the companion
+                # marker simply doesn't advance (the back-scan treats
+                # a gap as zero contribution, exactly what it was)
+                dvs.commit(OP_MERGE, ops, query_id=qid, batch_id=head)
+        new_n = old0 + F.col("__d")
+        trans = (F.when((new_n > 0) & (old0 <= 0), 1)
+                 .when((new_n <= 0) & (old0 > 0), -1)
+                 .otherwise(0))
+        return j.groupBy(*gb).agg(F.sum(trans).cast("bigint").alias(n))
 
     # ------------------------------------------------------------- read
 
@@ -1793,7 +1862,7 @@ class AggMV:
         return df.select(*sel)
 
 
-class TransformMV:
+class TransformMV(_View):
     """Incrementally-maintained TRANSFORMED copy — the map-only
     counterpart of :class:`AggMV` (the "normalize/enrich a corpus"
     pipe every ETL stack rebuilds by hand): select expressions +
@@ -1814,22 +1883,14 @@ class TransformMV:
     bucket + stats-range scan pruning as the rollup restatement.
     Same exactly-once commit marker as AggMV either way."""
 
-    def __init__(self, spark: SparkSession, mv_path: str):
-        self.spark = spark
-        self.table = LakeSoulTable.for_path(spark, mv_path)
-        spec_json = self.table.info.properties.get(SPEC_PROP)
-        if not spec_json:
-            raise ValueError(f"{mv_path} is not an mv.py view (no {SPEC_PROP})")
-        spec = json.loads(spec_json)
-        if spec.get("kind") != "transform":
-            raise ValueError(
-                f"{mv_path} is an aggregate view — open it with AggMV"
-            )
-        self.source_path: str = spec["source_path"]
+    _kind = "transform"
+
+    def _load(self, spec: dict) -> None:
         self.select: list[str] = list(spec["select"])
-        self.where: str | None = spec.get("where")
-        self.dims: list[dict] = list(spec.get("dims", []))
         self.source_mode: str = spec.get("source_mode", "append")
+        # PK outputs fold restatements; append outputs only ever grow
+        self._refresh_op = (OP_MERGE if self.source_mode == "pk"
+                            else OP_APPEND)
 
     @classmethod
     def create(
@@ -1862,22 +1923,7 @@ class TransformMV:
                 "non-PK partition value changed would leave its stale "
                 "output row in the old partition"
             )
-        pinned = []
-        for d in dims or []:
-            how = d.get("how", "inner")
-            if how not in ("inner", "left"):
-                raise ValueError(f"dim join how must be inner/left, got {how!r}")
-            if not d.get("on"):
-                raise ValueError("dim entry needs join columns in 'on'")
-            dt = LakeSoulTable.for_path(spark, d["path"])
-            on = d["on"]
-            pinned.append({
-                "path": dt.path,
-                "on": dict(on) if isinstance(on, dict) else list(on),
-                "columns": list(d["columns"]) if d.get("columns") else None,
-                "how": how,
-                "version": dt.store.head_version(),
-            })
+        pinned = _pin_dims(spark, dims)
         probe = _joined(spark, src.to_df().limit(0), pinned, where)
         probe = probe.selectExpr(*select)
         spec = {
@@ -1907,12 +1953,11 @@ class TransformMV:
         df = _joined(self.spark, df, self.dims, self.where)
         return df.selectExpr(*self.select)
 
-    _delta = _transform  # the _refresh_loop hook
-    _check_dims_pinned = AggMV._check_dims_pinned
-    last_applied_version = AggMV.last_applied_version
-    repin_dims = AggMV.repin_dims
+    def _full(self, heads: tuple) -> DataFrame:
+        return self._transform(
+            _snapshot(self.spark, self.source_path, heads[0]))
 
-    def _delta_window(self, src_store, last: int, head: int):
+    def _delta_window(self, stores: list, last: tuple, head: tuple):
         """Append mode: the window's rows through the transform (the
         pre-r14 refresh shape). PK mode past the initial load: the
         touched keys' head rows through the transform — the PK fold
@@ -1921,6 +1966,7 @@ class TransformMV:
         vanished set to delete (retraction). Scans are pruned to the
         touched buckets + the key set's stats range, exactly the
         rollup restatement's shape."""
+        (src_store,), (last,), (head,) = stores, last, head
         if self.source_mode == "pk" and last > 0:
             info = LakeSoulTable.for_path(self.spark,
                                           self.source_path).info
@@ -1937,76 +1983,23 @@ class TransformMV:
                 bset, bounds=kb).join(_bcast(keys, nk), on=pk_cols,
                                       how="left_semi"))
             out = self._transform(restated)
+            vanished = []
             if (self.where or self.dims
                     or _window_may_vanish(src_store, info, last, head)):
                 # a key can lose its output row through a source
                 # delete / CDC marker (window probe) OR a WHERE flip /
                 # inner-dim drop (any window) — otherwise skip the
-                # vanished anti-join entirely
-                self._vanished = keys.join(
+                # vanished anti-join entirely; the output carries the
+                # source PK, so the gone keys ARE the view rows
+                vanished.append((keys.join(
                     _bcast(out.select(*pk_cols).distinct(), nk),
-                    on=pk_cols, how="left_anti")
-            return out
-        return self._delta(_window_df(
-            self.spark, src_store, self.source_path, last, head))
-
-    def refresh(self) -> dict:
-        """Apply the transform of source commits (last_applied, head] —
-        an append generation for append-only sources, a PK-upsert
-        restatement (plus vanished-key deletes) for PK/CDC sources;
-        same concurrency contract as :meth:`AggMV.refresh`."""
-        return _refresh_loop(
-            self, OP_MERGE if self.source_mode == "pk" else OP_APPEND)
-
-    def rebuild(self) -> dict:
-        """Re-pin dims and recompute from the current source snapshot.
-        Same operation order as :meth:`AggMV.rebuild` (data commit
-        first, pin-spec persist after, in-memory pins restored on a
-        failed commit)."""
-        from lakesoul_spark.meta.store import FileOp
-
-        old_dims = self.dims
-        if self.dims:
-            self.dims = [
-                dict(d, version=MetaStore(d["path"]).head_version())
-                for d in self.dims
-            ]
-        try:
-            src = LakeSoulTable.for_path(self.spark, self.source_path)
-            head = src.store.head_version()
-            out = self._transform(src.to_df())
-            info = self.table.info
-            adds = write_table_data(out, info, dedup=False)
-            dels = [
-                FileOp(op="del", path=f.path,
-                       partition_desc=f.partition_desc, bucket=f.bucket)
-                for f in self.table.store.snapshot().files
-            ]
-            self.table.store.commit(
-                OP_UPDATE, dels + adds,
-                query_id=f"mv:{info.table_id}", batch_id=head,
-                extra={_EXTRA_END: head},
-            )
-        except BaseException:
-            self.dims = old_dims
-            raise
-        if self.dims:
-            info = self.table.info
-            spec = json.loads(info.properties[SPEC_PROP])
-            spec["dims"] = self.dims
-            info.properties[SPEC_PROP] = json.dumps(spec)
-            self.table.store.update_table_info(info)
-        return {"end_version": head, "applied": True}
-
-    def to_df(self) -> DataFrame:
-        return self.table.to_df()
+                    on=pk_cols, how="left_anti"), lambda gone: gone))
+            return out, vanished
+        return self._transform(_window_df(
+            self.spark, src_store, self.source_path, last, head)), []
 
 
-_EXTRA_LEFT_END = "mv.left_end_version"
-_EXTRA_RIGHT_END = "mv.right_end_version"
-
-
-class JoinMV:
+class JoinMV(_View):
     """Incrementally-maintained equi-JOIN view over TWO churning
     append-only sources — ``SELECT … FROM A JOIN B ON k`` kept fresh
     without ever re-joining the corpus (reference anchor: the
@@ -2069,29 +2062,23 @@ class JoinMV:
     is paid. ``where`` is refused when a side churns by PK — a
     restatement could flip the filter and strand pairs."""
 
-    def __init__(self, spark: SparkSession, mv_path: str):
-        self.spark = spark
-        self.table = LakeSoulTable.for_path(spark, mv_path)
-        spec_json = self.table.info.properties.get(SPEC_PROP)
-        if not spec_json:
-            raise ValueError(f"{mv_path} is not an mv.py view (no {SPEC_PROP})")
-        spec = json.loads(spec_json)
-        if spec.get("kind") != "join":
-            raise ValueError(
-                f"{mv_path} is a {spec.get('kind', 'agg')!r} view — open "
-                "it with open_view()"
-            )
-        self.left_path: str = spec["left_path"]
-        self.right_path: str = spec["right_path"]
+    _kind = "join"
+    _marker_keys = (_EXTRA_LEFT_END, _EXTRA_RIGHT_END)
+
+    def _load(self, spec: dict) -> None:
+        self.left_path, self.right_path = self.sources
         self.on: list[str] = list(spec["on"])
         self.select: list[str] = list(spec["select"])
-        self.where: str | None = spec.get("where")
         self.how: str = spec.get("how", "inner")
 
-    @property
-    def source_path(self) -> str:
-        """Display form for SHOW MATERIALIZED VIEWS."""
-        return f"{self.left_path},{self.right_path}"
+    def _report(self, last: tuple | None, end: tuple,
+                applied: bool) -> dict:
+        # per-side ranges: (last + 1, head) for an applied window,
+        # (1, head) for a rebuild, (last, last) for a no-op
+        lo = last or (0, 0)
+        return {"applied": applied, "end_version": end[0],
+                "left": (lo[0] + applied, end[0]),
+                "right": (lo[1] + applied, end[1])}
 
     @classmethod
     def create(
@@ -2216,30 +2203,7 @@ class JoinMV:
             j = j.filter(where)
         return j.selectExpr(*select)
 
-    # ------------------------------------------------------------ state
-
-    def last_applied(self) -> tuple[int, int]:
-        """(left, right) source versions the view reflects — read from
-        refresh commits' ``extra`` (atomic with the data they applied)."""
-        for c in reversed(self.table.store.commits()):
-            if _EXTRA_LEFT_END in c.extra:
-                return (int(c.extra[_EXTRA_LEFT_END]),
-                        int(c.extra[_EXTRA_RIGHT_END]))
-        return (0, 0)
-
-    def last_applied_version(self) -> int:
-        """SHOW MATERIALIZED VIEWS display hook: the LEFT source's
-        applied version (the full pair is :meth:`last_applied`)."""
-        return self.last_applied()[0]
-
     # ------------------------------------------------------------ refresh
-
-    def _side_df(self, path: str, version: int) -> DataFrame:
-        if version == 0:
-            return LakeSoulTable.for_path(
-                self.spark, path).to_df().limit(0)
-        return LakeSoulTable.for_path_snapshot(
-            self.spark, path, version=version).to_df()
 
     def _side_scoped(self, path: str, version: int,
                      delta: DataFrame,
@@ -2266,8 +2230,8 @@ class JoinMV:
             info, self.on, side, how=self.how,
             view_pk=list(self.table.info.hash_partitions))
 
-    def _delta(self, store, path: str, last: int, head: int,
-               mode: str) -> tuple:
+    def _side_delta(self, store, path: str, last: int, head: int,
+                    mode: str) -> tuple:
         """``(delta_df, (touched_keys, pk_cols) or None)`` for one
         side's commits (last, head]. Append mode: the committed rows
         themselves (:func:`_window_df`). PK mode: the RESTATEMENT of
@@ -2331,7 +2295,7 @@ class JoinMV:
                 return
         side = (self._side_scoped(self.right_path, version, keys)
                 if keys is not None
-                else self._side_df(self.right_path, version))
+                else _snapshot(self.spark, self.right_path, version))
         for c in self.on:
             side = side.filter(F.col(c).isNotNull())
         if keys is not None:
@@ -2384,12 +2348,11 @@ class JoinMV:
                 old_rows, self.on, self.select, self.where, "inner")
         return pairs.select(*self.table.info.hash_partitions)
 
-    def refresh(self, *, max_attempts: int = 5) -> dict:
-        """Apply both sources' new commits as ONE delta-join
-        generation; same concurrency contract as :meth:`AggMV.refresh`
-        (the MV head is captured first; a racing refresh either
-        resolves idempotently on the same window or conflicts and we
-        recompute from the new applied state).
+    def _delta_window(self, stores: list, last: tuple, head: tuple):
+        """Both sources' new commits as ONE delta-join generation (the
+        algebra in the class docstring). Sources are re-validated per
+        window: a source that later gained CDC semantics must fail
+        loudly, not corrupt the delta algebra.
 
         Vanished keys (r15 — a PK side's DELETE/UPDATE commit or a
         CDC side's delete markers): a key with no surviving head rows
@@ -2398,155 +2361,112 @@ class JoinMV:
         vanished LEFT identity drops its view row, while a vanished
         RIGHT key instead NULL-EXTENDS its left rows (the left-join
         re-emission term below replaces the stale matched
-        generation). The deletes land before the marker commit: a
-        crash in between replays the window from the same pinned
-        versions and the re-run delete finds nothing to match. A
-        reader between the two commits sees deletions before
+        generation). The refresh lands the deletes before the marker
+        commit: a crash in between replays the window from the same
+        pinned versions and the re-run delete finds nothing to match.
+        A reader between the two commits sees deletions before
         restatements (the same transient a mid-refresh reader of any
         two-term window sees); downstream MVs converge because the
         marker commit's files restate every remaining touched key."""
-        from lakesoul_spark.meta.store import CommitConflict
-
-        lstore = MetaStore(self.left_path)
-        rstore = MetaStore(self.right_path)
+        (lstore, rstore), (last_l, last_r), (head_l, head_r) = \
+            stores, last, head
         lmode = self._source_mode(self.left_path, "left")
         rmode = self._source_mode(self.right_path, "right")
-        for _ in range(max_attempts):
-            mv_base = self.table.store.head_version()
-            head_l, head_r = lstore.head_version(), rstore.head_version()
-            last_l, last_r = self.last_applied()
-            if head_l <= last_l and head_r <= last_r:
-                return {"applied": False, "end_version": last_l,
-                        "left": (last_l, last_l), "right": (last_r, last_r)}
-            if self.how == "left" and rmode != "pk" and last_l == 0:
-                # initial load joins the WHOLE right snapshot — verify
-                # uniqueness over all of it once, before any commit
-                self._assert_unique_right(head_r, None)
-            parts = []
-            vanished = []  # (gone keys, key cols, side) to delete
-            keys_a = None
-            try:
-                if head_l > last_l:
-                    d_a, keys_a = self._delta(lstore, self.left_path,
-                                              last_l, head_l, lmode)
-                    parts.append(self._join_select(
-                        d_a, self._side_scoped(self.right_path, head_r,
-                                               d_a),
-                        self.on, self.select, self.where, self.how,
-                    ))
-                    if keys_a is not None and keys_a[2]:
-                        # touched keys with NO surviving head rows:
-                        # their view rows must be deleted (probed only
-                        # when the window CAN vanish keys — see
-                        # _window_may_vanish)
-                        ka, ka_cols = keys_a[0], keys_a[1]
-                        gone_a = ka.join(
-                            _bcast(d_a.select(*ka_cols).distinct(),
-                                   keys_a[3]),
-                            on=ka_cols, how="left_anti")
-                        vanished.append((gone_a, ka_cols, "left",
-                                         keys_a[3]))
-                if head_r > last_r and last_l > 0:
-                    # A@lastL ⋈ ΔB — with lastL == 0 the old left is
-                    # empty and the term vanishes (the initial load is
-                    # term one). INNER everywhere except the left-view
-                    # pk-right case below: the inner term only re-emits
-                    # left rows that gained/changed a match, and the
-                    # PK-upsert fold replaces their previous
-                    # (NULL-extended or stale) generation.
-                    d_b, keys_b = self._delta(rstore, self.right_path,
-                                              last_r, head_r, rmode)
-                    if self.how == "left" and rmode != "pk" \
-                            and last_l > 0:
-                        self._assert_unique_right(
-                            head_r, d_b,
-                            keys_b[3] if keys_b is not None else None)
-                    # scope the old left by the TOUCHED key set when
-                    # the right churns by PK (a deleted key has no
-                    # restated rows, but its left rows still need
-                    # re-emission), by the delta's key bounds otherwise
-                    old_left = self._side_scoped(
-                        self.left_path, last_l,
-                        keys_b[0] if keys_b is not None else d_b)
-                    if keys_a is not None:
-                        # the left side churned by PK: its OLD snapshot
-                        # still holds stale versions of the touched
-                        # rows — term one re-emits those pairs from the
-                        # restatement, so exclude them here BY THE LEFT
-                        # PK (for append sources the old snapshot
-                        # already equals "head minus delta" and no
-                        # anti-join is paid)
-                        ka, ka_cols = keys_a[0], keys_a[1]
-                        old_left = old_left.join(
-                            _bcast(ka, keys_a[3]), on=ka_cols,
-                            how="left_anti")
-                    if keys_b is not None and self.how == "left":
-                        # left view over a pk/CDC-churning right: LEFT-
-                        # join the old left's TOUCHED-key rows to the
-                        # restatement — an upserted key re-pairs, a
-                        # deleted key NULL-extends, and either way the
-                        # left-identity fold replaces the stale row
-                        kb = keys_b[0]
-                        affected = old_left.join(
-                            _bcast(kb.select(*self.on).distinct(),
-                                   keys_b[3]),
-                            on=self.on, how="left_semi")
-                        parts.append(self._join_select(
-                            affected, d_b, self.on, self.select,
-                            self.where, "left"))
-                    else:
-                        parts.append(self._join_select(
-                            old_left, d_b, self.on, self.select,
-                            self.where, "inner"))
-                        if keys_b is not None and keys_b[2]:
-                            kb, kb_cols = keys_b[0], keys_b[1]
-                            gone_b = kb.join(
-                                _bcast(d_b.select(*kb_cols).distinct(),
-                                       keys_b[3]),
-                                on=kb_cols, how="left_anti")
-                            vanished.append((gone_b, kb_cols, "right",
-                                             keys_b[3]))
-                if not parts:
-                    # only the right moved while the applied left is
-                    # still empty: no pairs can exist, but the marker
-                    # must still advance or every refresh re-reads a
-                    # growing ΔB window
-                    parts.append(self._join_select(
-                        self._side_df(self.left_path, 0),
-                        self._side_df(self.right_path, 0),
-                        self.on, self.select, self.where, self.how,
-                    ))
-                delta = parts[0]
-                for p in parts[1:]:
-                    delta = delta.unionByName(p)
-                info = self.table.info
-                ops = write_table_data(delta, info, dedup=False)
-                for gone, gcols, side, gnk in vanished:
-                    gone = _pin(self, gone)
-                    if gone.take(1):
-                        self.table.delete_matching(
-                            self._vanished_view_keys(
-                                gone, gcols, last_l, last_r, side,
-                                gnk))
-            finally:
-                _release_pins(self)
-            try:
-                self.table.store.commit(
-                    OP_MERGE, ops,
-                    query_id=f"mv:{info.table_id}:{head_l}",
-                    batch_id=head_r,
-                    extra={_EXTRA_LEFT_END: head_l,
-                           _EXTRA_RIGHT_END: head_r},
-                    base_version=mv_base,
-                )
-            except CommitConflict:
-                continue  # a racing refresh landed: recompute the window
-            return {"applied": True, "end_version": head_l,
-                    "left": (last_l + 1, head_l),
-                    "right": (last_r + 1, head_r)}
-        raise CommitConflict(
-            f"refresh of {self.table.path} lost {max_attempts} races in a row"
-        )
+        if self.how == "left" and rmode != "pk" and last_l == 0:
+            # initial load joins the WHOLE right snapshot — verify
+            # uniqueness over all of it once, before any commit
+            self._assert_unique_right(head_r, None)
+        parts = []
+        vanished = []  # (gone keys, their view rows) to delete
+        keys_a = None
+        if head_l > last_l:
+            d_a, keys_a = self._side_delta(lstore, self.left_path,
+                                           last_l, head_l, lmode)
+            parts.append(self._join_select(
+                d_a, self._side_scoped(self.right_path, head_r, d_a),
+                self.on, self.select, self.where, self.how,
+            ))
+            if keys_a is not None and keys_a[2]:
+                # touched keys with NO surviving head rows: their view
+                # rows must be deleted (probed only when the window CAN
+                # vanish keys — see _window_may_vanish)
+                ka, ka_cols = keys_a[0], keys_a[1]
+                gone_a = ka.join(
+                    _bcast(d_a.select(*ka_cols).distinct(), keys_a[3]),
+                    on=ka_cols, how="left_anti")
+                vanished.append((gone_a, partial(
+                    self._vanished_view_keys, gone_cols=ka_cols,
+                    last_l=last_l, last_r=last_r, side="left",
+                    nkeys=keys_a[3])))
+        if head_r > last_r and last_l > 0:
+            # A@lastL ⋈ ΔB — with lastL == 0 the old left is empty and
+            # the term vanishes (the initial load is term one). INNER
+            # everywhere except the left-view pk-right case below: the
+            # inner term only re-emits left rows that gained/changed a
+            # match, and the PK-upsert fold replaces their previous
+            # (NULL-extended or stale) generation.
+            d_b, keys_b = self._side_delta(rstore, self.right_path,
+                                           last_r, head_r, rmode)
+            if self.how == "left" and rmode != "pk":
+                self._assert_unique_right(
+                    head_r, d_b, keys_b[3] if keys_b is not None else None)
+            # scope the old left by the TOUCHED key set when the right
+            # churns by PK (a deleted key has no restated rows, but its
+            # left rows still need re-emission), by the delta's key
+            # bounds otherwise
+            old_left = self._side_scoped(
+                self.left_path, last_l,
+                keys_b[0] if keys_b is not None else d_b)
+            if keys_a is not None:
+                # the left side churned by PK: its OLD snapshot still
+                # holds stale versions of the touched rows — term one
+                # re-emits those pairs from the restatement, so exclude
+                # them here BY THE LEFT PK (for append sources the old
+                # snapshot already equals "head minus delta" and no
+                # anti-join is paid)
+                ka, ka_cols = keys_a[0], keys_a[1]
+                old_left = old_left.join(
+                    _bcast(ka, keys_a[3]), on=ka_cols, how="left_anti")
+            if keys_b is not None and self.how == "left":
+                # left view over a pk/CDC-churning right: LEFT-join the
+                # old left's TOUCHED-key rows to the restatement — an
+                # upserted key re-pairs, a deleted key NULL-extends, and
+                # either way the left-identity fold replaces the stale
+                # row
+                kb = keys_b[0]
+                affected = old_left.join(
+                    _bcast(kb.select(*self.on).distinct(), keys_b[3]),
+                    on=self.on, how="left_semi")
+                parts.append(self._join_select(
+                    affected, d_b, self.on, self.select, self.where,
+                    "left"))
+            else:
+                parts.append(self._join_select(
+                    old_left, d_b, self.on, self.select, self.where,
+                    "inner"))
+                if keys_b is not None and keys_b[2]:
+                    kb, kb_cols = keys_b[0], keys_b[1]
+                    gone_b = kb.join(
+                        _bcast(d_b.select(*kb_cols).distinct(),
+                               keys_b[3]),
+                        on=kb_cols, how="left_anti")
+                    vanished.append((gone_b, partial(
+                        self._vanished_view_keys, gone_cols=kb_cols,
+                        last_l=last_l, last_r=last_r, side="right",
+                        nkeys=keys_b[3])))
+        if not parts:
+            # only the right moved while the applied left is still
+            # empty: no pairs can exist, but the marker must still
+            # advance or every refresh re-reads a growing ΔB window
+            parts.append(self._join_select(
+                _snapshot(self.spark, self.left_path, 0),
+                _snapshot(self.spark, self.right_path, 0),
+                self.on, self.select, self.where, self.how,
+            ))
+        delta = parts[0]
+        for p in parts[1:]:
+            delta = delta.unionByName(p)
+        return delta, vanished
 
     def repin_dims(self, *, verify: bool = True) -> dict:
         """SQL `REFRESH ... REPIN` hook: join views hold no dimension
@@ -2556,36 +2476,12 @@ class JoinMV:
             "REFRESH MATERIALIZED VIEW v (incremental) or FULL (rebuild)"
         )
 
-    def rebuild(self) -> dict:
-        """Recovery path (a source stopped being append-only): re-join
-        the two CURRENT snapshots and replace every view generation in
-        one Update commit stamped with both heads."""
-        from lakesoul_spark.meta.store import FileOp
-
-        head_l = MetaStore(self.left_path).head_version()
-        head_r = MetaStore(self.right_path).head_version()
-        out = self._join_select(
-            self._side_df(self.left_path, head_l),
-            self._side_df(self.right_path, head_r),
+    def _full(self, heads: tuple) -> DataFrame:
+        return self._join_select(
+            _snapshot(self.spark, self.left_path, heads[0]),
+            _snapshot(self.spark, self.right_path, heads[1]),
             self.on, self.select, self.where, self.how,
         )
-        info = self.table.info
-        adds = write_table_data(out, info, dedup=False)
-        dels = [
-            FileOp(op="del", path=f.path,
-                   partition_desc=f.partition_desc, bucket=f.bucket)
-            for f in self.table.store.snapshot().files
-        ]
-        self.table.store.commit(
-            OP_UPDATE, dels + adds,
-            query_id=f"mv:{info.table_id}:{head_l}", batch_id=head_r,
-            extra={_EXTRA_LEFT_END: head_l, _EXTRA_RIGHT_END: head_r},
-        )
-        return {"applied": True, "end_version": head_l,
-                "left": (1, head_l), "right": (1, head_r)}
-
-    def to_df(self) -> DataFrame:
-        return self.table.to_df()
 
 
 def open_view(spark: SparkSession, mv_path: str):

@@ -298,18 +298,6 @@ def _minhash_sig(sh: DataFrame, num_hashes: int) -> DataFrame:
     return proj.groupBy("id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """k min-hashes per document. One explode + one groupBy."""
-    return _minhash_sig(_shingle_sets(docs, id_col, text_col, n), num_hashes)
-
-
 def _lsh_buckets(sig: DataFrame, num_hashes: int, rows_per_band: int) -> DataFrame:
     """(id, band, key) bucket rows from a signature frame — band key =
     md5 of the band's concatenated min-hashes."""

@@ -79,25 +79,17 @@ class CompactionService:
         tables that did work (the notification-processing loop body of
         the reference Listener, CompactionTask.scala:70-120)."""
         from lakesoul_spark.meta.store import CommitConflict, MetaStore
+        from lakesoul_spark.mv import (
+            companion_paths, open_view, source_heads)
         from lakesoul_spark.table import LakeSoulTable
 
         done: dict[str, dict] = {}
         for path in self.discover():
             store = MetaStore(path)
             head = store.head_version()
-            # a materialized view refreshes off its SOURCE head (its own
-            # log is quiet until the refresh itself commits)
-            src_head = None
-            spec = store.table_info().properties.get("lakesoul.mv.spec")
-            if spec:
-                import json as _json
-
-                sp = _json.loads(spec)
-                if "right_path" in sp:  # JoinMV: two watched sources
-                    src_head = (MetaStore(sp["left_path"]).head_version(),
-                                MetaStore(sp["right_path"]).head_version())
-                else:
-                    src_head = MetaStore(sp["source_path"]).head_version()
+            # a materialized view refreshes off its SOURCE heads (its
+            # own log is quiet until the refresh itself commits)
+            src_head = source_heads(store.table_info())
             if head == self._last_seen.get(path) and (
                 src_head is None or src_head == self._last_seen_src.get(path)
             ):
@@ -105,8 +97,6 @@ class CompactionService:
             t = LakeSoulTable.for_path(self.spark, path)
             report: dict = {}
             if src_head is not None and src_head != self._last_seen_src.get(path):
-                from lakesoul_spark.mv import open_view
-
                 try:
                     r = open_view(self.spark, path).refresh()
                     if r["applied"]:
@@ -144,8 +134,6 @@ class CompactionService:
                 # leveled): only a full fold may apply the companions'
                 # drained-row GC (`lakesoul.compaction.dropWhere` —
                 # a leveled run's partial fold must keep netting rows)
-                from lakesoul_spark.mv import companion_paths
-
                 for dv in companion_paths(path):
                     dvt = LakeSoulTable.for_path(self.spark, dv)
                     before = len(dvt.store.snapshot().files)

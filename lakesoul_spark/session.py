@@ -22,11 +22,14 @@ def lakesoul_session(
     """Build a SparkSession with scale-appropriate defaults.
 
     On a real cluster ``master``/``shuffle_partitions`` come from the
-    environment; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+    environment; locally we default to ``local[$SPARK_GRAFT_CPUS]``, or
+    one slot per CPU of this machine when the variable is unset.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ncpu = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(ncpu))
     master = master or f"local[{cpus}]"
-    shuffle = str(shuffle_partitions or max(int(cpus) if cpus.isdigit() else 32, 8))
+    shuffle = str(shuffle_partitions
+                  or max(int(cpus) if cpus.isdigit() else ncpu, 8))
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -2773,22 +2773,17 @@ class LakeSoulTable:
                 "clone.source_version": snap.version,
                 "clone.deep": deep,
             }
-            from lakesoul_spark.mv import SPEC_PROP, _EXTRA_END
+            from lakesoul_spark.mv import SPEC_PROP, applied_marker
 
             if SPEC_PROP in src.properties:
-                # a materialized view's applied-source-version marker
-                # rides commit extras, not properties: without carrying
-                # it, the cloned view would believe nothing was applied
-                # and its next refresh would fold the FULL source
-                # history into the already-loaded partials — double
-                # counting every group. Scan downward from the clone
-                # point: the marker is almost always in the latest
-                # refresh commit, so this is O(1), not O(commit log).
-                for seq in range(min(snap.version, head), 0, -1):
-                    c = self.store.read_commit(seq)
-                    if _EXTRA_END in c.extra:
-                        extra[_EXTRA_END] = c.extra[_EXTRA_END]
-                        break
+                # a materialized view's applied-source markers ride
+                # commit extras, not properties: without carrying them,
+                # the cloned view would believe nothing was applied and
+                # its next refresh would fold the FULL source history
+                # into the already-loaded view — double counting every
+                # group, or re-joining both full sources
+                extra.update(applied_marker(self.store,
+                                            min(snap.version, head)))
             if copy_via == "spark" and copies:
                 # distributed copy: one task per BYTE-BALANCED slice
                 # (LPT over file sizes — a count-equal slicing lets

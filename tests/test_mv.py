@@ -671,26 +671,55 @@ def test_streaming_sink_feeds_mv(spark, tmp_path):
     assert mv.last_applied_version() > 1
 
 
-def test_mv_concurrent_refresh_exactly_once(spark, tmp_path):
+def _kind_view(spark, tmp_path, kind, first):
+    """``(source path, view, rows(view), truth(orders frame))`` for an
+    aggregate view over orders, or a join view of orders with
+    customer; the source's first commit is ``first`` and the view is
+    not refreshed yet."""
+    from lakesoul_spark.mv import JoinMV
+
+    if kind == "agg":
+        src, mv = _build(spark, tmp_path, [first])
+        return (src, mv,
+                lambda v: v.to_df().orderBy("o_custkey").collect(),
+                _expected)
+    src, dim, mvp = (str(tmp_path / x) for x in ("src", "dim", "mv"))
+    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
+        "c_custkey", "c_nationkey")
+    write(first, src, mode="overwrite")
+    write(cust.withColumnRenamed("c_custkey", "o_custkey"), dim,
+          mode="overwrite")
+    mv = JoinMV.create(
+        spark, src, dim, mvp, on=["o_custkey"],
+        select=["o_orderkey", "o_custkey", "c_nationkey"],
+        pk=["o_orderkey"], hash_bucket_num=2,
+    )
+    return (src, mv, lambda v: _jmv_rows(v.to_df()),
+            lambda df: _jmv_rows(_jmv_truth(df, cust)))
+
+
+@pytest.mark.parametrize("kind", ["agg", "join"])
+def test_mv_concurrent_refresh_exactly_once(spark, tmp_path, kind):
     """Racing refreshes must never double-apply a window: identical
     windows resolve idempotently at the commit layer, overlapping ones
     (computed from stale applied state) conflict and recompute. Final
-    value == recompute; exactly one marker commit per source head."""
+    value == recompute; exactly one marker commit per source head —
+    for every view kind, since they share one refresh loop."""
     from concurrent.futures import ThreadPoolExecutor
-    from lakesoul_spark.mv import _EXTRA_END
 
     orders = _orders(spark)
     halves = [orders.filter(F.col("o_orderkey") % 2 == i) for i in range(2)]
-    src, mv = _build(spark, tmp_path, halves)
+    src, mv, rows, truth = _kind_view(spark, tmp_path, kind, halves[0])
     mv.refresh()
     write(halves[1], src, mode="append")
-    handles = [AggMV(spark, mv.table.path) for _ in range(4)]
+    handles = [type(mv)(spark, mv.table.path) for _ in range(4)]
     with ThreadPoolExecutor(4) as ex:
         results = list(ex.map(lambda m: m.refresh(), handles))
     assert all(r["applied"] for r in results)
-    assert mv.to_df().orderBy("o_custkey").collect() == _expected(orders)
+    assert rows(mv) == truth(orders)
+    key = mv._marker_keys[0]
     marks = [c for c in mv.table.store.commits()
-             if c.extra.get(_EXTRA_END) == 2]
+             if c.extra.get(key) == 2]
     assert len(marks) == 1, "window applied more than once"
 
 
@@ -790,31 +819,32 @@ def test_sql_write_verbs_refuse_mv_targets(spark, tmp_path):
         == orders.count()
 
 
-def test_clone_of_mv_forks_the_view(spark, tmp_path):
-    """Cloning an aggregate MV forks a working view: the clone carries
-    the applied-source-version marker (without it, the next refresh
-    would fold the full source history into the already-loaded
-    partials, doubling every group), refreshes independently, and
-    matches a full recompute after new source commits."""
+@pytest.mark.parametrize("kind", ["agg", "join"])
+def test_clone_of_mv_forks_the_view(spark, tmp_path, kind):
+    """Cloning a view forks a working view: the clone carries the
+    applied-source markers — one for an aggregate view, both sides'
+    for a join view (without them, the next refresh would fold the
+    full source history into the already-loaded view: doubled groups,
+    or both full sources re-joined into extra generations), refreshes
+    independently, and matches a full recompute after new source
+    commits."""
     orders = _orders(spark)
     halves = [orders.filter(F.col("o_orderkey") % 2 == i) for i in range(2)]
-    src, mvp = str(tmp_path / "src"), str(tmp_path / "mv")
-    write(halves[0], src, mode="overwrite")
-    mv = AggMV.create(spark, src, mvp, group_by=["o_custkey"], aggs=AGGS)
+    src, mv, rows, truth = _kind_view(spark, tmp_path, kind, halves[0])
     mv.refresh()
 
-    fork = mv.table.clone(str(tmp_path / "fork"), deep=False)
-    fmv = AggMV(spark, str(tmp_path / "fork"))
-    assert fmv.last_applied_version() == mv.last_applied_version()
+    mv.table.clone(str(tmp_path / "fork"), deep=False)
+    fmv = type(mv)(spark, str(tmp_path / "fork"))
+    assert fmv.last_applied() == mv.last_applied()
     # nothing new: refresh is a no-op, NOT a double-count
     assert fmv.refresh()["applied"] is False
-    assert fmv.to_df().orderBy("o_custkey").collect() == _expected(halves[0])
+    assert rows(fmv) == truth(halves[0])
     # new source data: both views converge to the same full recompute
     write(halves[1], src, mode="append")
     assert fmv.refresh()["applied"]
     mv.refresh()
-    assert fmv.to_df().orderBy("o_custkey").collect() == _expected(orders)
-    assert mv.to_df().orderBy("o_custkey").collect() == _expected(orders)
+    assert rows(fmv) == truth(orders)
+    assert rows(mv) == truth(orders)
 
 
 def test_mv_star_dim_repin_append_only(spark, tmp_path):
@@ -2555,6 +2585,51 @@ def test_join_mv_left_view_delete_semantics(spark, tmp_path):
     assert got() == truth()
 
 
+def test_join_mv_retries_conflict_in_vanished_key_delete(spark, tmp_path,
+                                                        monkeypatch):
+    """The vanished-key delete is a compute-phase commit: when it loses
+    a race (CommitConflict) the refresh recomputes the window and
+    applies it exactly once, like a lost marker commit."""
+    from lakesoul_spark.meta.store import CommitConflict
+    from lakesoul_spark.mv import JoinMV
+
+    A, B, V = (str(tmp_path / x) for x in "abv")
+    write(spark.createDataFrame(
+        [(i, i % 10, float(i)) for i in range(60)],
+        "rid int, k int, v double"), A, mode="overwrite",
+        hash_partitions=["rid"], hash_bucket_num=4)
+    write(spark.createDataFrame(
+        [(i, f"d{i}") for i in range(10)], "k int, name string"), B,
+        mode="overwrite", hash_partitions=["k"], hash_bucket_num=2)
+    sel = ["rid", "k", "v", "name"]
+    mv = JoinMV.create(spark, A, B, V, on=["k"], select=sel,
+                       pk=["rid"], hash_bucket_num=4, how="left")
+    assert mv.refresh()["applied"]
+    lt = LakeSoulTable.for_path(spark, A)
+    lt.delete("rid % 4 = 0")
+
+    real = mv.table.delete_matching
+    calls = []
+
+    def racing_delete(keys):
+        calls.append(keys)
+        if len(calls) == 1:
+            raise CommitConflict("simulated lost race on the view delete")
+        return real(keys)
+
+    monkeypatch.setattr(mv.table, "delete_matching", racing_delete)
+    r = mv.refresh()
+    assert r["applied"] and r["left"] == (2, lt.store.head_version())
+    assert len(calls) == 2, "the window was not recomputed once"
+    truth = lt.to_df().join(LakeSoulTable.for_path(spark, B).to_df(),
+                            "k", "left").select(*sel)
+    assert sorted(map(tuple, mv.to_df().select(*sel).collect())) == \
+        sorted(map(tuple, truth.collect()))
+    marks = [c for c in mv.table.store.commits()
+             if c.extra.get("mv.left_end_version") == r["left"][1]]
+    assert len(marks) == 1, "window applied more than once"
+
+
 @pytest.mark.slow
 def test_join_mv_inner_delete_without_join_cols_in_view(spark,
                                                         tmp_path):
@@ -3022,7 +3097,7 @@ def test_agg_mv_exact_distinct_crash_replay(spark, tmp_path):
         # computing the window commits the companion; discarding the
         # frame before the view write simulates the crash
         last, head = mv.last_applied_version(), src_store.head_version()
-        out = mv._delta_window(src_store, last, head)
+        out, _vanished = mv._delta_window([src_store], (last,), (head,))
         out.collect()
         _release_pins(mv)
         return head
