@@ -131,7 +131,8 @@ def _render(v, t: str) -> str:
     raise ValueError(f"local_df cannot render type {t!r}")
 
 
-def local_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
+def local_df(spark: SparkSession, rows: list, schema_ddl: str, *,
+             nullable: bool = False) -> DataFrame:
     """DataFrame over driver-side ``rows`` with DDL schema
     ``"name type, ..."`` — as a LocalRelation when small (zero jobs to
     materialize/broadcast), falling back to a one-slice
@@ -140,6 +141,10 @@ def local_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
     Rows are tuples/lists positionally matching the schema. Supported
     types: integral, decimal, float/double, string, binary, boolean,
     date, timestamp, and arrays thereof (nested arrays included).
+
+    A VALUES column is nullable only when some row holds a NULL there;
+    ``nullable=True`` makes every column nullable whatever the data (the
+    schema a file scan of the same columns reports).
     """
     cols = []
     for part in _split_top(schema_ddl):
@@ -169,7 +174,14 @@ def local_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
         for r in rows
     )
     col_sql = ",".join(f"`{n}`" for n, _ in cols)
-    return spark.sql(f"SELECT * FROM (VALUES {row_sql}) AS t({col_sql})")
+    limit = ""
+    if nullable:
+        # a trailing all-NULL row makes every column nullable; the LIMIT
+        # drops it again, folded into the LocalRelation (still zero jobs)
+        row_sql += ",(" + ",".join(f"CAST(NULL AS {t})" for _, t in cols) + ")"
+        limit = f" LIMIT {len(rows)}"
+    return spark.sql(
+        f"SELECT * FROM (VALUES {row_sql}) AS t({col_sql}){limit}")
 
 
 def _split_top(ddl: str) -> list[str]:

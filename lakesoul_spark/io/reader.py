@@ -41,7 +41,10 @@ from lakesoul_spark.io import partition as part_enc
 from lakesoul_spark.io.writer import data_schema, table_schema
 from lakesoul_spark.meta.store import FileEntry, Snapshot, TableInfo
 
+import datetime as _dt
+import decimal as _decimal
 import os
+import re
 
 _FILE_META_PREFIX = "__ls_"
 CDC_DELETE = "delete"
@@ -334,6 +337,183 @@ def merge_view(
     if cdc and apply_cdc_filter and cdc in df.columns:
         df = df.filter(F.col(cdc) != CDC_DELETE)
     return _memo_put(memo_key, df)
+
+
+# DDL types a driver lookup reads with pyarrow and local_df renders
+# back to exactly that type (char/varchar, maps and structs are not)
+_LOCAL_SCALARS = frozenset({
+    "tinyint", "smallint", "int", "bigint", "float", "double", "string",
+    "binary", "boolean", "date", "timestamp", "timestamp_ntz",
+})
+# the Python type a key must have on a PK column of each DDL type for
+# an arrow equality to decide it as Spark's literal comparison does;
+# Spark would coerce any other (a str on a bigint). Float keys are
+# absent: Spark normalizes NaN and -0.0 in its merge grouping.
+_KEY_PY_TYPES = {
+    "tinyint": int, "smallint": int, "int": int, "bigint": int,
+    "string": str, "binary": bytes, "boolean": bool,
+    "date": _dt.date, "timestamp": _dt.datetime,
+    "timestamp_ntz": _dt.datetime,
+}
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+# key types whose parquet row-group min/max compare exactly in Python
+_STAT_PY_TYPES = frozenset({int, str, bytes, bool, _dt.date, _decimal.Decimal})
+_SIMPLE_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_LTZ = re.compile(r"\btimestamp\b")  # not timestamp_ntz
+
+
+def _local_type(t: str) -> bool:
+    if t.startswith("array<"):
+        return _local_type(t[len("array<"):-1])
+    return t in _LOCAL_SCALARS or t.startswith("decimal(")
+
+
+def _key_value(t: str, v):
+    """``v`` as an arrow-ready key of DDL type ``t``, or None when
+    Spark would not compare it as that type (a None key included)."""
+    if t.startswith("decimal("):
+        ok = type(v) is _decimal.Decimal and v.is_finite()
+    else:
+        ok = type(v) is _KEY_PY_TYPES.get(t)
+    if not ok:
+        return None
+    if t in _INT_BITS:
+        lim = 1 << (_INT_BITS[t] - 1)
+        return v if -lim <= v < lim else None
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        if t == "timestamp_ntz":
+            return None
+        # pyarrow ignores the offset of an aware datetime: pass the
+        # UTC wall clock of the same instant
+        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return v  # a naive timestamp is UTC wall clock, as _pred_lit casts it
+
+
+def _admitted_row_groups(md, pk_cols: list[str], keys: list[tuple]) -> list[int]:
+    """Row groups whose PK [min, max] statistics admit some key; a
+    column without comparable statistics admits every key (timestamp
+    keys always: INT96 files carry no statistics, and pyarrow cannot
+    extract them for every timestamp encoding)."""
+    import pyarrow as pa
+
+    col_idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    cols = [(i, col_idx[c]) for i, c in enumerate(pk_cols)
+            if c in col_idx and keys and type(keys[0][i]) in _STAT_PY_TYPES]
+    out = []
+    for g in range(md.num_row_groups):
+        bounds = []
+        for i, j in cols:
+            st = md.row_group(g).column(j).statistics
+            try:
+                lo, hi = (st.min, st.max) if st is not None and st.has_min_max \
+                    else (None, None)
+            except pa.ArrowNotImplementedError:
+                lo = hi = None
+            if type(lo) is type(hi) is type(keys[0][i]):
+                bounds.append((i, lo, hi))
+        if any(all(lo <= k[i] <= hi for i, lo, hi in bounds) for k in keys):
+            out.append(g)
+    return out
+
+
+def driver_lookup(
+    spark: SparkSession,
+    info: TableInfo,
+    snapshot: Snapshot,
+    keys: list[tuple],
+    *,
+    merge_ops: dict[str, str] | None = None,
+) -> DataFrame | None:
+    """The rows of ``snapshot`` whose PK tuple is one of ``keys``, read
+    and merged on the driver, as a LocalRelation (zero Spark jobs to
+    collect) with ``merge_view``'s schema — the reference's native
+    point read (``rust/lakesoul-io/src/reader.rs:160-180``).
+
+    ``snapshot`` is already pruned to the keys' buckets. Per
+    (partition, bucket) split each generation is read with pyarrow,
+    limited to the row groups whose PK statistics admit a key and to
+    the rows equal to a key, projected through the arrow normalizer
+    (range values, defaults, missing columns), folded with the same
+    ``file_exist_cols``-aware last-writer-wins merge the arrow scans
+    run, and CDC delete rows are dropped.
+
+    Returns None — the caller then runs ``merge_view`` — when the
+    answer is not provable here: a merge operator is in force, the
+    table has no PK, a column name or type is outside what the
+    LocalRelation renders exactly, a key's Python type is not its
+    column's own (Spark would coerce it), there are more keys than
+    ``MAX_LOCAL_ROWS``, a timestamp column meets a non-UTC session,
+    or pyarrow cannot read or cast a generation."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from lakesoul_spark.functions.local_df import MAX_LOCAL_ROWS
+    from lakesoul_spark.io.fs import filesystem_for
+    from lakesoul_spark.streaming.source import (
+        _arrow_schema,
+        _drop_cdc_deletes,
+        _fold_window,
+        _normalizer,
+        _pk_key,
+        _plan_splits,
+    )
+
+    pk_cols = info.hash_partitions
+    if merge_ops or not pk_cols or len(keys) > MAX_LOCAL_ROWS:
+        return None
+    schema = table_schema(info)
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    if not all(_SIMPLE_NAME.fullmatch(c) and _local_type(t)
+               for c, t in types.items()):
+        return None
+    if any(_LTZ.search(t) for t in types.values()) and \
+            spark.conf.get("spark.sql.session.timeZone") not in ("UTC", "Etc/UTC"):
+        return None
+    keys = [tuple(_key_value(types[c], v) for c, v in zip(pk_cols, k))
+            for k in keys]
+    if any(v is None for k in keys for v in k):
+        return None
+    target = _arrow_schema(schema)
+    parts = []
+    try:
+        key_tbl = pa.table({
+            c: pa.array([k[i] for k in keys], type=target.field(c).type)
+            for i, c in enumerate(pk_cols)
+        })
+        wanted = _pk_key(key_tbl, pk_cols).combine_chunks()
+
+        def matching(path):
+            fs, native = filesystem_for(path)
+            with fs.open_input_file(native) as fh:
+                pf = pq.ParquetFile(fh)
+                groups = _admitted_row_groups(pf.metadata, pk_cols, keys)
+                raw = pf.read_row_groups(groups) if groups else None
+            if raw is None:
+                return raw
+            pk = pa.table({c: pc.cast(raw.column(c), target.field(c).type)
+                           for c in pk_cols})
+            return raw.filter(pc.is_in(_pk_key(pk, pk_cols), value_set=wanted))
+
+        for sp in _plan_splits(info, snapshot.files, group_buckets=True,
+                               cdc_filter=True):
+            normalize = _normalizer(target, sp.range_vals, sp.defaults)
+            window = []
+            for path, _commit, _seq in sp.files:
+                raw = matching(path)
+                if raw is not None and raw.num_rows:
+                    window.append(normalize(raw))
+            if window:
+                merged = _fold_window(window, target, pk_cols, sp.range_vals) \
+                    if len(window) > 1 else window[0][0].cast(target)
+                parts.append(_drop_cdc_deletes(merged, info.cdc_column))
+    except pa.ArrowException:
+        return None
+    rows = []
+    for t in parts:
+        rows.extend(zip(*(col.to_pylist() for col in t.columns)))
+    ddl = ", ".join(f"{c} {t}" for c, t in types.items())
+    return local_df(spark, rows, ddl, nullable=True)
 
 
 def _merge_generations(df: DataFrame, info: TableInfo, merge_ops: dict[str, str]) -> DataFrame:

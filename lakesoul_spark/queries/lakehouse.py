@@ -540,8 +540,14 @@ def streaming_sink_sum(spark, sf_dir):
 )
 def pk_point_lookup(spark, sf_dir):
     """Point lookup on the PK: reads ONLY the murmur3(seed 42) bucket
-    of the literal (driver-side pruning from commit metadata — no job,
-    no full scan; reference reader.rs:160-180)."""
+    of the literal (driver-side pruning from commit metadata; reference
+    reader.rs:160-180), and reads it on the driver: the bucket's
+    generations are cut to the key's row groups and rows with pyarrow,
+    folded last-writer-wins and returned as a LocalRelation — zero
+    Spark jobs. Merge operators, types the LocalRelation cannot render
+    (maps, structs, char/varchar), keys Spark would coerce, more than
+    1,024 keys, or timestamps under a non-UTC session fall back to the
+    Spark MOR plan."""
     path = _tmp("pk_lookup", sf_dir)
     write(_orders(spark, sf_dir), path, mode="overwrite",
           hash_partitions=["o_orderkey"], hash_bucket_num=8)

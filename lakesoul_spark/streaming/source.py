@@ -304,6 +304,16 @@ def _fold_window(window, target, pk_cols, range_vals, merge_ops=None):
     return merged
 
 
+def _drop_cdc_deletes(tbl, cdc_col):
+    """A merged table without its CDC delete rows (a null change kind
+    drops too, as Spark's ``!=`` filter does)."""
+    import pyarrow.compute as pc
+
+    if not cdc_col or cdc_col not in tbl.column_names:
+        return tbl
+    return tbl.filter(pc.not_equal(tbl.column(cdc_col), CDC_DELETE))
+
+
 def _read_file_merged(paths_with_order, table_schema_json, range_vals,
                       pk_cols, cdc_col, apply_cdc_filter, defaults=None,
                       batch_rows=8192, merge_ops=None):
@@ -316,15 +326,14 @@ def _read_file_merged(paths_with_order, table_schema_json, range_vals,
     folds just the window column-by-column, and yields. Peak task
     memory is O(generations x batch_rows), never the whole bucket."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     schema = StructType.fromJson(json.loads(table_schema_json))
     target = _arrow_schema(schema)
     normalize = _normalizer(target, range_vals, defaults or {})
 
     def finish(tbl):
-        if cdc_col and apply_cdc_filter and cdc_col in tbl.column_names:
-            tbl = tbl.filter(pc.not_equal(tbl.column(cdc_col), CDC_DELETE))
+        if apply_cdc_filter:
+            tbl = _drop_cdc_deletes(tbl, cdc_col)
         yield from tbl.to_batches(max_chunksize=batch_rows)
 
     files = sorted(paths_with_order, key=lambda x: (x[1], x[2]))

@@ -1323,15 +1323,29 @@ class LakeSoulTable:
     def point_lookup(self, **pk_values) -> DataFrame:
         """PK point lookup with bucket pruning: the murmur3(seed 42)
         bucket of the literal is computed driver-side and only that
-        bucket's files are scanned (reference
+        bucket's files are considered (reference
         ``rust/lakesoul-io/src/reader.rs:160-180``,
-        ``utils/hash/mod.rs:19-24``). Within the files, parquet
-        row-group stats on the PK-sorted data prune further.
+        ``utils/hash/mod.rs:19-24``); per-file PK stats prune merge
+        groups further.
+
+        The answer is read on the driver with zero Spark jobs
+        (``io/reader.driver_lookup``): each generation's row groups
+        whose PK stats admit a key are read with pyarrow, cut to the
+        key rows, folded last-writer-wins and returned as a
+        LocalRelation with ``to_df()``'s schema. The lookup falls back
+        to the Spark MOR plan (``merge_view`` + a key filter) when the
+        driver read cannot prove its answer: a merge operator is
+        declared or registered, a column type or name the
+        LocalRelation cannot render exactly (maps, structs,
+        char/varchar), a key whose Python type is not its column's own
+        (a ``str`` on a ``bigint`` PK, which Spark would coerce; float
+        keys always), more keys than ``local_df.MAX_LOCAL_ROWS``, or a
+        timestamp column under a non-UTC session.
 
         Multi-key: pass a list/tuple/set per PK column to look up
         several keys in one scan of the union of their buckets (on a
         composite PK the value lists zip positionally into key
-        tuples)."""
+        tuples); an empty list returns an empty frame."""
         from lakesoul_spark.functions.spark_hash import bucket_of
 
         info = self.info
@@ -1367,7 +1381,6 @@ class LakeSoulTable:
                         "lists per PK column"
                     )
                 lists.append(v)
-            n = n or 1
             keys = [tuple(v[i] if len(v) > 1 else v[0] for v in lists)
                     for i in range(n)]
         else:
@@ -1404,19 +1417,34 @@ class LakeSoulTable:
             timestamp_ms=snap.timestamp_ms,
             files=files,
         )
-        df = rdr.merge_view(self.spark, info, pruned, merge_ops=self._merge_ops)
+        if snap.files:
+            # (an empty table reports its schema's own nullability:
+            # merge_view's empty frame, kept by the Spark path)
+            local = rdr.driver_lookup(self.spark, info, pruned, keys,
+                                      merge_ops=self._merge_ops)
+            if local is not None:
+                return local
+        # no keys: the unpruned view, so the empty answer carries
+        # to_df()'s exact schema (still zero jobs: the filter is false)
+        df = rdr.merge_view(self.spark, info, pruned if keys else snap,
+                            merge_ops=self._merge_ops)
         # exact key-tuple match (NOT the per-column cross product);
         # naive-datetime keys render via _pred_lit (wall-clock-exact
         # on non-UTC drivers)
         sch = table_schema(info)
-        cond = None
+        terms = []
         for k in keys:
             kc = None
             for i, c in enumerate(info.hash_partitions):
                 e = F.col(c) == _pred_lit(sch, c, k[i])
                 kc = e if kc is None else (kc & e)
-            cond = kc if cond is None else (cond | kc)
-        return df.filter(cond)
+            terms.append(kc)
+        # a balanced OR tree: a left-deep chain of a thousand keys
+        # overflows the JVM stack while the filter is converted
+        while len(terms) > 1:
+            terms = [terms[i] | terms[i + 1] if i + 1 < len(terms)
+                     else terms[i] for i in range(0, len(terms), 2)]
+        return df.filter(terms[0] if terms else F.lit(False))
 
     # -------------------------------------------------------------- writing
 

@@ -24,6 +24,12 @@ exactly as before, per finder instance, preserving upstream semantics;
 a NEW path entry has no cached finder and is unaffected. The patch is
 process-local to the worker/daemon tree — the driver never imports
 this module.
+
+The premise (an eager ``_read_directory`` per invalidation) was
+profiled on CPython 3.11 only, so the patch installs only on the
+interpreters in ``VERIFIED_PYTHONS``; elsewhere the module is the
+stock worker. ``tests/test_worker_shim.py`` fails if a verified
+interpreter stops re-reading on invalidation.
 """
 
 import os
@@ -33,6 +39,10 @@ import zipimport
 import importlib
 
 from pyspark.worker import main as _worker_main
+
+VERIFIED_PYTHONS = ((3, 11),)
+ACTIVE = (sys.implementation.name == "cpython"
+          and tuple(sys.version_info[:2]) in VERIFIED_PYTHONS)
 
 _orig_invalidate = zipimport.zipimporter.invalidate_caches
 
@@ -50,7 +60,7 @@ def _stamped_invalidate(self):
         self._lakesoul_stamp = key
 
 
-if not getattr(zipimport.zipimporter, "_lakesoul_stamped", False):
+if ACTIVE and not getattr(zipimport.zipimporter, "_lakesoul_stamped", False):
     zipimport.zipimporter.invalidate_caches = _stamped_invalidate
     zipimport.zipimporter._lakesoul_stamped = True
     # Pre-stamp every finder that already exists: this module is

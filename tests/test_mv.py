@@ -3441,7 +3441,9 @@ def test_unique_right_certificate_amortizes_full_scan(spark, tmp_path):
     try:
         v2._assert_unique_right(head, None)
     finally:
-        sc.setJobGroup("uniq_cert_done", "")
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
     assert list(sc.statusTracker().getJobIdsForGroup(
         "uniq_cert_probe")) == []
 

@@ -830,6 +830,73 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert got == [(1, 11), (2, 12)]
 
 
+@pytest.mark.slow
+def test_stream_join_state_across_batches(spark, tmp_path):
+    """The query-pack stream-join shape (ts-ordered slices staged by
+    ``_stage_ordered_stream``, 2 h watermarks, no trailing no-data
+    batch) fed TWO micro-batches per side, so matches are completed by
+    rows buffered in join state from the previous batch — in both
+    directions — and the output equals the batch interval join.
+
+    Slices cut at the midpoint of each side's ts range: clicks at
+    0/1900 | 2100/4000 s, purchases at 1000/2900 | 3100/4500/5000 s.
+    The click at 1900 s waits in state for the purchase at 3100 s; the
+    purchase at 2900 s waits for the click at 2100 s."""
+    import datetime as dt
+
+    from lakesoul_spark.queries.lakehouse import (
+        _no_data_batches_off,
+        _stage_ordered_stream,
+        _state_partitions,
+    )
+
+    t0 = dt.datetime(2026, 1, 1)
+    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
+    schema = "event_id int, user_id int, ts timestamp"
+    clicks = _df(spark, [(1, 1, s(0)), (2, 1, s(1900)), (3, 2, s(2100)),
+                         (4, 3, s(4000))], schema)
+    purchases = _df(spark, [(11, 1, s(1000)), (12, 2, s(2900)),
+                            (13, 1, s(3100)), (14, 2, s(4500)),
+                            (15, 3, s(5000))], schema)
+    lsrc, rsrc = str(tmp_path / "clicks"), str(tmp_path / "purchases")
+    _stage_ordered_stream(clicks, "ts", lsrc, n_slices=2)
+    _stage_ordered_stream(purchases, "ts", rsrc, n_slices=2)
+
+    def side(src, prefix):
+        return (spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1).parquet(src)
+                .withWatermark("ts", "2 hours")
+                .select(F.col("event_id").alias(f"{prefix}_id"),
+                        F.col("user_id").alias(f"{prefix}_user"),
+                        F.col("ts").alias(f"{prefix}_ts")))
+
+    def join(left, right):
+        return left.join(right, (F.col("c_user") == F.col("p_user"))
+                         & (F.col("p_ts") >= F.col("c_ts"))
+                         & (F.col("p_ts") <= F.col("c_ts")
+                            + F.expr("INTERVAL 30 MINUTES")), "inner")
+
+    with _state_partitions(spark, 4), _no_data_batches_off(spark):
+        q = (join(side(lsrc, "c"), side(rsrc, "p")).writeStream
+             .format("memory").queryName("ssj_cross")
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(300)
+    got = sorted((r.c_id, r.p_id) for r in spark.table("ssj_cross").collect())
+    # 1→11 and 4→15 pair within a batch; 2→13 and 3→12 across batches;
+    # 3→14 is 40 min late and never pairs
+    assert got == [(1, 11), (2, 13), (3, 12), (4, 15)]
+    batch = sorted(
+        (r.c_id, r.p_id) for r in join(
+            clicks.toDF("c_id", "c_user", "c_ts"),
+            purchases.toDF("p_id", "p_user", "p_ts")).collect())
+    assert got == batch
+    data_batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert [p["numInputRows"] for p in data_batches] == [4, 5]
+    # the first batch left unmatched rows of both sides in join state
+    assert data_batches[0]["stateOperators"][0]["numRowsTotal"] > 0
+
+
 def test_sessionize_engine_parity(spark, tmp_path):
     """The two sessionize engines — applyInPandasWithState +
     EventTimeTimeout vs transformWithStateInPandas (typed ValueState +
