@@ -192,6 +192,11 @@ def main() -> None:
         "load_avg": load_avg,               # 1-min load at run START
         "load_avg_end": round(os.getloadavg()[0], 2),
     }
+    # the parallelism the timings were taken at: records from hosts
+    # with different core counts are not comparable
+    engine = {"cpus": spark.sparkContext.defaultParallelism,
+              "master": spark.sparkContext.master}
+    out.update(engine)
     if repeat > 1:
         out["repeat"] = repeat
         out["stat"] = "median"
@@ -232,6 +237,7 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "load_avg": load_avg,
+        **engine,
         "n_queries": len(timings),
         "packs": {p: [len(ts), round(sum(ts), 2)]
                   for p, ts in sorted(packs.items())},

@@ -141,6 +141,33 @@ def _align(df: DataFrame, info: TableInfo) -> DataFrame:
     ])
 
 
+def max_records_per_file_of(
+    info: TableInfo, explicit: int | None = None
+) -> int | None:
+    """File rolling limit of one write: the explicit argument, else the
+    ``lakesoul.maxRecordsPerFile`` table property (reference
+    max_file_size, rust/lakesoul-io/src/config/mod.rs:103-105) — at
+    100 TB a hot (partition, bucket) must split files, not tasks."""
+    if explicit is not None:
+        return explicit
+    prop = info.properties.get("lakesoul.maxRecordsPerFile")
+    if not prop:
+        return None
+    try:
+        limit = int(prop)
+    except (TypeError, ValueError):
+        raise ValueError(
+            "table property 'lakesoul.maxRecordsPerFile' must be an "
+            f"integer, got {prop!r}"
+        ) from None
+    if limit <= 0:
+        raise ValueError(
+            "table property 'lakesoul.maxRecordsPerFile' must be "
+            f"positive, got {prop!r}"
+        )
+    return limit
+
+
 def write_table_data(
     df: DataFrame,
     info: TableInfo,
@@ -208,24 +235,7 @@ def write_table_data(
             )
 
     writer = df.write.mode("error")
-    # file rolling: explicit arg, else per-table property (reference
-    # max_file_size, rust/lakesoul-io/src/config/mod.rs:103-105) — at
-    # 100 TB a hot (partition, bucket) must split files, not tasks
-    if max_records_per_file is None:
-        prop = info.properties.get("lakesoul.maxRecordsPerFile")
-        if prop:
-            try:
-                max_records_per_file = int(prop)
-            except (TypeError, ValueError):
-                raise ValueError(
-                    "table property 'lakesoul.maxRecordsPerFile' must be an "
-                    f"integer, got {prop!r}"
-                ) from None
-            if max_records_per_file <= 0:
-                raise ValueError(
-                    "table property 'lakesoul.maxRecordsPerFile' must be "
-                    f"positive, got {prop!r}"
-                )
+    max_records_per_file = max_records_per_file_of(info, max_records_per_file)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if part_dirs:
@@ -261,6 +271,222 @@ def write_table_data(
             spark.conf.set(_TS_KEY, prev_ts)
 
     return _collect_file_ops(info, out_dir, present)
+
+
+# ------------------------------------------------------- driver writes
+#
+# A bounded upsert or key delete whose source is a LocalRelation runs
+# on the driver through the Arrow write core (``arrow/writer.
+# write_files``) with zero Spark jobs — the reference's in-process
+# small-batch writers (native sort writer, standalone Python Writer).
+# Everything else takes write_table_data.
+
+# Rows one driver write may carry: the upsert source, or the live rows
+# of the buckets a key delete folds and rewrites. Measured on a 4-core
+# local[4] host (CHANGES.md), driver vs Spark upsert of N rows into a
+# 30k-row, 8-bucket table: 16x faster at 1k, 8.6x at 5k, 2.5x at 20k,
+# 1.6x at 80k and 160k, 1.3x at 320k — collect() and the per-row
+# conversion grow linearly while the Spark job's cost is mostly fixed
+# (and shrinks with more executors). The bound keeps the gain at 1.5x
+# or more here and the collected rows at ~100 MB of driver memory.
+DRIVER_WRITE_MAX_ROWS = 100_000
+
+# DDL types the driver path converts from collected rows to Arrow and
+# writes exactly as the Spark writer does; keys and range values also
+# leave out float/double (Spark normalizes NaN and -0.0 when it groups
+# and hashes them, and names float directories its own way) and
+# binary range values
+_DRIVER_VALUE_TYPES = frozenset({
+    "tinyint", "smallint", "int", "bigint", "float", "double", "string",
+    "binary", "boolean", "date", "timestamp", "timestamp_ntz",
+})
+_DRIVER_KEY_TYPES = _DRIVER_VALUE_TYPES - {"float", "double"}
+_DRIVER_RANGE_TYPES = _DRIVER_KEY_TYPES - {"binary"}
+
+
+def _driver_type(t: str, allowed: frozenset) -> bool:
+    return t in allowed or t.startswith("decimal(")
+
+
+def _driver_types_ok(spark, info: TableInfo, cols: list[str]) -> bool:
+    """Whether the driver path writes ``cols`` of the table exactly: a
+    supported type per role, and a UTC session when a timestamp column
+    takes part (Spark names timestamp directories in session time)."""
+    types = {f.name: f.dataType.simpleString() for f in table_schema(info).fields}
+    for c in cols:
+        allowed = (_DRIVER_RANGE_TYPES if c in info.range_partitions
+                   else _DRIVER_KEY_TYPES if c in info.hash_partitions
+                   else _DRIVER_VALUE_TYPES)
+        if not _driver_type(types[c], allowed):
+            return False
+    if any(types[c] == "timestamp" for c in cols):
+        return spark.conf.get("spark.sql.session.timeZone") in ("UTC", "Etc/UTC")
+    return True
+
+
+def local_rows(df: DataFrame, bound: int) -> list | None:
+    """``df.collect()`` when its optimized plan is a LocalRelation of
+    at most ``bound`` rows — zero Spark jobs — else None."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    n = plan.maxRows()
+    if n.isEmpty() or n.get() > bound:
+        return None
+    return df.collect()
+
+
+def _rows_to_arrow(rows: list, fields: list):
+    """Collected Rows as a pyarrow Table of the fields' Arrow types.
+    pyspark hands ``timestamp`` values back as naive LOCAL datetimes
+    (``datetime.fromtimestamp``): ``.timestamp()`` is their exact
+    inverse, whatever the process time zone."""
+    import pyarrow as pa
+
+    from lakesoul_spark.streaming.source import _arrow_schema
+
+    target = _arrow_schema(StructType(fields))
+    cols = list(zip(*rows)) if rows else [()] * len(fields)
+    arrays = []
+    for f, vals in zip(fields, cols):
+        if f.dataType.simpleString() == "timestamp":
+            micros = [None if v is None else
+                      int(v.replace(microsecond=0).timestamp()) * 1_000_000
+                      + v.microsecond for v in vals]
+            arrays.append(pa.array(micros, pa.int64())
+                          .cast(target.field(f.name).type))
+        else:
+            arrays.append(pa.array(vals, target.field(f.name).type))
+    return pa.Table.from_arrays(arrays, schema=target)
+
+
+def driver_upsert_ops(info: TableInfo, source: DataFrame) -> list[FileOp] | None:
+    """The FileOps of ``source`` upserted into a PK table, written on
+    the driver through the Arrow write core; None when the Spark writer
+    must run instead: a source that is not a LocalRelation of at most
+    ``DRIVER_WRITE_MAX_ROWS`` rows, a column the Spark writer would
+    CAST or reject (an unknown column, another type, a missing PK,
+    range or CDC column), a type outside the driver set, a float or
+    double key or range column, a timestamp under a non-UTC session, a
+    NULL key, or any pyarrow error. Invalid input thus raises exactly
+    what the Spark path raises."""
+    import pyarrow as pa
+
+    from lakesoul_spark.arrow.writer import write_files
+
+    if not info.hash_partitions:
+        return None
+    fields = source.schema.fields
+    names = [f.name for f in fields]
+    types = {f.name: f.dataType.simpleString() for f in table_schema(info).fields}
+    if len(set(names)) != len(names) or any(
+            types.get(f.name) != f.dataType.simpleString() for f in fields):
+        return None
+    required = info.range_partitions + info.hash_partitions + (
+        [info.cdc_column] if info.cdc_column else [])
+    if any(c not in names for c in required) or \
+            not _driver_types_ok(source.sparkSession, info, names):
+        return None
+    rows = local_rows(source, DRIVER_WRITE_MAX_ROWS)
+    if rows is None:
+        return None
+    try:
+        tbl = _rows_to_arrow(rows, fields)
+        if any(tbl.column(c).null_count for c in info.hash_partitions):
+            return None
+        return write_files(info, tbl)
+    except pa.ArrowException:
+        return None
+
+
+def driver_delete_ops(
+    info: TableInfo, snap, keys: DataFrame
+) -> list[FileOp] | None:
+    """The FileOps of deleting every row whose PK is a row of ``keys``
+    from the snapshot ``snap``, computed on the driver; ``[]`` when no
+    key matches; None when the Spark path must run instead.
+
+    The keys are hashed with the vectorized murmur3 chain to find their
+    buckets; those buckets' generations are read with pyarrow and
+    folded per (partition, bucket) with the MOR reader's
+    ``_fold_window`` (no CDC filter: change rows are kept, as the Spark
+    rewrite keeps them), the matching rows are dropped, and only the
+    groups where a key matched are rewritten through the Arrow write
+    core. Falls back (None) unless ``keys`` carries exactly the PK
+    columns in the table's types, is a LocalRelation of at most
+    ``DRIVER_WRITE_MAX_ROWS`` rows, the touched buckets hold at most
+    that many rows, every table column is in the driver type set, and
+    pyarrow reads and casts every file. Callers rule out merge
+    operators."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from lakesoul_spark.arrow.writer import write_files
+    from lakesoul_spark.functions.spark_hash_np import bucket_array
+    from lakesoul_spark.io.fs import filesystem_for
+    from lakesoul_spark.streaming.source import (
+        _arrow_schema, _fold_window, _normalizer, _pk_key, _plan_splits,
+    )
+
+    pk = info.hash_partitions
+    schema = table_schema(info)
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    key_fields = {f.name: f for f in keys.schema.fields}
+    if not pk or sorted(key_fields) != sorted(pk) or len(keys.columns) != len(pk) \
+            or any(key_fields[c].dataType.simpleString() != types[c] for c in pk) \
+            or not _driver_types_ok(keys.sparkSession, info, list(types)):
+        return None
+    rows = local_rows(keys, DRIVER_WRITE_MAX_ROWS)
+    if rows is None:
+        return None
+    try:
+        key_tbl = _rows_to_arrow(rows, keys.schema.fields).select(pk)
+        # a NULL key matches nothing in the anti-join
+        key_tbl = key_tbl.drop_null()
+        if not key_tbl.num_rows:
+            return []
+        buckets = set(bucket_array(
+            key_tbl, pk, [types[c] for c in pk], info.hash_bucket_num
+        ).tolist())
+        files = [f for f in snap.files if f.bucket in buckets]
+        if any(f.num_rows < 0 for f in files) or \
+                sum(f.num_rows for f in files) > DRIVER_WRITE_MAX_ROWS:
+            return None
+        wanted = _pk_key(key_tbl, pk).combine_chunks()
+        target = _arrow_schema(schema)
+        by_path = {os.path.join(info.path, f.path): f for f in files}
+        dels, kept = [], []
+        for sp in _plan_splits(info, files, group_buckets=True,
+                               cdc_filter=False):
+            normalize = _normalizer(target, sp.range_vals, sp.defaults)
+            window = []
+            for path, _commit, _seq in sp.files:
+                fs, native = filesystem_for(path)
+                with fs.open_input_file(native) as fh:
+                    window.append(normalize(pq.ParquetFile(fh).read()))
+            merged = _fold_window(window, target, pk, sp.range_vals) \
+                if len(window) > 1 else window[0][0].cast(target)
+            hit = pc.is_in(_pk_key(merged, pk), value_set=wanted)
+            if not pc.any(hit).as_py():
+                continue
+            for path, _commit, _seq in sp.files:
+                f = by_path[path]
+                dels.append(FileOp(op="del", path=f.path,
+                                   partition_desc=f.partition_desc,
+                                   bucket=f.bucket))
+            kept.append(merged.filter(pc.invert(hit)))
+        if not dels:
+            return []
+        adds = write_files(info, pa.concat_tables(kept))
+    except pa.ArrowException:
+        return None
+    # the rewrite must land in the partitions it replaces; a range
+    # value the core spells differently from the original directory
+    # falls back (the orphaned files are never committed)
+    if not {a.partition_desc for a in adds} <= {d.partition_desc for d in dels}:
+        return None
+    return dels + adds
 
 
 def _declared_stats_cols(info: TableInfo) -> list[str]:

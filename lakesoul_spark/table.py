@@ -531,6 +531,15 @@ def _predicate_refs(
         return None
 
 
+class _SnapshotFiles(list):
+    """Files read from one snapshot, with its version: a rewrite of them
+    commits against that version (``LakeSoulTable._rewrite_files``)."""
+
+    def __init__(self, files, version: int):
+        super().__init__(files)
+        self.version = version
+
+
 class LakeSoulTable:
     """Handle on a LakeSoul-format table (optionally pinned to a
     snapshot or an incremental window)."""
@@ -1477,21 +1486,42 @@ class LakeSoulTable:
         files as an Update commit — the read side then needs no merge
         (one generation). Note the reference's own semantic difference:
         on the COW path a NULL in the source does not overwrite the
-        target (coalesce), while the delta path's use_last would."""
+        target (coalesce), while the delta path's use_last would.
+
+        A bounded delta upsert into a PK table runs on the driver with
+        zero Spark jobs (``io/writer.driver_upsert_ops``): when the
+        source's optimized plan is a LocalRelation (``createDataFrame``
+        of pandas under Arrow, a VALUES frame) of at most
+        ``io/writer.DRIVER_WRITE_MAX_ROWS`` rows whose column types
+        already equal the table's, the rows are collected and written
+        through the Arrow write core — same buckets, dedup, sort, files
+        and footer stats as the Spark writer. Every other case (another
+        plan, a column Spark would CAST, ``cow=True``, a schema
+        auto-migration, a float/double key or range column, a type or
+        session time zone outside the driver set) runs the Spark
+        writer. The commit's ``extra["write_path"]`` records which path
+        ran (``history()`` shows it)."""
         info = self.info
         if schema_auto_migrate is None:
             schema_auto_migrate = (
                 info.properties.get("lakesoul.schema.autoMigrate", "false").lower()
                 == "true"
             )
-        if schema_auto_migrate:
-            self._migrate_schema(source)
+        migrated = schema_auto_migrate and self._migrate_schema(source)
+        if migrated:
             info = self.info
         if cow:
             self._upsert_cow(source)
             return
+        from lakesoul_spark.io.writer import driver_upsert_ops
+
+        op = OP_MERGE if info.is_pk_table else OP_APPEND
+        ops = None if migrated else driver_upsert_ops(info, source)
+        if ops is not None:
+            self.store.commit(op, ops, extra={"write_path": "driver"})
+            return
         ops = write_table_data(source, info)
-        self.store.commit(OP_MERGE if info.is_pk_table else OP_APPEND, ops)
+        self.store.commit(op, ops, extra={"write_path": "spark"})
 
     def _upsert_cow(self, source: DataFrame) -> None:
         from lakesoul_spark.io.writer import _align
@@ -1526,11 +1556,13 @@ class LakeSoulTable:
                 sel.append(F.coalesce(src[c], target[c]).alias(c))
             else:
                 sel.append(target[c].alias(c))
-        self._rewrite_files(joined.select(*sel), snap.files, OP_UPDATE)
+        self._rewrite_files(joined.select(*sel),
+                            _SnapshotFiles(snap.files, snap.version), OP_UPDATE)
 
-    def _migrate_schema(self, source: DataFrame) -> None:
+    def _migrate_schema(self, source: DataFrame) -> bool:
         """Append source-only columns to the table schema (nullable),
-        preserving source order — reference updateMetadata on upsert."""
+        preserving source order — reference updateMetadata on upsert.
+        Returns whether the schema changed."""
         from pyspark.sql.types import StructField, StructType
 
         info = self.info
@@ -1542,7 +1574,7 @@ class LakeSoulTable:
             if f.name not in names
         ]
         if not new_fields:
-            return
+            return False
         # same name-identity guard as add_column: auto-migrate must not
         # silently re-introduce a dropped name that live files still
         # physically carry — their stale stored values would resurface
@@ -1563,6 +1595,7 @@ class LakeSoulTable:
             StructType(schema.fields + new_fields).jsonValue()
         )
         self.store.update_table_info(info)
+        return True
 
     def upsert_on_join_key(self, source: DataFrame, join_keys: list[str]) -> None:
         """Upsert rows that arrive keyed by a non-PK join key (reference
@@ -1657,39 +1690,36 @@ class LakeSoulTable:
             w = w.sortBy(*info.hash_partitions)
         w.saveAsTable(name)
 
-    def _rewrite_files(self, new_df: DataFrame, files, op: str) -> None:
-        """Copy-on-write: replace exactly ``files`` with a rewrite."""
+    def _rewrite_files(self, new_df: DataFrame, files: "_SnapshotFiles",
+                       op: str) -> None:
+        """Copy-on-write: replace exactly ``files`` with a rewrite of
+        ``new_df``, committed against ``files.version`` — the snapshot
+        both were read at — so a commit that lands in between on the
+        same partitions conflicts (Update/Delete) instead of being
+        silently overwritten by the stale rewrite."""
         dels = [
             FileOp(op="del", path=f.path, partition_desc=f.partition_desc, bucket=f.bucket)
             for f in files
         ]
         adds = write_table_data(new_df, self.info, dedup=False) if new_df is not None else []
-        self.store.commit(op, dels + adds)
+        self.store.commit(op, dels + adds, base_version=files.version,
+                          extra={"write_path": "spark"})
 
-    def _rewrite_partitions(
-        self, new_df: DataFrame, parts: set[str], op: str
-    ) -> None:
-        """Copy-on-write: replace all files of ``parts`` with a rewrite."""
-        self._rewrite_files(
-            new_df, self.store.snapshot(partition_descs=parts).files, op
-        )
-
-    def _touched_files(self, cond: Column, parts: set[str]) -> list:
+    def _touched_files(self, cond: Column, snap) -> list:
         """File-granularity candidate set for non-PK DML (reference
-        ``UpdateCommand.scala:86-95``): scan the affected partitions
+        ``UpdateCommand.scala:86-95``): scan the snapshot's files
         with per-row file identity and keep only files that contain a
         matching row. PK tables never reach here — the reference's own
         comment notes input_file_name is wrong under the merge reader,
         so hash-partitioned tables rewrite candidate files instead."""
-        return self._touched_files_by(lambda v: v.filter(cond), parts)
+        return self._touched_files_by(lambda v: v.filter(cond), snap)
 
-    def _touched_files_by(self, match, parts: set[str]) -> list:
+    def _touched_files_by(self, match, snap) -> list:
         """``_touched_files`` with an arbitrary row-matcher ``match``
         (DataFrame -> matching rows) — the join-based DML paths pass a
         semi-join where the predicate paths pass a filter."""
         import os as _os
 
-        snap = self.store.snapshot(partition_descs=parts)
         view = rdr.scan_files(self.spark, self.info, snap.files, with_file_name=True)
         hit = {
             r[0]
@@ -1743,21 +1773,22 @@ class LakeSoulTable:
                 df = df.withColumn(c, F.when(cond, ex).otherwise(F.col(c)))
             return df
 
+        snap = self.store.snapshot(partition_descs=parts)
         if not info.is_pk_table:
-            touched = self._touched_files(cond, parts)
+            touched = self._touched_files(cond, snap)
             if not touched:
                 return
             base = rdr.scan_files(self.spark, info, touched)
-            self._rewrite_files(apply_set(base), touched, OP_UPDATE)
+            self._rewrite_files(apply_set(base), _SnapshotFiles(touched, snap.version),
+                                OP_UPDATE)
             return
         view = rdr.merge_view(
-            self.spark,
-            info,
-            self.store.snapshot(partition_descs=parts),
+            self.spark, info, snap,
             merge_ops=self._merge_ops,
             apply_cdc_filter=False,
         )
-        self._rewrite_partitions(apply_set(view), parts, OP_UPDATE)
+        self._rewrite_files(apply_set(view),
+                            _SnapshotFiles(snap.files, snap.version), OP_UPDATE)
 
     def delete(self, condition: str | Column | None = None) -> None:
         """``DELETE FROM t [WHERE ...]`` (reference
@@ -1806,39 +1837,53 @@ class LakeSoulTable:
         parts = self._affected_partitions(cond)
         if not parts:
             return
+        snap = self.store.snapshot(partition_descs=parts)
         if not info.is_pk_table:
             # file granularity (reference DeleteCommand.scala:48-111):
             # only files holding a matching row are rewritten; siblings
             # in the same partition keep their paths
-            touched = self._touched_files(cond, parts)
+            touched = self._touched_files(cond, snap)
             if not touched:
                 return
             keep = rdr.scan_files(self.spark, info, touched).filter(~cond)
-            self._rewrite_files(keep, touched, OP_DELETE)
+            self._rewrite_files(keep, _SnapshotFiles(touched, snap.version), OP_DELETE)
             return
         view = rdr.merge_view(
-            self.spark,
-            info,
-            self.store.snapshot(partition_descs=parts),
+            self.spark, info, snap,
             merge_ops=self._merge_ops,
             apply_cdc_filter=False,
         )
         keep = view.filter(~cond)
-        self._rewrite_partitions(keep, parts, OP_DELETE)
+        self._rewrite_files(keep, _SnapshotFiles(snap.files, snap.version),
+                            OP_DELETE)
 
     def delete_matching(self, keys: DataFrame) -> None:
         """DELETE every row matching ANY row of ``keys`` on its columns
         — the anti-join form of :meth:`delete` for tombstone sets too
-        large for a literal predicate. The tombstone set stays a
-        DISTRIBUTED DataFrame end to end: a million-id churn day builds
-        the same constant-size plan as a ten-id one (one join, which
-        AQE broadcasts when small), where an ``isin([...])`` predicate
-        would inline every id as a plan literal.
+        large for a literal predicate.
+
+        A bounded key set runs on the driver with zero Spark jobs
+        (``io/writer.driver_delete_ops``): when ``keys`` is a
+        LocalRelation of at most ``io/writer.DRIVER_WRITE_MAX_ROWS``
+        rows carrying exactly the PK columns in the table's types, the
+        table has no merge operator and the keys' buckets hold at most
+        that many rows, those buckets are read and folded with pyarrow
+        and only the (partition, bucket) groups where a key matched are
+        rewritten, through the Arrow write core. Otherwise the
+        tombstone set stays a DISTRIBUTED DataFrame end to end: a
+        million-id churn day builds the same constant-size plan as a
+        ten-id one (one join, which AQE broadcasts when small), where
+        an ``isin([...])`` predicate would inline every id as a plan
+        literal. The commit's ``extra["write_path"]`` records which
+        path ran.
 
         Same rewrite granularity as :meth:`delete`: non-PK tables
         rewrite only the files that contain a matching row (per-row
         file identity); PK tables rewrite the affected partitions'
-        merge view. A ``keys`` with no matches is a no-op commit-wise."""
+        merge view (the keys' buckets of it, when the keys carry the
+        full PK). The rewrite commits against the snapshot it read, so
+        a concurrent commit to the same partitions raises
+        ``CommitConflict`` instead of being lost."""
         info = self.info
         schema_cols = {f.name for f in self.schema().fields}
         key_cols = list(keys.columns)
@@ -1848,6 +1893,17 @@ class LakeSoulTable:
                 f"tombstone columns {missing or '(none)'} not in table "
                 f"{info.path}"
             )
+        if info.is_pk_table and not self._merge_ops \
+                and self.read_type == READ_FULL and not self.partition_desc:
+            from lakesoul_spark.io.writer import driver_delete_ops
+
+            snap = self.store.snapshot()
+            ops = driver_delete_ops(info, snap, keys)
+            if ops is not None:
+                if ops:
+                    self.store.commit(OP_DELETE, ops, base_version=snap.version,
+                                      extra={"write_path": "driver"})
+                return
         keys = keys.distinct()
         if info.range_partitions:
             rows = (
@@ -1865,17 +1921,17 @@ class LakeSoulTable:
             parts = {NON_PARTITIONED}
         if not parts:
             return
+        snap = self.store.snapshot(partition_descs=parts)
         if not info.is_pk_table:
             touched = self._touched_files_by(
-                lambda v: v.join(keys, key_cols, "semi"), parts
+                lambda v: v.join(keys, key_cols, "semi"), snap
             )
             if not touched:
                 return
             keep = rdr.scan_files(self.spark, info, touched) \
                 .join(keys, key_cols, "anti")
-            self._rewrite_files(keep, touched, OP_DELETE)
+            self._rewrite_files(keep, _SnapshotFiles(touched, snap.version), OP_DELETE)
             return
-        snap = self.store.snapshot(partition_descs=parts)
         files = snap.files
         if set(info.hash_partitions) <= set(key_cols):
             # a key tuple's every generation lives in ONE murmur3
@@ -1910,7 +1966,7 @@ class LakeSoulTable:
             apply_cdc_filter=False,
         )
         keep = view.join(keys, key_cols, "anti")
-        self._rewrite_files(keep, files, OP_DELETE)
+        self._rewrite_files(keep, _SnapshotFiles(files, snap.version), OP_DELETE)
 
     # ----------------------------------------------------------- DDL / ALTER
 
@@ -2331,7 +2387,21 @@ class LakeSoulTable:
             for f in snap.files
         ]
         adds = write_table_data(view, info, dedup=False)
-        self.store.commit(OP_COMPACTION, dels + adds)
+        # committed against the snapshot it folded: a concurrent
+        # Update/Delete/Compaction of these partitions conflicts, and a
+        # concurrent Merge rebases — so the output keeps its inputs'
+        # place in the MOR order (its partition's newest input key, as
+        # in leveled_compaction) and a delta that lands meanwhile stays
+        # on top of it
+        newest: dict[str, tuple] = {}
+        for f in snap.files:
+            k = (f.commit_seq, f.file_seq)
+            newest[f.partition_desc] = max(newest.get(f.partition_desc, k), k)
+        top = max(newest.values())
+        for a in adds:
+            a.order_key = list(newest.get(a.partition_desc, top))
+        self.store.commit(OP_COMPACTION, dels + adds,
+                          base_version=snap.version)
 
     def leveled_compaction(
         self,
@@ -2400,7 +2470,10 @@ class LakeSoulTable:
 
         # one commit per output level: merge every planned run headed to
         # that level in a single Spark job (buckets partition the PKs,
-        # so a combined view is per-bucket correct)
+        # so a combined view is per-bucket correct). Each commit checks
+        # for conflicts from the version the runs were planned at (then
+        # from this pass's own previous commit)
+        base = snap.version
         for out_level in sorted({out for _run, out in plans.values()}):
             batch = {k: run for k, (run, o) in plans.items() if o == out_level}
             files = [f for run in batch.values() for f in run]
@@ -2425,7 +2498,8 @@ class LakeSoulTable:
                 ok = order.get((a.partition_desc, a.bucket))
                 if ok is not None:
                     a.order_key = list(ok)
-            self.store.commit(OP_COMPACTION, dels + adds)
+            base = self.store.commit(OP_COMPACTION, dels + adds,
+                                     base_version=base).seq
         return report
 
     def optimize_zorder(
@@ -3058,8 +3132,11 @@ class LakeSoulTable:
     def history(self) -> DataFrame:
         """Commit history as a DataFrame (the DESCRIBE HISTORY shape):
         one row per commit with version, timestamp, operation, file
-        add/del counts, bytes added, and the partitions touched.
-        Driver-side over commit metadata only — no data files read."""
+        add/del counts, bytes added, the partitions touched, and the
+        write path an upsert or delete took (``driver`` for the
+        zero-job Arrow write, ``spark`` for the Spark writer; NULL for
+        other commits). Driver-side over commit metadata only — no data
+        files read."""
         rows = []
         for c in self.store.commits():
             adds = [f for f in c.file_ops if f.op == "add"]
@@ -3072,10 +3149,11 @@ class LakeSoulTable:
                 len(dels),
                 int(sum(f.size for f in adds)),
                 sorted({f.partition_desc for f in c.file_ops}),
+                c.extra.get("write_path"),
             ))
         return self.spark.createDataFrame(
             rows,
             "version long, timestamp_ms long, operation string, "
             "files_added long, files_removed long, bytes_added long, "
-            "partitions array<string>",
+            "partitions array<string>, write_path string",
         )
