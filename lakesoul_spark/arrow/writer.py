@@ -247,6 +247,9 @@ def write_files(
                 part,
                 os.path.join(d, f"part-{uuid.uuid4().hex[:12]}.parquet"),
                 use_dictionary=_dictionary_columns(part),
+                # no ARROW:schema footer key: Spark writes none, and
+                # every reader of these files casts to the table schema
+                store_schema=False,
             )
     return _collect_file_ops(info, out_dir, present)
 

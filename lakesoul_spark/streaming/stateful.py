@@ -1,22 +1,26 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators for training-data ingestion streams.
 
 The reference delegates event-time/stateful stream processing to the
 host engine (SURVEY §2.8: watermarks/session windows are "host-engine
-features"); these are the two stateful operators a training-data
-ingestion stream actually needs, built the idiomatic Spark way — state
-is per-key, Arrow-batched, and bounded, so the operators hold on a
-1000-executor cluster:
+features"). These are the three stateful operators a training-data
+ingestion stream actually needs; state is per-key and bounded, so the
+operators hold on a 1000-executor cluster:
 
 - :func:`first_event_per_key` — streaming dedup: pass through only the
   first event seen per key (state = one marker row per key, O(#keys),
   optional processing-time TTL for unbounded key spaces).
 - :func:`sessionize` — event-time sessionization with a gap timeout:
-  closed sessions are emitted as soon as the watermark passes
-  ``session_end + gap`` (state = one open session per key).
+  Spark's native ``session_window`` aggregate, no Python worker;
+  closed sessions are emitted once the watermark passes
+  ``session_end + gap``.
+- :func:`latest_state_stream` — per-key latest state with optional
+  TTL tombstones.
 
-Both run per-key chunks through pandas, never materialize a whole
-partition, and emit append-mode output, so downstream sinks (including
-the LakeSoul foreachBatch sink) consume them like any other stream.
+``first_event_per_key`` and ``latest_state_stream`` have no native
+equivalent: they run per-key Arrow batches through pandas under
+``applyInPandasWithState``. All three emit append- or update-mode
+output, so downstream sinks (including the LakeSoul foreachBatch sink)
+consume them like any other stream.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -147,233 +152,37 @@ def first_event_per_key(
     )
 
 
-SESSION_SCHEMA = (
-    "session_start timestamp, session_end timestamp, n_events bigint"
-)
-
-_SESSIONS_STATE = "starts array<bigint>, ends array<bigint>, ns array<bigint>"
-
-
-def _merge_gap_sessions(
-    sessions: list[tuple[int, int, int]], gap_us: int
-) -> list[tuple[int, int, int]]:
-    """Gap-merge (start_us, end_us, n) sessions: sort by start, fuse
-    any neighbor within ``gap_us`` — transitive, so a late island can
-    bridge two previously separate sessions into one."""
-    sessions = sorted(sessions)
-    out: list[tuple[int, int, int]] = []
-    for s, e, n in sessions:
-        if out and s - out[-1][1] <= gap_us:
-            ps, pe, pn = out[-1]
-            out[-1] = (ps, max(pe, e), pn + n)
-        else:
-            out.append((s, e, n))
-    return out
-
-
-def _batch_islands(pdfs, ts_col: str, gap_us: int):
-    """Vectorized gaps-and-islands over one micro-batch's rows →
-    [(start_us, end_us, n)] (no per-event loop)."""
-    parts = [pdf[ts_col] for pdf in pdfs if len(pdf)]
-    if not parts:
-        return []
-    ts = pd.concat(parts, ignore_index=True).sort_values(ignore_index=True)
-    gap = pd.Timedelta(microseconds=gap_us)
-    grp = ts.groupby(ts.diff().gt(gap).cumsum())
-    return [
-        (s.value // 1000, e.value // 1000, int(n))
-        for s, e, n in zip(grp.first(), grp.last(), grp.size())
-    ]
-
-
 def sessionize(
-    sdf: DataFrame,
-    key_cols: list[str],
-    *,
-    ts_col: str,
-    gap_ms: int,
-    engine: str = "auto",
+    sdf: DataFrame, key_cols: list[str], *, ts_col: str, gap_ms: int
 ) -> DataFrame:
     """Event-time session windows with a ``gap_ms`` inactivity timeout.
 
     Input must carry a watermark on ``ts_col`` (``withWatermark``).
-    Events of one key whose timestamps are within ``gap_ms`` of each
-    other belong to one session; a session is emitted as
-    ``key..., session_start, session_end, n_events`` once the WATERMARK
-    passes ``session_end + gap_ms`` — at the next batch carrying the
-    key's data, or the event-time timeout, whichever comes first.
+    Events of one key whose timestamps are at most ``gap_ms`` apart
+    belong to one session (two events exactly ``gap_ms`` apart merge);
+    a session is emitted as ``key..., session_start, session_end,
+    n_events`` once the watermark reaches ``session_end + gap_ms``.
 
-    **Event-time-correct under replay**: sessions are held in state
-    until the watermark passes them, so a late event (within the
-    watermark delay) arriving batches later still lands in its correct
-    session — including merging into an island delivered earlier and
-    bridging two previously separate sessions into one. This is the
-    same closure contract as Spark's built-in ``session_window``; rows
-    later than the watermark are merged best-effort rather than
-    dropped.
+    This is Spark's own ``session_window`` aggregate, so no Python
+    worker runs. Sessions stay in Spark's state store until the
+    watermark passes them: a late event arriving batches later still
+    lands in its session, merging into an island delivered earlier or
+    bridging two open sessions into one.
 
-    State per key = the open sessions inside the watermark horizon
-    (parallel epoch-us arrays, bounded by delay/gap — NOT stream
-    length). ``engine``: ``"apply"`` uses ``applyInPandasWithState`` +
-    EventTimeTimeout (runs everywhere); ``"tws"`` uses Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState + real event-time
-    timers, the Flink analog — requires the ``protobuf`` package);
-    ``"auto"`` picks tws when protobuf is importable. Identical
-    emissions either way.
+    **Late rows are dropped.** Spark drops an input row whose one-event
+    session ``[ts, ts + gap)`` ends at or before the watermark of the
+    previous micro-batch; it appears in no session and is counted in
+    the progress's ``numRowsDroppedByWatermark``. A row later than the
+    watermark but within ``gap`` of it is still aggregated.
     """
-    if engine not in ("auto", "apply", "tws"):
-        raise ValueError(f"engine must be auto|apply|tws, got {engine!r}")
-    if engine == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            engine = "tws"
-        except ImportError:
-            engine = "apply"
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in sdf.schema
-        if f.name in key_cols
-    )
-    out_schema = f"{key_fields}, {SESSION_SCHEMA}"
-    gap_us = gap_ms * 1000
-
-    def emit(key, sessions) -> pd.DataFrame:
-        starts, ends, ns = zip(*sessions)
-        out = pd.DataFrame(
-            {"session_start": [pd.Timestamp(s, unit="us") for s in starts],
-             "session_end": [pd.Timestamp(e, unit="us") for e in ends],
-             "n_events": list(ns)}
-        )
-        for name, val in reversed(list(zip(key_cols, key))):
-            out.insert(0, name, val)
-        return out
-
-    if engine == "tws":
-        return _sessionize_tws(
-            sdf, key_cols, ts_col, gap_ms, out_schema, emit
-        )
-
-    def _split(merged, wm_ms):
-        wm_us = wm_ms * 1000
-        closed = [t for t in merged if t[1] + gap_us <= wm_us]
-        keep = [t for t in merged if t[1] + gap_us > wm_us]
-        return closed, keep
-
-    def _store(state: GroupState, keep, wm_ms) -> None:
-        if keep:
-            state.update((
-                [s for s, _, _ in keep],
-                [e for _, e, _ in keep],
-                [n for _, _, n in keep],
-            ))
-            # next closure deadline; must stay ahead of the watermark
-            deadline = min(e for _, e, _ in keep) // 1000 + gap_ms
-            state.setTimeoutTimestamp(max(deadline, wm_ms + 1))
-        elif state.exists:
-            state.remove()
-
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            starts, ends, ns = state.get
-            closed, keep = _split(list(zip(starts, ends, ns)), wm_ms)
-            _store(state, keep, wm_ms)
-            if closed:
-                yield emit(key, closed)
-            return
-        sessions = _batch_islands(pdfs, ts_col, gap_us)
-        if state.exists:
-            starts, ends, ns = state.get
-            sessions += list(zip(starts, ends, ns))
-        if not sessions:
-            return
-        closed, keep = _split(_merge_gap_sessions(sessions, gap_us), wm_ms)
-        _store(state, keep, wm_ms)
-        if closed:
-            yield emit(key, closed)
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        out_schema,
-        _SESSIONS_STATE,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _sessionize_tws(sdf, key_cols, ts_col, gap_ms, out_schema, emit):
-    """transformWithStateInPandas engine for :func:`sessionize` (typed
-    ValueState + real event-time timers). One timer per key tracks the
-    earliest open session's ``end + gap`` deadline; expiry closes every
-    session the watermark has passed and re-arms for the next."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_ms * 1000
-
-    class _Sessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState("open", _SESSIONS_STATE)
-
-        def _drain(self, wm_ms: int):
-            cur = self._open.get() if self._open.exists() else None
-            if cur is None:
-                return [], []
-            merged = list(zip(*cur))
-            wm_us = wm_ms * 1000
-            closed = [t for t in merged if t[1] + gap_us <= wm_us]
-            keep = [t for t in merged if t[1] + gap_us > wm_us]
-            return closed, keep
-
-        def _store(self, keep, wm_ms: int) -> None:
-            if keep:
-                self._open.update((
-                    [s for s, _, _ in keep],
-                    [e for _, e, _ in keep],
-                    [n for _, _, n in keep],
-                ))
-                deadline = min(e for _, e, _ in keep) // 1000 + gap_ms
-                self._handle.registerTimer(max(deadline, wm_ms + 1))
-            elif self._open.exists():
-                self._open.clear()
-
-        def handleInputRows(self, key, rows, timer_values):
-            wm_ms = timer_values.getCurrentWatermarkInMs()
-            sessions = _batch_islands(rows, ts_col, gap_us)
-            if self._open.exists():
-                sessions += list(zip(*self._open.get()))
-            if not sessions:
-                return
-            merged = _merge_gap_sessions(sessions, gap_us)
-            wm_us = wm_ms * 1000
-            closed = [t for t in merged if t[1] + gap_us <= wm_us]
-            keep = [t for t in merged if t[1] + gap_us > wm_us]
-            self._store(keep, wm_ms)
-            if closed:
-                yield emit(key, closed)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            wm_ms = max(timer_values.getCurrentWatermarkInMs(),
-                        expired_timer_info.getExpiryTimeInMs())
-            closed, keep = self._drain(wm_ms)
-            self._store(keep, wm_ms)
-            if closed:
-                yield emit(key, closed)
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Sessions(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
+    ts = F.col(ts_col)
+    return (
+        sdf.groupBy(F.session_window(ts, f"{gap_ms} milliseconds"),
+                    *key_cols)
+        .agg(F.min(ts).alias("session_start"),
+             F.max(ts).alias("session_end"),
+             F.count(F.lit(1)).alias("n_events"))
+        .select(*key_cols, "session_start", "session_end", "n_events")
     )
 
 
@@ -383,7 +192,6 @@ def latest_state_stream(
     *,
     order_col: str,
     ttl_ms: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Continuous per-key latest-state maintenance with optional TTL
     tombstones — the Spark re-expression of a Flink keyed process
@@ -401,17 +209,10 @@ def latest_state_stream(
     the LakeSoul sink on a CDC table and downstream MOR reads track
     the live set.
 
-    ``engine``: ``"apply"`` (default path) uses
-    ``applyInPandasWithState`` + ProcessingTimeTimeout — runs
-    everywhere. ``"tws"`` uses Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState + real timers,
-    the closest Flink analog) — requires the ``protobuf`` package,
-    which the TWS state client imports; ``"auto"`` picks tws when
-    protobuf is importable. Both produce identical 'u' emissions; the
-    TTL clock differs subtly on stale arrivals — ``apply`` must re-arm
-    the timeout on EVERY invocation (Spark clears it each call), so a
-    stale row extends the key's life, while ``tws`` timers are armed
-    per accepted update only.
+    Runs under ``applyInPandasWithState`` + ProcessingTimeTimeout.
+    Spark clears the timeout on every invocation, so it is re-armed on
+    every call, a stale arrival included: a stale row extends the
+    key's life.
 
     State per key: one row. One keyed exchange; Arrow-batched Python.
     """
@@ -424,15 +225,6 @@ def latest_state_stream(
     for k in key_cols:
         if k not in cols:
             raise ValueError(f"key column {k!r} not in stream schema")
-    if engine not in ("auto", "apply", "tws"):
-        raise ValueError(f"engine must be auto|apply|tws, got {engine!r}")
-    if engine == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            engine = "tws"
-        except ImportError:
-            engine = "apply"
     out_ddl = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields]
         + ["op string"]
@@ -440,10 +232,6 @@ def latest_state_stream(
     state_ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields
     )
-    if engine == "tws":
-        return _latest_state_tws(
-            sdf, key_cols, cols, order_col, ttl_ms, out_ddl, state_ddl
-        )
 
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -470,8 +258,6 @@ def latest_state_stream(
             # stale arrival — keep state, emit nothing. Spark CLEARS any
             # previously-set timeout on every invocation, so the TTL
             # timer must be re-armed here or the key would never expire
-            # (and the 'tws' engine, whose registered timers persist,
-            # would diverge)
             if ttl_ms:
                 state.setTimeoutDuration(ttl_ms)
             return
@@ -491,65 +277,3 @@ def latest_state_stream(
         fn, out_ddl, state_ddl, "update", timeout
     )
 
-
-def _latest_state_tws(sdf, key_cols, cols, order_col, ttl_ms, out_ddl,
-                      state_ddl):
-    """transformWithStateInPandas engine for :func:`latest_state_stream`
-    (typed ValueState + per-key timers; Flink-style stale-timer
-    resolution: each update records its deadline and an expired timer
-    only fires the tombstone if it IS the latest deadline)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_with_deadline = state_ddl + ", __deadline bigint"
-
-    class _Latest(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._latest = handle.getValueState("latest", state_with_deadline)
-
-        def handleInputRows(self, key, rows, timer_values):
-            best = None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                cand = pdf.loc[pdf[order_col].idxmax()]
-                if best is None or cand[order_col] > best[order_col]:
-                    best = cand
-            if best is None:
-                return
-            cur = self._latest.get() if self._latest.exists() else None
-            oi = cols.index(order_col)
-            if cur is not None and not (best[order_col] > cur[oi]):
-                return
-            now = timer_values.getCurrentProcessingTimeInMs()
-            deadline = (now + ttl_ms) if ttl_ms else 0
-            self._latest.update(tuple(best[c] for c in cols) + (deadline,))
-            if ttl_ms:
-                self._handle.registerTimer(deadline)
-            out = {c: [best[c]] for c in cols}
-            out["op"] = ["u"]
-            yield pd.DataFrame(out, columns=cols + ["op"])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if not self._latest.exists():
-                return
-            stored = self._latest.get()
-            if expired_timer_info.getExpiryTimeInMs() < stored[-1]:
-                return  # superseded by a newer update's timer
-            out = {c: [stored[i]] for i, c in enumerate(cols)}
-            out["op"] = ["d"]
-            self._latest.clear()
-            yield pd.DataFrame(out, columns=cols + ["op"])
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Latest(),
-        outputStructType=out_ddl,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms else "None",
-    )

@@ -466,6 +466,30 @@ def test_write_arrow_honours_max_records_per_file_property(spark, tmp_path):
         write_arrow(bad, pa.table({"k": pa.array([1], pa.int32())}))
 
 
+
+def test_driver_written_files_carry_no_arrow_schema_footer(spark, tmp_path):
+    """Driver-written files carry only parquet's own schema, as Spark's
+    do: pyarrow's ``ARROW:schema`` footer key is not stored, and the
+    table still reads back through Spark and the driver lookup."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = _orders(spark, str(tmp_path / "t"))
+    before = {f.path for f in t.store.snapshot().files}
+    t.upsert(_local(spark, [(5, 50, "x"), (500, 1, "new")],
+                    "k bigint, v bigint, s string"))
+    assert t.store.commits()[-1].extra["write_path"] == "driver"
+    new = [f.path for f in t.store.snapshot().files if f.path not in before]
+    assert new
+    for rel in new:
+        md = pq.read_metadata(os.path.join(t.path, rel)).metadata or {}
+        assert b"ARROW:schema" not in md, rel
+    assert {r.k: r.s for r in t.point_lookup(k=[5, 500]).collect()} \
+        == {5: "x", 500: "new"}
+    got = {r.k: r.s for r in t.to_df().filter("k in (5, 500)").collect()}
+    assert got == {5: "x", 500: "new"}
+
 # ------------------------------------------------------------ races
 
 def _race_on_commit(t, fn):

@@ -571,6 +571,186 @@ def test_stateful_sessionize_replay_late_data(spark, tmp_path):
     ]
 
 
+_GAP_US = 10_000_000        # 10 s session gap
+_DELAY_US = 60_000_000      # 60 s watermark delay
+_SLICE_US = 120_000_000     # event-time span of one staged slice
+_FAR_US = 4_102_444_800_000_000  # 2100-01-01: the watermark sentinel
+
+
+def _stage_slices(src, slices):
+    """Write each slice of ``(user_id, ts_us)`` rows as one parquet file
+    with increasing mtimes: the file source replays one file per
+    micro-batch in mtime order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src)
+    for i, rows in enumerate(slices):
+        f = os.path.join(src, f"part-{i:04d}.parquet")
+        pq.write_table(pa.table({
+            "user_id": pa.array([k for k, _ in rows], pa.int32()),
+            "ts": pa.array([t for _, t in rows], pa.timestamp("us", "UTC")),
+        }), f)
+        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+
+
+def _session_fuzz_slices(seed):
+    """Seeded event stream for the sessionize fuzz: 2-4 ts-ordered
+    slices over 8 keys, whose steps mix in-gap, exactly-``gap``,
+    ``gap`` + 1 us and long pauses. Rows near a slice's end are
+    deferred to the next slice (out of order, but within the watermark
+    delay, so none is dropped); key 100 gets a deferred event that
+    bridges two islands, key 101 events exactly ``gap`` and ``gap``
+    + 1 us apart. The last slice ends with a far-future sentinel."""
+    import random
+
+    rng = random.Random(seed)
+    n = rng.randint(2, 4)
+    slices = [[] for _ in range(n)]
+    for k in range(8):
+        t = rng.randrange(0, 30_000_000)
+        while t < n * _SLICE_US:
+            i = t // _SLICE_US
+            late = (i + 1 < n and t > (i + 1) * _SLICE_US - _DELAY_US // 2
+                    and rng.random() < 0.4)
+            slices[i + 1 if late else i].append((k, t))
+            t += rng.choice([
+                rng.randrange(1, _GAP_US), _GAP_US, _GAP_US + 1,
+                rng.randrange(_GAP_US + 1, 5 * _GAP_US)])
+    cut = _SLICE_US
+    slices[0] += [(100, cut - 40_000_000), (100, cut - 35_000_000),
+                  (100, cut - 20_000_000), (100, cut - 15_000_000),
+                  (101, 1_000_000), (101, 1_000_000 + _GAP_US),
+                  (101, 1_000_000 + 2 * _GAP_US + 1)]
+    slices[1].append((100, cut - 27_500_000))   # bridges 100's islands
+    for sl in slices:
+        rng.shuffle(sl)
+    slices[-1].append((-1, _FAR_US))
+    return slices
+
+
+def _islands(rows, gap_us):
+    """Batch gaps-and-islands: per key, a session ends where the next
+    event is more than ``gap_us`` later (exactly ``gap_us`` merges)."""
+    import pandas as pd
+
+    pdf = (pd.DataFrame(rows, columns=["user_id", "ts"])
+           .sort_values(["user_id", "ts"], ignore_index=True))
+    sid = pdf.groupby("user_id")["ts"].diff().gt(gap_us).cumsum()
+    g = pdf.groupby([pdf["user_id"], sid])["ts"]
+    return sorted(
+        (int(k), int(a), int(b), int(n))
+        for (k, _), a, b, n in zip(g.min().index, g.min(), g.max(), g.size())
+    )
+
+
+def _run_sessionize(spark, tmp_path, slices, delay, name):
+    """Replay ``slices`` through ``sessionize`` into a memory sink; the
+    sink's sessions (sentinel key dropped) as (key, start_us, end_us,
+    n) and the query's progress list."""
+    from lakesoul_spark.streaming.stateful import sessionize
+
+    src = str(tmp_path / f"src_{name}")
+    _stage_slices(src, slices)
+    sdf = (spark.readStream.schema("user_id int, ts timestamp")
+           .option("maxFilesPerTrigger", 1).parquet(src)
+           .withWatermark("ts", delay))
+    out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=_GAP_US // 1000)
+    q = (out.writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = sorted(
+        tuple(r) for r in spark.table(name)
+        .filter(F.col("user_id") != -1)
+        .select("user_id", F.unix_micros("session_start"),
+                F.unix_micros("session_end"), "n_events").collect()
+    )
+    return got, q.recentProgress
+
+
+def _check_session_fuzz(spark, tmp_path, seed):
+    slices = _session_fuzz_slices(seed)
+    got, progress = _run_sessionize(
+        spark, tmp_path, slices, f"{_DELAY_US // 1_000_000} seconds",
+        f"sess_fuzz_{seed}")
+    rows = [r for sl in slices for r in sl if r[0] != -1]
+    want = _islands(rows, _GAP_US)
+    assert got == want
+    # the stream covered what the model claims: a bridged island, the
+    # exact-gap merge and the gap + 1 us split, and no dropped row
+    assert (100, _SLICE_US - 40_000_000, _SLICE_US - 15_000_000, 5) in got
+    assert (101, 1_000_000, 1_000_000 + _GAP_US, 2) in got
+    assert sum(p["numInputRows"] for p in progress) == len(rows) + 1
+    assert sum(o["numRowsDroppedByWatermark"] for p in progress
+               for o in p["stateOperators"]) == 0
+
+
+def test_sessionize_fuzz_vs_islands_model(spark, tmp_path):
+    """Spark's session_window under sessionize equals a batch
+    gaps-and-islands model on a seeded out-of-order replay."""
+    _check_session_fuzz(spark, tmp_path, 0)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_sessionize_fuzz_vs_islands_model_seeds(spark, tmp_path, seed):
+    _check_session_fuzz(spark, tmp_path, seed)
+
+
+def test_sessionize_drops_rows_behind_the_watermark(spark, tmp_path):
+    """The late-row rule: a row whose one-event session ``[ts, ts +
+    gap)`` ends at or before the previous batch's watermark is dropped
+    and appears in no session; a row later than the watermark but
+    within ``gap`` of it still lands in its session."""
+    s = lambda sec: int(sec * 1_000_000)  # noqa: E731
+    slices = [
+        [(1, s(100))],                      # watermark -> 100 s
+        [(1, s(101))],
+        # 2@50 and 3@90 end at or before 100 s: dropped; 4@90+1us and
+        # 1@96 are behind the watermark but within the gap: kept
+        [(2, s(50)), (3, s(90)), (4, s(90) + 1), (1, s(96))],
+        [(-1, _FAR_US)],
+    ]
+    got, progress = _run_sessionize(spark, tmp_path, slices, "0 seconds",
+                                    "sess_late")
+    assert got == [(1, s(96), s(101), 3), (4, s(90) + 1, s(90) + 1, 1)]
+    assert sum(o["numRowsDroppedByWatermark"] for p in progress
+               for o in p["stateOperators"]) == 2
+
+
+def test_sessionize_plan_has_no_python_worker(spark, tmp_path):
+    """sessionize is Spark's session-window aggregate: its analyzed plan
+    groups by ``session_window`` and holds no pandas or Python node, so
+    no Python worker runs on the stream's hot path."""
+    import re
+
+    from lakesoul_spark.streaming.stateful import sessionize
+
+    src = tmp_path / "src"
+    src.mkdir()
+    sdf = (spark.readStream.schema("user_id int, ts timestamp")
+           .parquet(str(src)).withWatermark("ts", "0 seconds"))
+    out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=10_000)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("user_id", "int"), ("session_start", "timestamp"),
+        ("session_end", "timestamp"), ("n_events", "bigint")]
+    plan = out._jdf.queryExecution().analyzed()
+
+    def nodes(p):
+        kids = p.children()
+        return [p.nodeName()] + [
+            n for i in range(kids.size()) for n in nodes(kids.apply(i))]
+
+    names = nodes(plan)
+    assert "Aggregate" in names
+    assert re.search(r"Aggregate \[session_window#", plan.toString())
+    assert "FlatMapGroupsInPandasWithState" not in names
+    assert not [n for n in names if "Python" in n or "Pandas" in n], names
+
+
 @pytest.mark.slow
 def test_stateful_first_event_strict_mode(spark, tmp_path):
     """Strict mode holds the candidate for a settle window: a smaller
@@ -695,89 +875,6 @@ def test_latest_state_stream_ttl_tombstones(spark, tmp_path):
         q.stop()
 
 
-def test_latest_state_stream_tws_engine(spark, tmp_path):
-    """engine='tws' runs the same semantics on Spark 4's
-    transformWithStateInPandas (typed ValueState + real per-key
-    timers). Gated: the TWS state client imports google.protobuf,
-    absent in minimal installs — engine='auto' then falls back to the
-    applyInPandasWithState path (asserted), and an explicit 'tws' ask
-    surfaces the real ImportError at stream start."""
-    from lakesoul_spark.streaming.stateful import latest_state_stream
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    src = str(tmp_path / "src")
-    schema = "seq long, k int, v string"
-    _df(spark, [(1, 1, "a"), (2, 1, "b")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    sdf = (spark.readStream.schema("seq long, k int, v string")
-           .option("maxFilesPerTrigger", 1).parquet(src))
-    if not has_protobuf:
-        # auto picks the portable engine and the result is identical
-        out = latest_state_stream(sdf, ["k"], order_col="seq", engine="auto")
-        q = (out.writeStream.format("memory").queryName("tws_fallback")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = sorted(map(tuple, spark.table("tws_fallback").collect()))
-        assert got == [(2, 1, "b", "u")]
-        pytest.skip("google.protobuf absent: TWS engine not runnable here")
-    out = latest_state_stream(sdf, ["k"], order_col="seq", engine="tws")
-    q = (out.writeStream.format("memory").queryName("tws_latest")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("tws_latest").collect()))
-    assert got == [(2, 1, "b", "u")]
-
-
-@pytest.mark.slow
-def test_sessionize_tws_engine(spark, tmp_path):
-    """sessionize engine='tws' (transformWithStateInPandas, event-time
-    timers) emits the same sessions as the portable engine. Gated on
-    google.protobuf like the latest-state TWS test; without it, 'auto'
-    falls back to applyInPandasWithState (asserted via the session
-    result, same fixture as the basic sessionize test)."""
-    import datetime as dt
-
-    from lakesoul_spark.streaming.stateful import sessionize
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    src = str(tmp_path / "src")
-    schema = "user_id int, ts timestamp"
-    for b in [[(1, s(0)), (1, s(5))], [(1, s(30))],
-              [(99, s(1000))], [(99, s(2000))]]:
-        _df(spark, b, schema).coalesce(1).write.mode("append").parquet(src)
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(src)
-           .withWatermark("ts", "0 seconds"))
-    engine = "tws" if has_protobuf else "auto"
-    out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=10_000,
-                     engine=engine)
-    q = (out.writeStream.format("memory").queryName("tws_sessions")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table("tws_sessions").collect() if r.user_id != 99
-    )
-    assert got == [(1, s(0), s(5), 2), (1, s(30), s(30), 1)]
-    if not has_protobuf:
-        pytest.skip("google.protobuf absent: TWS engine not runnable here")
-
-
 def test_stream_stream_interval_join(spark, tmp_path):
     """Watermarked inner stream-stream interval join (the query-pack
     streaming_stream_join shape): matches within [l.ts, l.ts + 30 s]
@@ -895,59 +992,3 @@ def test_stream_join_state_across_batches(spark, tmp_path):
     assert [p["numInputRows"] for p in data_batches] == [4, 5]
     # the first batch left unmatched rows of both sides in join state
     assert data_batches[0]["stateOperators"][0]["numRowsTotal"] > 0
-
-
-def test_sessionize_engine_parity(spark, tmp_path):
-    """The two sessionize engines — applyInPandasWithState +
-    EventTimeTimeout vs transformWithStateInPandas (typed ValueState +
-    event-time timers) — emit IDENTICAL sessions on a replay with
-    out-of-order arrivals, cross-batch merges (a late middle event
-    bridging two islands), and multiple interleaved keys. Gated on
-    google.protobuf (the TWS state serializer); the dispatch contract
-    itself ('auto' falls back) is covered by the tws-engine tests."""
-    import datetime as dt
-
-    from lakesoul_spark.streaming.stateful import sessionize
-
-    pytest.importorskip("google.protobuf")
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    schema = "user_id int, ts timestamp"
-    # batches: islands per key delivered out of order; user 1's
-    # events at 0/5 and 30 are later BRIDGED by the 18 s arrival
-    # (gap 15 s: 0-5 | 30 becomes 0-30 once 18 lands); user 2 stays
-    # two sessions; user 99 is the watermark-draining sentinel
-    batches = [
-        [(1, s(0)), (2, s(100)), (1, s(5))],
-        [(1, s(30)), (2, s(200))],
-        [(1, s(18))],                     # late, within watermark delay
-        [(99, s(10_000))],
-        [(99, s(20_000))],
-    ]
-    results = {}
-    for engine in ("apply", "tws"):
-        src = str(tmp_path / f"src_{engine}")
-        for b in batches:
-            _df(spark, b, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-        sdf = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).parquet(src)
-               .withWatermark("ts", "60 seconds"))
-        out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=15_000,
-                         engine=engine)
-        name = f"parity_{engine}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", str(tmp_path / f"ck_{engine}"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        results[engine] = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.table(name).collect() if r.user_id != 99
-        )
-    assert results["apply"] == results["tws"], results
-    # and both match the gaps-and-islands truth
-    assert results["apply"] == [
-        (1, s(0), s(30), 4), (2, s(100), s(100), 1),
-        (2, s(200), s(200), 1),
-    ]
