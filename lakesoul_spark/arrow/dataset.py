@@ -392,21 +392,27 @@ class LakeSoulArrowDataset:
 
     def count_rows(self) -> int:
         """Row count of this view; commit-log-metadata-only (zero file
-        IO) when provable — an unsharded, unfiltered, non-CDC snapshot
-        whose PK buckets each hold one generation and whose files all
-        record ``num_rows`` (the twin of ``LakeSoulTable.count_fast``).
-        Everything else falls back to streaming the batches."""
+        IO) when provable — an unsharded, unfiltered snapshot whose
+        partition-scoped files pass ``LakeSoulTable.count_fast``'s own
+        gate (``_snapshot_provable``: no CDC, at most one generation
+        per PK bucket IN SCOPE, so churn in another partition never
+        forces a stream) and all record ``num_rows``. Everything else
+        falls back to streaming the batches."""
         if (self.rank is None and not self._filters
-                and self.start_version is None
-                and not self.info.cdc_column):
+                and self.start_version is None):
+            import dataclasses
+
+            from lakesoul_spark.table import LakeSoulTable
+
             snap = self.store.snapshot(
                 version=self.version, timestamp_ms=self.timestamp_ms
             )
-            files = self._partition_filtered(snap.files)
-            if (not self.info.hash_partitions
-                    or snap.max_generations_per_bucket() == 1) \
-                    and all(f.num_rows >= 0 for f in files):
-                return sum(f.num_rows for f in files)
+            scoped = dataclasses.replace(
+                snap, files=self._partition_filtered(snap.files))
+            if LakeSoulTable._snapshot_provable(self.info, scoped):
+                n = LakeSoulTable._count_files(scoped.files)
+                if n is not None:
+                    return n
         return sum(b.num_rows for b in self.to_batches())
 
     def __iter__(self):

@@ -36,56 +36,13 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lakesoul_spark.table import LakeSoulTable, create_table as _create_table
+from lakesoul_spark.table import (
+    _PART_VALUE_KEYS,
+    _REFUSE,
+    LakeSoulTable,
+    create_table as _create_table,
+)
 
-
-def _dbl_order_key(s) -> tuple:
-    """NaN-safe sort key for float/double carriers: Spark's total
-    order puts NaN above +Infinity, while a raw ``float`` key would
-    silently break Python sort transitivity (every NaN comparison is
-    False)."""
-    import math
-
-    v = float(s)
-    return (1, 0.0) if math.isnan(v) else (0, v)
-
-# distinct from None (a legitimate SQL NULL value) in the metadata
-# GROUP BY fast path: "this group cannot be proven — fall back"
-_REFUSE = object()
-
-_INT_DESC_RE = re.compile(r"^[+-]?[0-9]+$")
-
-
-def _int_desc(v: str, bits: int) -> int:
-    """STRICT integer parse of a partition-desc value: only the forms
-    Spark's string→int CAST accepts and only in-range values (Python's
-    int() would happily parse '1_0' as 10 and any magnitude, where the
-    CAST yields NULL — the metadata answer must never merge or order
-    groups differently than the relational one)."""
-    if not _INT_DESC_RE.match(v):
-        raise ValueError(f"non-canonical int desc value {v!r}")
-    n = int(v)
-    if not (-(1 << (bits - 1)) <= n < (1 << (bits - 1))):
-        raise ValueError(f"desc value {v!r} overflows {bits}-bit int")
-    return n
-
-
-_DATE_DESC_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-
-
-def _date_desc(v: str):
-    """STRICT ISO date parse (zero-padded extended form only): a
-    CONVERT TO LAKESOUL import can carry 'd=2024-1-2' dirs, which
-    Spark's CAST merges with '2024-01-02' while a string key would
-    keep them distinct and order them wrong — parse canonically or
-    raise (→ fall back to a scan). The regex guard exists because
-    Python ≥3.11 ``fromisoformat`` also accepts the BASIC form
-    '20240102', which Spark's CAST does not."""
-    import datetime
-
-    if not _DATE_DESC_RE.match(v):
-        raise ValueError(f"non-canonical date desc value {v!r}")
-    return datetime.date.fromisoformat(v)
 
 _NS_FILE = "_namespace.json"
 _TABLES_FILE = "_tables.json"
@@ -713,7 +670,7 @@ class Catalog:
             # polls, with zero file IO at any table size. num_rows is
             # NULL when that partition's scope cannot PROVE physical
             # == logical — LITERALLY the count_fast gate
-            # (_snapshot_provable + _count_from), applied to a
+            # (_snapshot_provable + _count_files), applied to a
             # per-partition sub-snapshot so churn in one partition
             # never hides the others, and so a future unprovable
             # condition lands here automatically.
@@ -726,7 +683,7 @@ class Catalog:
             for d in descs:
                 fs = by_desc[d]
                 sub = dataclasses.replace(snap, files=fs)
-                n = (LakeSoulTable._count_from(sub)
+                n = (LakeSoulTable._count_files(fs)
                      if LakeSoulTable._snapshot_provable(info, sub)
                      else None)
                 rows.append((d, len(fs), sum(f.size for f in fs), n))
@@ -950,22 +907,23 @@ class Catalog:
             ddl += f"\nLOCATION '{info.path}'"
             return spark.createDataFrame([(ddl,)], "createtab_stmt string")
 
-        # metadata-only fast path for the most common ad-hoc probes:
-        # a SELECT of only COUNT(*)/COUNT(col)/MIN/MAX/SUM/AVG(col)
-        # items over one table, bare or with a PARTITION-ONLY WHERE
-        # (and optional VERSION AS OF / GROUP BY over range-partition
-        # columns), answers from the commit log (count_fast /
-        # min_max_fast / sum_fast) with ZERO file IO and zero scan jobs —
-        # the result is a LocalTableScan whose collect() doesn't even
-        # launch a job. Dispatches only when EVERY item can PROVE
-        # physical == logical (no CDC, no multi-generation PK buckets
-        # in the scoped partitions, num_rows/stats everywhere, exact
-        # stats types for min/max, and any WHERE a deterministic
-        # predicate over range-partition columns only — reference
-        # PartitionFilter.scala prunes in PG metadata the same way);
-        # anything unprovable — a data-column predicate, a GROUP BY
-        # tail, any other SELECT shape — falls through to the
-        # relational path below unchanged (never wrong, just a scan).
+        # metadata-only fast path for the most common ad-hoc probes: a
+        # SELECT of range-partition columns and recognized aggregates
+        # (COUNT(*), COUNT(col), COUNT(DISTINCT partition col),
+        # MIN/MAX/SUM/AVG(col)) over one table — bare, with a
+        # PARTITION-ONLY WHERE, VERSION/TIMESTAMP AS OF, a GROUP BY
+        # over range-partition columns with any HAVING / ORDER BY /
+        # LIMIT tail, or SELECT DISTINCT over range-partition columns.
+        # The commit log supplies one value per group and aggregate;
+        # Spark evaluates the tail over that LocalRelation with zero
+        # file IO and zero scan jobs. Dispatches only when EVERY value
+        # is PROVABLE (no CDC, no multi-generation PK buckets in the
+        # scoped partitions, num_rows/stats everywhere, exact stats
+        # types for min/max, any WHERE a deterministic predicate over
+        # range-partition columns only — reference PartitionFilter
+        # .scala prunes in PG metadata the same way); anything else
+        # falls through to the relational path below unchanged (never
+        # wrong, just a scan).
         am = re.match(
             r"SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<tbl>[\w.]+)"
             r"(?:\s+VERSION\s+AS\s+OF\s+(?P<ver>\d+)"
@@ -979,22 +937,15 @@ class Catalog:
             stmt, re.I | re.S,
         )
         if am:
-            if am.group("gby"):
-                fast = self._try_metadata_group_by(spark, am)
-            else:
-                dm = re.match(r"DISTINCT\s+(.+)$", am.group("items"),
-                              re.I | re.S)
-                if dm is not None:
-                    # SELECT DISTINCT <range-partition cols> ≡ GROUP BY
-                    # those columns: the distinct partition tuples are
-                    # the commit log's descs (with ≥1 live row) — the
-                    # other canonical freshness probe, zero jobs; any
-                    # non-bare-partition item refuses inside
-                    fast = self._try_metadata_group_by(
-                        spark, am, items_txt=dm.group(1),
-                        group_txt=dm.group(1))
-                else:
-                    fast = self._try_metadata_aggs(spark, am)
+            # SELECT DISTINCT <range-partition cols> ≡ GROUP BY those
+            # columns: the distinct partition tuples are the commit
+            # log's descs (with ≥1 live row) — the other canonical
+            # freshness probe; any non-bare-partition item refuses
+            dm = None if am.group("gby") else re.match(
+                r"DISTINCT\s+(.+)$", am.group("items"), re.I | re.S)
+            fast = self._try_metadata_group_by(
+                spark, am, items_txt=dm and dm.group(1),
+                group_txt=dm and dm.group(1))
             if fast is not None:
                 return fast
 
@@ -1020,346 +971,37 @@ class Catalog:
             stmt = self._register_referenced(spark, stmt, register_all=True)
             return spark.sql(stmt)
 
-    _META_AGG_RE = re.compile(
-        r"^COUNT\s*\(\s*(?:\*|1)\s*\)(?:\s+AS\s+(\w+))?$"
-        r"|^(MIN|MAX|SUM|AVG|COUNT)\s*\("
+    # one recognized aggregate call: COUNT(*) / COUNT(1), MIN / MAX /
+    # SUM / AVG / COUNT over a bare column, COUNT(DISTINCT col)
+    _AGG_CALL_RE = re.compile(
+        r"\bCOUNT\s*\(\s*(?:\*|1)\s*\)"
+        r"|\b(MIN|MAX|SUM|AVG|COUNT)\s*\("
         r"\s*`?(?!(?:DISTINCT|ALL)\b)(\w+)`?\s*\)"
-        r"(?:\s+AS\s+(\w+))?$"
-        r"|^COUNT\s*\(\s*DISTINCT\s+`?(\w+)`?\s*\)"
-        r"(?:\s+AS\s+(\w+))?$",
+        r"|\bCOUNT\s*\(\s*DISTINCT\s+`?(\w+)`?\s*\)",
         re.I,
     )
-
-    # range-partition desc values order correctly under these declared
-    # types (ints numerically after the strict parse; dates as
-    # datetime.date; plain strings lexicographically); anything else
-    # (float/bool/timestamp) refuses. The typed parses are STRICT —
-    # exactly the strings Spark's string→type CAST accepts, normalized
-    # to one canonical value per equivalence class: Python's bare
-    # int() accepts '1_0' (→ 10) where the CAST yields NULL, and a
-    # CONVERT TO LAKESOUL import can bring non-zero-padded date dirs
-    # ('2024-1-2') whose lexicographic order and distinctness diverge
-    # from the relational cast. Any unparseable / out-of-range desc
-    # value raises → the statement falls back to a real scan.
-    _PART_VALUE_KEYS = {
-        "tinyint": lambda v: _int_desc(v, 8),
-        "smallint": lambda v: _int_desc(v, 16),
-        "int": lambda v: _int_desc(v, 32),
-        "integer": lambda v: _int_desc(v, 32),
-        "bigint": lambda v: _int_desc(v, 64),
-        "long": lambda v: _int_desc(v, 64),
-        "date": _date_desc, "string": str,
-    }
-
-    @staticmethod
-    def _part_sum_files(files, col: str, key_fn) -> tuple | None:
-        """Exact ``(sum, nonnull, Σ|value|)`` of an INT-FAMILY
-        range-partition column over a live-file list: the desc IS the
-        value, so the sum is ``Σ typed(desc) × num_rows`` over
-        non-sentinel partitions (the NULL-sentinel partition holds SQL
-        NULLs — contributes nothing to SUM/AVG). Sound under the
-        shared provable-snapshot gate for the same reason COUNT(*) is:
-        at most one generation per scoped PK bucket, so ``num_rows``
-        sums to the relational row count. ``Σ|value|`` feeds AVG's
-        2^53 double-accumulation proof (it bounds every partial sum in
-        any execution order). ``None`` when a file predates num_rows
-        recording or a desc value is outside the canonical typed
-        grammar (→ fall back to a scan)."""
-        from lakesoul_spark.io import partition as part_enc
-
-        total = nonnull = bound = 0
-        for f in files:
-            if f.num_rows < 0:
-                return None
-            v = part_enc.parse_desc(f.partition_desc).get(col)
-            if v is None:
-                continue
-            try:
-                tv = key_fn(v)
-            except (TypeError, ValueError):
-                return None
-            total += tv * f.num_rows
-            bound += abs(tv) * f.num_rows
-            nonnull += f.num_rows
-        return (total, nonnull, bound)
-
-    @staticmethod
-    def _part_rows_by_desc(files) -> dict | None:
-        """Total live rows per partition desc over a (scoped, provable)
-        file list — ``None`` when any file predates the num_rows-
-        recording writer. A partition contributes its desc VALUE to
-        MIN/MAX/COUNT(DISTINCT) only while it holds >0 rows."""
-        rows: dict = {}
-        for f in files:
-            if f.num_rows < 0:
-                return None
-            rows[f.partition_desc] = (
-                rows.get(f.partition_desc, 0) + f.num_rows)
-        return rows
-
-    def _try_metadata_aggs(self, spark: SparkSession, m) -> DataFrame | None:
-        """Resolve a SELECT of only ``COUNT(*)``/``COUNT(col)``/
-        ``MIN``/``MAX``/``SUM``/``AVG(col)`` items against commit-log
-        metadata. Returns the one-row result as a VALUES-backed
-        LocalTableScan (collect launches no job), or ``None`` whenever
-        ANY item is unprovable — unknown table, non-agg item,
-        string/float/decimal min/max without writer-computed exact
-        extrema (footer strings may be truncated, footer floats
-        NaN-lossy), SUM outside integer/decimal, AVG outside the
-        integer family or past the 2^53 double-accumulation proof,
-        CDC / churned tables, or a WHERE the partition pruner refuses.
-        Timestamp extrema render as Z-suffixed literals, exact in any
-        session timezone. Output column names match
-        the relational fallback's auto-aliases — ``count(1)``, and
-        otherwise the function lowercased with the argument in the
-        QUERY's casing (backticks stripped) — so the schema never
-        depends on which path answered."""
-        items = [s.strip() for s in m.group("items").split(",")]
-        parsed = []
-        for it in items:
-            im = self._META_AGG_RE.match(it)
-            if im is None:
-                return None
-            if im.group(5):  # COUNT(DISTINCT col) — group 5 = USER casing
-                parsed.append(("cntd", im.group(5), im.group(6)))
-            elif im.group(2):  # MIN/MAX — group(3) keeps the USER casing
-                parsed.append((im.group(2).lower(), im.group(3),
-                               im.group(4)))
-            else:
-                parsed.append(("count", None, im.group(1)))
-        ns, name = self._split_name(m.group("tbl"))
-        if not self.table_exists(name, ns):
-            return None
-        t = self.get_table(spark, name, ns)
-        if m.group("ver") is not None:
-            t = LakeSoulTable.for_path_snapshot(
-                spark, t.path, version=int(m.group("ver"))
-            )
-        elif m.group("ts") is not None:
-            # epoch millis or a quoted ISO datetime (naive = UTC) —
-            # the same literal grammar _register_time_travel accepts
-            t = LakeSoulTable.for_path_snapshot(
-                spark, t.path,
-                end_ts_ms=_parse_ts_literal(m.group("ts").strip("'")),
-            )
-        fields, ambiguous, case_sensitive = self._schema_index(spark, t)
-        # resolve the snapshot ONCE per statement: every item reads the
-        # same table version, so a concurrent commit can never produce
-        # a row mixing two versions (the relational path's guarantee)
-        snap = t._provable_snapshot(m.group("where"))
-        if snap is None:
-            return None
-        sel = []
-        mm_cache: dict[str, tuple] = {}
-        prows: dict | None = None
-        for fn, col, alias in parsed:
-            if fn == "count" and col is None:
-                n = t._count_from(snap)
-                if n is None:
-                    return None
-                # Spark's analyzer rewrites count(*) to count(1) and
-                # auto-aliases it "count(1)"
-                sel.append(f"CAST({int(n)} AS BIGINT) AS "
-                           f"`{alias or 'count(1)'}`")
-                continue
-            key = col if case_sensitive else col.lower()
-            if key in ambiguous:
-                return None
-            f = fields.get(key)
-            if f is None:
-                return None
-            st = f.dataType.simpleString()
-            if fn == "cntd" and f.name not in t.info.range_partitions:
-                return None  # data-column DISTINCT needs a real scan
-            if f.name in t.info.range_partitions and fn in (
-                    "cntd", "min", "max"):
-                # desc-materialized values: the scoped snapshot's
-                # partition descs ARE the column's value set — a
-                # partition contributes while it holds >0 rows (exact
-                # under the provable-snapshot gate), so MAX(day) /
-                # COUNT(DISTINCT day) — the most common freshness
-                # probes — cost one driver-side metadata pass
-                key_fn = self._PART_VALUE_KEYS.get(st)
-                if key_fn is None:
-                    return None
-                if prows is None:
-                    prows = self._part_rows_by_desc(snap.files)
-                if prows is None:
-                    return None
-                from lakesoul_spark.io import partition as part_enc
-
-                raw = {part_enc.parse_desc(d).get(f.name)
-                       for d, n in prows.items() if n > 0} - {None}
-                try:
-                    # TYPED values: distinct desc encodings of one
-                    # typed value (imported '01' vs written '1') must
-                    # collapse exactly as the relational cast does
-                    vals = {key_fn(v) for v in raw}
-                except (TypeError, ValueError):
-                    return None  # unparseable desc value: fall back
-                if fn == "cntd":
-                    sel.append(f"CAST({len(vals)} AS BIGINT) AS "
-                               f"`{alias or f'count(DISTINCT {col})'}`")
-                    continue
-                # value renders go through a string cast (or nullif):
-                # relational MIN/MAX is nullable=True and the schema
-                # must not depend on which path answered
-                if not vals:
-                    lit = f"CAST(NULL AS {st.upper()})"
-                elif st == "date":
-                    v = (min if fn == "min" else max)(vals)
-                    lit = f"CAST('{v}' AS DATE)"
-                elif st == "string":
-                    lit = _nullable_str_lit(
-                        (min if fn == "min" else max)(vals))
-                else:
-                    v = (min if fn == "min" else max)(vals)
-                    lit = f"CAST('{int(v)}' AS {st.upper()})"
-                sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-                continue
-            if fn == "count":
-                # COUNT(col) = Σ per-file nonnull (any stats-column
-                # type; range-partition columns count via the desc)
-                n = t._count_col_from(snap, f.name)
-                if n is None:
-                    return None
-                sel.append(f"CAST({int(n)} AS BIGINT) AS "
-                           f"`{alias or f'count({col})'}`")
-                continue
-            if fn == "avg":
-                if f.name in t.info.range_partitions:
-                    # desc-derived: avg = Σ value×rows / Σ rows, exact
-                    # in Spark's double accumulation under the 2^53
-                    # Σ|value| bound (int family only — Spark coerces
-                    # other types through casts this path won't mimic)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    kf = self._PART_VALUE_KEYS.get(st)
-                    r = kf and self._part_sum_files(snap.files,
-                                                    f.name, kf)
-                    if not r or r[2] >= 2 ** 53:
-                        return None
-                    total, nonnull, _b = r
-                    lit = ("CAST(NULL AS DOUBLE)" if nonnull == 0 else
-                           f"CAST('{float(total) / nonnull!r}' "
-                           f"AS DOUBLE)")
-                    sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                    continue
-                if st.startswith("decimal("):
-                    # exact decimal AVG from the recorded exact sums +
-                    # nonnull counts (result type decimal(p+4,s+4),
-                    # HALF_UP — proof in _avg_dec_files)
-                    r = t._avg_dec_from(snap, f.name, st)
-                    if r is None:
-                        return None
-                    v, rt = r
-                    lit = (f"CAST(NULL AS {rt.upper()})" if v is None
-                           else f"CAST('{v}' AS {rt.upper()})")
-                    sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                    continue
-                r = t._avg_from(snap, f.name)
-                if r is None:
-                    return None
-                v = r[0]
-                # repr(float) is the shortest round-trip decimal and
-                # Spark's string→double cast is correctly rounded, so
-                # the literal parses back to the identical double
-                lit = ("CAST(NULL AS DOUBLE)" if v is None
-                       else f"CAST('{v!r}' AS DOUBLE)")
-                sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                continue
-            if fn == "sum":
-                if f.name in t.info.range_partitions:
-                    # desc-derived: sum = Σ value×rows (int family;
-                    # overflow refused through the shared result-type
-                    # bound, exactly like data-column sums)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    kf = self._PART_VALUE_KEYS.get(st)
-                    r = kf and self._part_sum_files(snap.files,
-                                                    f.name, kf)
-                    rr = r and self._sum_render((r[0], r[1]), st)
-                    if not rr:
-                        return None
-                    v, rt = rr
-                    lit = (f"CAST(NULL AS {rt})" if v is None
-                           else f"CAST('{v}' AS {rt})")
-                    sel.append(f"{lit} AS `{alias or f'sum({col})'}`")
-                    continue
-                lit = self._sum_literal(t, snap, f.name, st)
-                if lit is None:
-                    return None
-                sel.append(f"{lit} AS `{alias or f'sum({col})'}`")
-                continue
-            kind = ("str" if st == "string"
-                    else "dec" if st.startswith("decimal(")
-                    else "flt" if st in ("float", "double")
-                    else None)
-            if kind is not None:
-                # exact extrema recorded by the writer from the column
-                # VALUES (footer string stats may be truncated
-                # prefixes, float footer stats may omit NaN — valid
-                # bounds, never claimed-exact extrema)
-                if col not in mm_cache:
-                    mm = t._minmax_exact_from(snap, f.name, kind)
-                    if mm is None:
-                        return None
-                    mm_cache[col] = mm
-                v = mm_cache[col][0 if fn == "min" else 1]
-                if v is None:
-                    lit = f"CAST(NULL AS {st.upper()})"
-                elif kind == "str":
-                    lit = _nullable_str_lit(v)
-                elif kind == "dec":
-                    lit = f"CAST('{v}' AS {st.upper()})"
-                else:
-                    lit = f"CAST('{_flt_sql_str(v)}' AS {st.upper()})"
-                sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-                continue
-            cname = f.name
-            if cname not in mm_cache:
-                mm = t._minmax_from(snap, cname)
-                if mm is None:
-                    return None
-                mm_cache[cname] = mm
-            v = mm_cache[cname][0 if fn == "min" else 1]
-            # every render is a STRING cast: it parses to the same
-            # typed value as the bare literal form (a typed literal IS
-            # defined as the cast of its string) and, unlike a plain
-            # literal, analyzes as nullable=True — the relational
-            # MIN/MAX schema
-            if st == "date":
-                lit = f"CAST('{v}' AS DATE)"
-            elif st == "timestamp":
-                # micros-exact: stats encode naive-UTC ISO, and the
-                # explicit Z suffix pins the cast to that instant
-                # in EVERY session timezone (a bare string would be
-                # reinterpreted in the session zone; verified incl.
-                # pre-epoch values)
-                lit = f"CAST('{v}Z' AS TIMESTAMP)"
-            elif st == "timestamp_ntz":
-                lit = f"CAST('{v}' AS TIMESTAMP_NTZ)"
-            else:  # integer family (min_max_fast's type gate)
-                lit = f"CAST('{int(v)}' AS {st.upper()})"
-            # the fallback's auto-alias lowercases the function but
-            # keeps the QUERY's casing of the argument (backticks
-            # stripped) — replicate exactly so the schema never
-            # depends on which path answered
-            sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-        # a projection of literals over VALUES constant-folds into a
-        # LocalRelation → LocalTableScan; collect() launches no job
-        # (a bare SELECT of literals plans Scan OneRowRelation, which
-        # DOES run one)
-        return spark.sql(
-            "SELECT " + ", ".join(sel) + " FROM VALUES (0)"
-        )
+    _ITEM_RE = re.compile(r"^(.+?)(?:\s+AS\s+(\w+))?$", re.I | re.S)
+    _BARE_COL_RE = re.compile(r"^\s*`?(\w+)`?\s*$")
+    # spans Spark reads as string literals or quoted identifiers: the
+    # HAVING / ORDER BY rewrite never looks inside them
+    _OPAQUE_RE = re.compile(r"('[^']*'|\"[^\"]*\"|`[^`]*`)")
+    # the only words a '(' may follow in a HAVING / ORDER BY text the
+    # per-group relation evaluates — any other is a call G cannot
+    # answer like the table (an aggregate over an expression, a
+    # window, an unrecognized aggregate such as first(p))
+    _PAREN_WORDS = frozenset(
+        {"AND", "OR", "NOT", "IN", "BETWEEN", "CASE", "WHEN", "THEN",
+         "ELSE"})
+    # column-name prefix of G's aggregate and row-index columns
+    _G = "__lsagg"
+    _PART_VALUE_KEYS = _PART_VALUE_KEYS
 
     @staticmethod
     def _schema_index(spark: SparkSession, t):
-        """Case-folded column index shared by the metadata fast paths:
+        """Case-folded column index of the metadata fast path:
         ``(fields, ambiguous, case_sensitive)``. Two columns that
         collapse under case folding land in ``ambiguous`` — the
-        relational path would raise AMBIGUOUS_REFERENCE, so a fast
+        relational path would raise AMBIGUOUS_REFERENCE, so the fast
         path must refuse, never pick one."""
         from lakesoul_spark.io.writer import table_schema
 
@@ -1374,36 +1016,56 @@ class Catalog:
             fields[key] = f
         return fields, ambiguous, case_sensitive
 
-    _BARE_COL_RE = re.compile(r"^`?(\w+)`?(?:\s+AS\s+(\w+))?$", re.I)
-
     def _try_metadata_group_by(self, spark: SparkSession, m,
                                items_txt: str | None = None,
                                group_txt: str | None = None,
                                ) -> DataFrame | None:
-        """Resolve ``SELECT <group cols + COUNT/MIN/MAX/SUM items>
-        FROM t [WHERE partition-pred] GROUP BY <range-partition cols>``
-        from per-partition commit-log rows — the same metadata SHOW
-        PARTITIONS EXTENDED proves, shaped as a grouped result. Zero
-        scan jobs: groups are the scoped snapshot's partition descs
-        bucketed by the GROUP BY columns' parsed values, each
-        aggregate reads the group's per-file num_rows / [min,max] /
-        [sum,nonnull] entries, and the rows materialize as a
-        LocalRelation (``local_df``) with every column cast to the
-        relational result type. ``None`` — the never-wrong fallback —
-        whenever any piece is unprovable: a GROUP BY column that is
-        not a range partition (or an ordinal), an item outside the
-        provable aggregate family, a churned/CDC snapshot
-        (:meth:`LakeSoulTable._provable_snapshot` scoped by the
-        WHERE), a file missing a stat, or more groups than a
-        LocalRelation should carry. At 100 TB the per-partition
-        rollup a pipeline dashboard polls stops costing a corpus
-        scan. Reference: the PG-side per-partition stats of
-        PartitionInfo + CompactBucketIO.java:220-258."""
+        """Answer ``SELECT <range-partition cols + aggregates> FROM t
+        [WHERE partition-pred] [GROUP BY <range-partition cols>
+        [HAVING …] [ORDER BY …] [LIMIT n]]`` from commit-log metadata
+        with zero scan jobs, or ``None`` — the never-wrong fallback to
+        the relational path. A SELECT without GROUP BY is a GROUP BY
+        over zero columns: exactly one group holding every scoped
+        file (possibly none).
+
+        The engine computes only what the commit log knows: the
+        groups are the scoped snapshot's partition descs bucketed by
+        the typed GROUP BY values, and every recognized aggregate call
+        in SELECT, HAVING and ORDER BY is one :meth:`LakeSoulTable.
+        _agg_fold` value per group. Those values form G, one typed
+        row per group — a LocalRelation. Spark evaluates everything
+        above them: the HAVING text (aggregate calls replaced by G's
+        columns) is a Filter over G, ORDER BY keys are a projection
+        collected with the filtered rows and sorted on the driver, and
+        the SELECT is a projection named with the relational
+        auto-aliases — so coercions, arithmetic, NULL logic and
+        errors are Spark's own, and collecting launches no job.
+
+        ``None`` whenever G could answer differently from the table: a
+        GROUP BY column that is not a range partition (or an
+        ordinal), an item outside the recognized aggregates, an
+        unprovable fold (churned/CDC scope — :meth:`LakeSoulTable.
+        _provable_snapshot` — or a file missing a stat), a subquery or
+        any other call left in HAVING / ORDER BY, an ORDER BY
+        ordinal, an output alias naming a grouping column, more
+        groups than a LocalRelation should carry, or an
+        AnalysisException from Spark over G. Spark's analyzer rejects
+        a HAVING over an unselected aggregate or grouping column
+        combined with an aggregate ORDER BY item, so that shape
+        refuses too and the relational path raises the error. At
+        100 TB the per-partition rollup a pipeline dashboard polls
+        stops costing a corpus scan. Reference: the PG-side
+        per-partition stats of PartitionInfo +
+        CompactBucketIO.java:220-258."""
+        from pyspark.errors import AnalysisException
+
         from lakesoul_spark.functions.local_df import (
-            MAX_LOCAL_ROWS, local_df,
+            MAX_LOCAL_ROWS, MAX_LOCAL_SCALARS, values_sql,
         )
         from lakesoul_spark.io import partition as part_enc
 
+        if self._G in m.string.lower():
+            return None  # G's own column names are not the table's
         ns, name = self._split_name(m.group("tbl"))
         if not self.table_exists(name, ns):
             return None
@@ -1421,1318 +1083,230 @@ class Catalog:
             )
         info = t.info
         fields, ambiguous, case_sensitive = self._schema_index(spark, t)
-        rset = {c if case_sensitive else c.lower(): c
-                for c in info.range_partitions}
 
-        def _range_col(txt: str) -> str | None:
-            key = txt if case_sensitive else txt.lower()
-            if key in ambiguous:
-                return None
-            return rset.get(key)
+        def fold_case(s: str) -> str:
+            return s if case_sensitive else s.lower()
 
-        gcols: list[str] = []
-        for g in (s.strip() for s in (group_txt or m.group("gby")).split(",")):
+        def field(txt: str):
+            key = fold_case(txt)
+            return None if key in ambiguous else fields.get(key)
+
+        gcols: list = []
+        gtxt = group_txt or m.group("gby")
+        for g in gtxt.split(",") if gtxt else ():
             gm = self._BARE_COL_RE.match(g)
-            if gm is None or gm.group(2) or gm.group(1).isdigit():
-                return None  # ordinals/expressions: not representable
-            rc = _range_col(gm.group(1))
-            if rc is None or rc in gcols:
-                return None  # non-partition or duplicate group col
-            st = fields[rc if case_sensitive
-                        else rc.lower()].dataType.simpleString()
-            if self._PART_VALUE_KEYS.get(st) is None:
-                return None  # no canonical typed form: fall back
-            gcols.append(rc)
-
-        # (kind, ...) per SELECT item, in order
-        parsed: list[tuple] = []
-        for it in (s.strip() for s in (items_txt or m.group("items")).split(",")):
-            im = self._META_AGG_RE.match(it)
-            if im is not None:
-                if im.group(5):
-                    parsed.append(("agg", "cntd", im.group(5),
-                                   im.group(6)))
-                elif im.group(2):
-                    parsed.append(("agg", im.group(2).lower(),
-                                   im.group(3), im.group(4)))
-                else:
-                    parsed.append(("agg", "count", None, im.group(1)))
-                continue
-            cm = self._BARE_COL_RE.match(it)
-            if cm is None or cm.group(1).isdigit():
+            f = gm and field(gm.group(1))
+            if (not f or f.name not in info.range_partitions
+                    or f.name in (c.name for c in gcols)
+                    or _PART_VALUE_KEYS.get(
+                        f.dataType.simpleString()) is None):
                 return None
-            rc = _range_col(cm.group(1))
-            if rc is None or rc not in gcols:
-                return None  # a bare item must be a grouping column
-            # a bare reference keeps the QUERY's casing as its output
-            # name (Spark resolves but does not re-case it)
-            parsed.append(("group", rc, cm.group(2) or cm.group(1)))
+            gcols.append(f)
+        gnames = {fold_case(c.name): c.name for c in gcols}
 
-        # HAVING / aggregate ORDER BY items resolve against grouping
-        # columns, output aliases, and aggregate expressions — hidden
-        # items are APPENDED to ``parsed`` (Spark computes an
-        # unselected HAVING/ORDER BY aggregate the same way) and ride
-        # the ordinary spec machinery below, so every provability gate
-        # applies to them too; the final projection drops them.
-        n_visible = len(parsed)
-        hav_ast = None
+        # (fn, folded column) -> (G column, result type, fold)
+        aggs: dict = {}
+
+        def agg_col(am) -> str | None:
+            fn, col = (am.group(1) or "count").lower(), am.group(2)
+            if am.group(3):
+                fn, col = "cntd", am.group(3)
+            key = (fn, col and fold_case(col))
+            if key not in aggs:
+                f = col and field(col)
+                agg = (f or col is None) and LakeSoulTable._agg_fold(
+                    info, fn, f or None)
+                if not agg:
+                    return None
+                aggs[key] = (f"{self._G}{len(aggs)}", *agg)
+            return aggs[key][0]
+
+        outs: list = []      # (G column, output name, is a count)
+        aliases: list = []   # (G column, explicit alias)
+        sel_gcols: set = set()
+        for it in (items_txt or m.group("items")).split(","):
+            im = self._ITEM_RE.match(it.strip())
+            if im is None:
+                return None
+            body, alias = im.groups()
+            am = self._AGG_CALL_RE.fullmatch(body)
+            if am is not None:
+                c = agg_col(am)
+                if c is None:
+                    return None
+                # the relational auto-alias: count(*) analyzes to
+                # count(1); otherwise the function lowercased with the
+                # argument in the QUERY's casing
+                auto = (f"count(DISTINCT {am.group(3)})" if am.group(3)
+                        else f"{am.group(1).lower()}({am.group(2)})"
+                        if am.group(2) else "count(1)")
+                outs.append((c, alias or auto,
+                             (am.group(1) or "count").lower() == "count"))
+            else:
+                bm = self._BARE_COL_RE.match(body)
+                c = bm and gnames.get(fold_case(bm.group(1)))
+                if not c:
+                    return None  # a bare item must be a grouping column
+                # a bare reference keeps the QUERY's casing as its
+                # output name (Spark resolves but does not re-case it)
+                outs.append((c, alias or bm.group(1), False))
+                sel_gcols.add(c)
+            if alias:
+                if fold_case(alias) in gnames:
+                    return None  # Spark and G resolve it differently
+                aliases.append((c, alias))
+        sel_aggs = {c for c, _n, _k in outs}
+
+        def rewrite(text: str, found: set) -> str | None:
+            """``text`` with each recognized aggregate call replaced by
+            its G column (collected in ``found``), or ``None`` when it
+            holds what G cannot answer like the table: a subquery, any
+            other call, or a backslash escape (whose literal bounds
+            depend on the parser mode)."""
+            if "\\" in text:
+                return None
+            parts = self._OPAQUE_RE.split(text)
+            for i in range(0, len(parts), 2):
+                code = parts[i]
+                if re.search(r"\bSELECT\b", code, re.I):
+                    return None
+                refs = [agg_col(am)
+                        for am in self._AGG_CALL_RE.finditer(code)]
+                if None in refs:
+                    return None
+                found.update(refs)
+                it = iter(refs)
+                code = self._AGG_CALL_RE.sub(
+                    lambda _am: f"`{next(it)}`", code)
+                if any(w.upper() not in self._PAREN_WORDS
+                       for w in re.findall(r"(\w+)\s*\(", code)):
+                    return None
+                parts[i] = code
+            return "".join(parts)
+
+        hav, hidden, hav_aggs, ord_aggs, keys = None, False, set(), set(), []
         if m.group("hav") is not None:
-            hav_ast = self._parse_having_text(
-                m.group("hav"), parsed, gcols, case_sensitive, rset,
-                ambiguous)
-            if hav_ast is None:
+            hav = rewrite(m.group("hav"), hav_aggs)
+            if hav is None:
                 return None
-        # hidden-item boundary: HAVING operands outside the SELECT
-        # (aggregates OR unselected grouping columns) were appended
-        # past n_visible by the parse above. An ("expr", …) item whose
-        # leaves all resolved to SELECTED items does NOT count —
-        # measured (r15): Spark resolves HAVING arithmetic over
-        # selected aggregates fine even combined with aggregate ORDER
-        # BY items; only a hidden LEAF (an unselected aggregate or
-        # grouping column) trips the analyzer rejection below
-        hav_hidden = any(p[0] != "expr" for p in parsed[n_visible:])
-        oby_txt = m.group("oby")
-        order_extra: dict[str, int] = {}
-        if oby_txt is not None:
-            oby_txt = self._rewrite_order_aggs(
-                oby_txt, parsed, gcols, case_sensitive, rset,
-                ambiguous, order_extra, n_visible=n_visible)
-            if oby_txt is None:
+            hav_words = {
+                fold_case(w) for code in self._OPAQUE_RE.split(hav)[::2]
+                for w in re.findall(r"\b(\w+)\b(?!\s*\()", code)}
+            hidden = bool(hav_aggs - sel_aggs) or any(
+                c not in sel_gcols for k, c in gnames.items()
+                if k in hav_words)
+        for item in _split_top(m.group("oby") or ""):
+            km = re.fullmatch(
+                r"(.+?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?",
+                item, re.I | re.S)
+            if km is None or km.group(1).strip().isdigit():
+                return None  # an ordinal
+            key = rewrite(km.group(1), ord_aggs)
+            if key is None:
                 return None
-            if hav_hidden and order_extra:
-                # ERROR PARITY (measured on Spark 4.1, r14): the
-                # analyzer rejects a HAVING that resolved to ANY
-                # hidden item (an unselected aggregate or grouping
-                # column) combined with ANY aggregate-expression
-                # ORDER BY item — even one the SELECT carries
-                # (UNSUPPORTED_EXPR_FOR_OPERATOR) — the hidden having
-                # column breaks sort-aggregate resolution. A HAVING
-                # over selected outputs with hidden sort aggregates
-                # resolves fine (and is answered below), as does a
-                # hidden HAVING with alias/plain ORDER BY items —
-                # never answer the one combination Spark errors on
-                return None
+            desc = (km.group(2) or "").strip().upper() == "DESC"
+            nulls_first = (not desc if km.group(3) is None
+                           else "FIRST" in km.group(3).upper())
+            keys.append((key, desc, nulls_first))
+        if hidden and ord_aggs:
+            return None
 
         snap = t._provable_snapshot(m.group("where"))
         if snap is None:
             return None
-        # every per-item gate resolves ONCE here — the per-group value
-        # functions below touch only the group's file list (no
-        # table_info re-reads inside the group loop; this path's whole
-        # point is one driver-side metadata pass)
-        defaults = info.column_defaults()
-        range_set = set(info.range_partitions)
-
+        groups: dict = {(): snap.files} if not gcols else {}
         # bucket by the TYPED value, not the raw desc string: two
         # encodings of one typed value (e.g. 'p=01' from an imported
         # hive layout and 'p=1' from this writer, both int 1) must land
         # in ONE group, exactly as the relational cast merges them
-        gconv = [self._PART_VALUE_KEYS[
-            fields[c if case_sensitive
-                   else c.lower()].dataType.simpleString()]
-            for c in gcols]
-        groups: dict[tuple, list] = {}
-        for f in snap.files:
+        kfs = [_PART_VALUE_KEYS[c.dataType.simpleString()] for c in gcols]
+        for f in snap.files if gcols else ():
             vals = part_enc.parse_desc(f.partition_desc)
             try:
-                key = tuple(
-                    None if vals.get(c) is None else conv(vals.get(c))
-                    for c, conv in zip(gcols, gconv))
+                key = tuple(None if vals.get(c.name) is None
+                            else kf(vals[c.name])
+                            for c, kf in zip(gcols, kfs))
             except (TypeError, ValueError):
                 return None  # unparseable desc value: fall back
             groups.setdefault(key, []).append(f)
-        # relational GROUP BY emits a group only where ≥1 live row
-        # exists: a zero-row desc (all rows deleted, an empty write)
-        # must not fabricate one, and a file that predates num_rows
-        # recording can prove neither way — refuse the statement
-        for key in list(groups):
-            n = 0
-            for f in groups[key]:
-                if f.num_rows < 0:
-                    return None
-                n += f.num_rows
-            if n == 0:
-                del groups[key]
-        if len(groups) > MAX_LOCAL_ROWS:
+        if gcols:
+            # relational GROUP BY emits a group only where ≥1 live row
+            # exists; a file predating num_rows recording can prove
+            # neither way — refuse the statement
+            n_rows = {k: LakeSoulTable._count_files(fs)
+                      for k, fs in groups.items()}
+            if None in n_rows.values():
+                return None
+            groups = {k: fs for k, fs in groups.items() if n_rows[k]}
+        cols = ([(c.name, c.dataType.simpleString()) for c in gcols]
+                + [(c, rt) for c, rt, _f in aggs.values()]
+                + [(f"{self._G}_i", "int")])
+        if (len(groups) > MAX_LOCAL_ROWS
+                or len(groups) * len(cols) > MAX_LOCAL_SCALARS):
             return None  # past the LocalRelation budget a scan is fine
-
-        # column spec per item: carrier DDL type for local_df, a final
-        # cast (None = carrier already IS the result type), the output
-        # name, and a per-group value function
-        specs: list[tuple] = []
-        for idx, p in enumerate(parsed):
-            cname = f"c{idx}"
-            if p[0] == "group":
-                _, rc, out = p
-                st = fields[rc if case_sensitive
-                            else rc.lower()].dataType.simpleString()
-                gi = gcols.index(rc)
-                specs.append((cname, "string", st, out,
-                              lambda key, gf, gi=gi:
-                              None if key[gi] is None else str(key[gi])))
-                continue
-            if p[0] == "expr":
-                # hidden arithmetic over earlier operands (their spec
-                # entries already exist — leaves resolve before the
-                # expr item is appended)
-                es = self._expr_spec(p[1], specs)
-                if es is None:
-                    return None
-                carrier, cast_to, efv = es
-                specs.append((cname, carrier, cast_to, p[3], efv))
-                continue
-            _, fn, col, alias = p
-            if fn == "count" and col is None:
-                def _cnt(key, gf):
-                    n = LakeSoulTable._count_files(gf)
-                    # COUNT is never NULL relationally: an unprovable
-                    # group refuses the whole statement, never guesses
-                    return _REFUSE if n is None else int(n)
-                specs.append((cname, "bigint", None,
-                              alias or "count(1)", _cnt))
-                continue
-            f = fields.get(col if case_sensitive else col.lower())
-            if f is None or (col if case_sensitive
-                             else col.lower()) in ambiguous:
-                return None
-            st = f.dataType.simpleString()
-            out = alias or f"{fn}({col})"
-            has_default = defaults.get(f.name) is not None
-            if fn == "cntd" and f.name not in range_set:
-                return None  # data-column DISTINCT needs a real scan
-            if f.name in range_set and fn in ("cntd", "min", "max"):
-                # desc-materialized values per group (a group keyed by
-                # a SUBSET of the partition columns may span descs)
-                pk_fn = self._PART_VALUE_KEYS.get(st)
-                if pk_fn is None:
-                    return None
-                if fn == "cntd":
-                    out = alias or f"count(DISTINCT {col})"
-
-                def _pvals(gf, _c=f.name, _k=pk_fn):
-                    prows = self._part_rows_by_desc(gf)
-                    if prows is None:
-                        return None
-                    raw = {part_enc.parse_desc(d).get(_c)
-                           for d, n in prows.items() if n > 0} - {None}
-                    try:
-                        # typed: duplicate desc encodings collapse
-                        return {_k(v) for v in raw}
-                    except (TypeError, ValueError):
-                        return None
-
-                if fn == "cntd":
-                    def _cd(key, gf, _pv=_pvals):
-                        vals = _pv(gf)
-                        return _REFUSE if vals is None else len(vals)
-                    specs.append((cname, "bigint", None, out, _cd))
-                    continue
-
-                def _mmd(key, gf, _fn=fn, _pv=_pvals):
-                    vals = _pv(gf)
-                    if vals is None:
-                        return _REFUSE
-                    if not vals:
-                        return None  # no live rows in scope: SQL NULL
-                    return str((min if _fn == "min" else max)(vals))
-                specs.append((cname, "string", st, out, _mmd))
-                continue
-            if fn == "count":
-                # COUNT(col): per-file nonnull counts; range-partition
-                # columns count via the group's descs (non-sentinel
-                # partitions contribute num_rows)
-                if f.name in range_set:
-                    def _cntp(key, gf, _c=f.name):
-                        total = 0
-                        for ff in gf:
-                            if ff.num_rows < 0:
-                                return _REFUSE
-                            v = part_enc.parse_desc(
-                                ff.partition_desc).get(_c)
-                            total += ff.num_rows if v is not None else 0
-                        return total
-                    specs.append((cname, "bigint", None, out, _cntp))
-                    continue
-
-                def _cntc(key, gf, _c=f.name, _d=has_default):
-                    n = LakeSoulTable._count_col_files(gf, _c, _d)
-                    return _REFUSE if n is None else int(n)
-                specs.append((cname, "bigint", None, out, _cntc))
-                continue
-            if fn == "avg":
-                if f.name in range_set:
-                    # desc-derived per group: Σ value×rows / Σ rows,
-                    # exact under the 2^53 Σ|value| bound (int family)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    pk_fn2 = self._PART_VALUE_KEYS.get(st)
-                    if pk_fn2 is None:
-                        return None
-
-                    def _avgp(key, gf, _c=f.name, _k=pk_fn2):
-                        r = self._part_sum_files(gf, _c, _k)
-                        if r is None or r[2] >= 2 ** 53:
-                            return _REFUSE
-                        total, nonnull, _b = r
-                        if nonnull == 0:
-                            return None  # all rows NULL: SQL NULL
-                        return repr(float(total) / nonnull)
-                    specs.append((cname, "string", "double", out,
-                                  _avgp))
-                    continue
-                if st.startswith("decimal("):
-                    # exact per-group decimal AVG (result type
-                    # decimal(p+4,s+4) HALF_UP; proof in
-                    # _avg_dec_files); the p≤34 type gate is
-                    # group-independent — check it once here
-                    if int(st[len("decimal("):-1].split(",")[0]) > 34:
-                        return None
-                    drt = Catalog._avg_dec_result_type(st)
-
-                    def _avgd(key, gf, _c=f.name, _d=has_default,
-                              _st=st):
-                        r = LakeSoulTable._avg_dec_files(
-                            gf, _c, _d, _st)
-                        if r is None:
-                            return _REFUSE
-                        return r[0]
-                    specs.append((cname, "string", drt, out, _avgd))
-                    continue
-                # integer family, with the per-group 2^53
-                # double-accumulation proof (see _avg_files)
-                if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                    return None
-
-                def _avg(key, gf, _c=f.name, _d=has_default):
-                    r = LakeSoulTable._avg_files(gf, _c, _d)
-                    if r is None:
-                        return _REFUSE
-                    # repr round-trips through the string→double cast
-                    return None if r[0] is None else repr(r[0])
-                specs.append((cname, "string", "double", out, _avg))
-                continue
-            if fn == "sum":
-                if f.name in range_set:
-                    # desc-derived per group: Σ value×rows (int
-                    # family; shared overflow bound via _sum_render)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    pk_fn2 = self._PART_VALUE_KEYS.get(st)
-                    if pk_fn2 is None:
-                        return None
-
-                    def _sump(key, gf, _c=f.name, _k=pk_fn2):
-                        r = self._part_sum_files(gf, _c, _k)
-                        rr = r and self._sum_render((r[0], r[1]),
-                                                    "bigint")
-                        if not rr:
-                            return _REFUSE
-                        return rr[0]
-                    specs.append((cname, "string",
-                                  self._sum_result_type(st), out,
-                                  _sump))
-                    continue
-                if not (st in LakeSoulTable._SUM_EXACT_TYPES
-                        or st.startswith("decimal(")):
-                    return None
-                rt = self._sum_result_type(st)
-
-                def _sum(key, gf, _c=f.name, _st=st, _d=has_default):
-                    res = LakeSoulTable._sum_files(gf, _c, _d)
-                    if res is None:
-                        return _REFUSE
-                    r = self._sum_render(res, _st)
-                    return _REFUSE if r is None else r[0]
-                specs.append((cname, "string", rt, out, _sum))
-                continue
-            mm_kind = ("str" if st == "string"
-                       else "dec" if st.startswith("decimal(")
-                       else "flt" if st in ("float", "double")
-                       else None)
-            if mm_kind is not None and fn in ("min", "max"):
-                # exact extrema recorded by the writer from the
-                # column VALUES (footer string stats may be truncated
-                # prefixes, float footer stats may omit NaN — valid
-                # bounds, never claimed extrema)
-                def _mms(key, gf, _c=f.name, _fn=fn, _d=has_default,
-                         _k=mm_kind):
-                    mm = LakeSoulTable._minmax_exact_files(
-                        gf, _c, _d, _k)
-                    if mm is None:
-                        return _REFUSE
-                    v = mm[0 if _fn == "min" else 1]
-                    if v is None:
-                        return None  # provably all-null: SQL NULL
-                    if _k == "flt":
-                        return _flt_sql_str(v)
-                    return str(v) if _k == "dec" else v
-                specs.append((
-                    cname, "string",
-                    None if mm_kind == "str" else st, out, _mms))
-                continue
-            # min/max: exact-stats types only
-            if st not in LakeSoulTable._MINMAX_EXACT_TYPES:
-                return None
-
-            def _mm(key, gf, _c=f.name, _fn=fn,
-                    _z=(st == "timestamp")):
-                mm = LakeSoulTable._minmax_files(gf, _c)
-                if mm is None:
-                    return _REFUSE
-                v = str(mm[0 if _fn == "min" else 1])
-                # naive-UTC ISO carrier + Z suffix: the string→
-                # timestamp cast honors the zone, so the instant is
-                # session-timezone-independent
-                return v + "Z" if _z else v
-            specs.append((cname, "string", st, out, _mm))
-
-        order_spec = None
-        if oby_txt:
-            order_spec = self._parse_order_by(
-                oby_txt, specs, case_sensitive, extra=order_extra)
-            if order_spec is None:
-                return None  # unrepresentable ORDER BY: fall back
-        hav_pred = None
-        if hav_ast is not None:
-            hav_pred = self._hav_predicate(hav_ast, specs)
-            if hav_pred is None:
-                return None  # no provable comparison domain: fall back
-
         rows = []
-        for key in sorted(groups,
-                          key=lambda k: tuple((v is None, str(v))
-                                              for v in k)):
-            gf = groups[key]
-            row = []
-            for _, _, _, _, fv in specs:
-                v = (fv(key, gf, row)
-                     if getattr(fv, "_needs_row", False)
-                     else fv(key, gf))
-                if v is _REFUSE:
-                    return None
-                row.append(v)
-            rows.append(tuple(row))
+        for key in sorted(groups, key=lambda k: tuple(
+                (v is None, str(v)) for v in k)):
+            vals = [fold(groups[key]) for _c, _rt, fold in aggs.values()]
+            if _REFUSE in vals:
+                return None
+            rows.append((*key, *vals, len(rows)))
 
-        if hav_pred is not None:
-            # SQL filter semantics: a group survives only on TRUE
-            # (Kleene 3-valued — NULL comparisons drop the row), and
-            # HAVING applies BEFORE ORDER BY / LIMIT
-            rows = [r for r in rows if hav_pred(r) is True]
+        ddl = ", ".join(f"`{c}` {t}" for c, t in cols)
+        # relational MIN/MAX/SUM/AVG and group keys are nullable, COUNT
+        # is not: nullif / coalesce pin that schema whatever G holds
+        out_sql = ", ".join(
+            (f"coalesce(`{c}`, 0L)" if is_count else f"nullif(`{c}`, NULL)")
+            + f" AS `{out}`" for c, out, is_count in outs)
+        g = (f"(SELECT *{''.join(f', `{c}` AS `{a}`' for c, a in aliases)}"
+             f" FROM {values_sql(rows, ddl)}) AS g"
+             + (f" WHERE {hav}" if hav is not None else ""))
+        lim = m.group("lim")
+        try:
+            if not keys:
+                return spark.sql(f"SELECT {out_sql} FROM {g}"
+                                 + (f" LIMIT {lim}" if lim else ""))
+            kdf = spark.sql(f"SELECT `{self._G}_i`, "
+                            + ", ".join(k for k, _d, _n in keys)
+                            + f" FROM {g}")
+        except AnalysisException:
+            return None
+        order = self._sorted_indexes(kdf.collect(), keys)
+        if order is None:
+            return None
+        if lim:
+            order = order[:int(lim)]
+        return spark.sql(f"SELECT {out_sql} FROM "
+                         f"{values_sql([rows[i] for i in order], ddl)}")
 
-        if order_spec is not None:
-            # typed driver-side ORDER BY over the (≤MAX_LOCAL_ROWS)
-            # group rows: layered stable sorts, last item first
-            for idx, key_fn, desc, nulls_first in reversed(order_spec):
-                nb = (1 if nulls_first else 0) if desc \
-                    else (0 if nulls_first else 1)
-
-                def level_key(r, _i=idx, _k=key_fn, _nb=nb):
-                    v = _k(r[_i])
-                    if v is None:
-                        return (_nb, 0)
-                    return (1 - _nb, v)
-                try:
-                    rows.sort(key=level_key, reverse=desc)
-                except TypeError:
-                    return None  # unorderable carrier: fall back
-        if m.group("lim") is not None:
-            # LIMIT without ORDER BY keeps the deterministic group
-            # order — any n rows are a valid relational answer
-            rows = rows[:int(m.group("lim"))]
-
-        pdf = local_df(
-            spark, rows,
-            ", ".join(f"`{c}` {carrier}" for c, carrier, *_ in specs),
-        )
-        sel = []
-        for c, carrier, cast_to, out, _fv in specs[:n_visible]:
-            e = F.col(f"`{c}`")
-            if cast_to is not None:
-                e = e.cast(cast_to)
-            if carrier != "bigint":
-                # group keys and MIN/MAX/SUM/AVG are nullable=True in
-                # the relational plan (parquet scan columns and
-                # aggregates over them); the LocalRelation carrier may
-                # analyze non-nullable when no group happens to hold a
-                # NULL, so add nullability with an identity nullif
-                # (still collapses to LocalTableScan).
-                e = F.nullif(e, F.lit(None))
-            else:
-                # COUNT rides the bigint carrier and is non-nullable
-                # relationally; a ZERO-group result materializes as an
-                # empty LocalRelation whose columns analyze nullable —
-                # coalesce is a no-op on values (COUNT is never NULL)
-                # that pins the schema to the relational one
-                e = F.coalesce(e, F.lit(0).cast("bigint"))
-            sel.append(e.alias(out))
-        return pdf.select(*sel)
-
-    _ORDER_ITEM_RE = re.compile(
-        r"^`?(\w+)`?(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?$",
-        re.I,
-    )
-    # carrier-string → typed python sort key per result type family;
-    # ISO date/timestamp strings and UTF-8 strings already sort in
-    # value order (python str compares by codepoint == UTF-8 bytes)
-    _ORDER_KEY_CASTS = {
-        "tinyint": int, "smallint": int, "int": int, "integer": int,
-        "bigint": int, "long": int,
-        "date": str, "timestamp": str, "timestamp_ntz": str,
-        "string": str, "double": _dbl_order_key,
-        "float": _dbl_order_key,
-    }
-
-    @classmethod
-    def _parse_order_by(cls, text: str, specs, case_sensitive,
-                        extra: dict | None = None):
-        """ORDER BY items resolved against the SELECT output columns →
-        ``[(row_index, key_fn, desc, nulls_first)]``, or ``None`` for
-        anything not exactly representable (expressions, ordinals,
-        non-output columns, unorderable types) — the caller falls back
-        to the relational path. Spark defaults: ASC + NULLS FIRST;
-        DESC + NULLS LAST. ``extra`` maps placeholder names (from
-        :meth:`_rewrite_order_aggs` — aggregate items resolved to
-        possibly-hidden spec indexes) straight to spec positions."""
+    @staticmethod
+    def _sorted_indexes(krows, keys) -> list | None:
+        """G row indexes ordered by their Spark-evaluated ORDER BY
+        keys (``krows``: index, key values) with Spark's sort order:
+        ASC puts NULLs first and DESC last unless NULLS FIRST/LAST
+        says otherwise, and NaN sorts above every number. A sort over
+        a LocalRelation would launch jobs; at most MAX_LOCAL_ROWS rows
+        sort here instead. ``None`` for a key type with no driver
+        order (arrays, structs, maps)."""
+        import datetime
         import decimal
+        import math
 
-        by_name = {}
-        for i, (cname, carrier, cast_to, out, _fv) in enumerate(specs):
-            if out.startswith("__"):
-                # hidden machinery items (__havN/__hxN): reachable
-                # only via ``extra`` placeholders — a user-written
-                # ORDER BY naming one is an unresolved column in the
-                # relational plan and must refuse, never resolve here
-                continue
-            key = out if case_sensitive else out.lower()
-            if key in by_name:
-                by_name[key] = None  # ambiguous output name: refuse
-            else:
-                by_name[key] = (i, carrier, cast_to)
-        out_spec = []
-        for item in (s.strip() for s in text.split(",")):
-            im = cls._ORDER_ITEM_RE.match(item)
-            if im is None or im.group(1).isdigit():
+        orderable = (bool, int, float, str, bytes, bytearray,
+                     decimal.Decimal, datetime.date, datetime.timedelta)
+        rows = list(krows)
+        for j in range(len(keys), 0, -1):
+            _k, desc, nulls_first = keys[j - 1]
+            if any(r[j] is not None and not isinstance(r[j], orderable)
+                   for r in rows):
                 return None
-            if extra and im.group(1) in extra:
-                i2 = extra[im.group(1)]
-                hit = (i2, specs[i2][1], specs[i2][2])
-            else:
-                ref = (im.group(1) if case_sensitive
-                       else im.group(1).lower())
-                hit = by_name.get(ref)
-            if hit is None:
-                return None
-            i, carrier, cast_to = hit
-            rt = (cast_to or carrier).lower()
-            if rt.startswith("decimal("):
-                def key_fn(v):
-                    return None if v is None else decimal.Decimal(str(v))
-            else:
-                conv = cls._ORDER_KEY_CASTS.get(rt)
-                if conv is None:
-                    return None
-                def key_fn(v, _c=conv):
-                    return None if v is None else _c(v)
-            desc = (im.group(2) or "").upper() == "DESC"
-            nf = im.group(3)
-            nulls_first = (not desc) if nf is None \
-                else nf.upper() == "FIRST"
-            out_spec.append((i, key_fn, desc, nulls_first))
-        return out_spec or None
-
-    # ------------------------------------------------- HAVING tails
-    # (r13) HAVING on the GROUP BY fast path: atoms are
-    # <operand> <cmp> <literal> / <operand> IS [NOT] NULL — plus
-    # (r14) <operand> [NOT] BETWEEN <lit> AND <lit> and <operand>
-    # [NOT] IN (<lit>, …), both desugared onto the cmp machinery —
-    # composed with AND/OR/NOT and parentheses; operands are grouping
-    # columns, output aliases, or aggregate expressions of the
-    # provable family (Spark resolves ALL of these — measured —
-    # computing unselected aggregates as hidden columns, which is
-    # exactly what the hidden ``parsed`` items replicate). Anything
-    # else refuses → relational.
-
-    _HAV_LIT_INT = re.compile(r"^[+-]?\d+$")
-    _HAV_LIT_DEC = re.compile(r"^[+-]?(\d+\.\d*|\.\d+)$")
-    _HAV_LIT_DBL = re.compile(
-        r"^[+-]?(\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+[dD]?|[dD])$")
-    _HAV_LIT_STR = re.compile(r"^'([^'\\]*)'$", re.S)
-    _HAV_CMP_RE = re.compile(
-        r"^(?P<lhs>.+?)\s*(?P<op><=|>=|<>|!=|==|=|<|>)\s*(?P<lit>.+)$",
-        re.S)
-    _HAV_NULL_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+IS\s+(?P<neg>NOT\s+)?NULL$", re.I | re.S)
-    # r14: BETWEEN / IN-list atoms — desugared onto the cmp machinery
-    _HAV_BETWEEN_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+(?P<neg>NOT\s+)?BETWEEN\s+(?P<lo>.+?)"
-        r"\s+AND\s+(?P<hi>.+)$", re.I | re.S)
-    _HAV_IN_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+(?P<neg>NOT\s+)?IN\s*\((?P<list>.*)\)$",
-        re.I | re.S)
-
-    _HAV_LIT_DATE = re.compile(r"^DATE\s+'(\d{4}-\d{2}-\d{2})'$",
-                               re.I)
-
-    @classmethod
-    def _hav_literal(cls, lit: str):
-        """``(kind, value)`` of one comparison literal — exact
-        (int/bare-fractional, Spark parses those as DECIMALS),
-        double (scientific / D-suffixed), date (``DATE '…'`` in the
-        strict zero-padded ISO form — looser spellings refuse to the
-        fallback, which applies Spark's own cast), or str — ``None``
-        outside the grammar (escapes, column references)."""
-        lit = lit.strip()
-        if cls._HAV_LIT_INT.match(lit) or cls._HAV_LIT_DEC.match(lit):
-            return ("exact", lit)
-        if cls._HAV_LIT_DBL.match(lit):
-            return ("double", lit.rstrip("dD"))
-        dm = cls._HAV_LIT_DATE.match(lit)
-        if dm is not None:
-            return ("date", dm.group(1))
-        sm = cls._HAV_LIT_STR.match(lit)
-        if sm is None:
-            return None
-        return ("str", sm.group(1))
-
-    @staticmethod
-    def _parsed_out_name(p) -> str:
-        """Output name of one parsed item — the spec loop's auto-alias
-        formula, shared so HAVING/ORDER BY resolution and the built
-        specs can never disagree."""
-        if p[0] == "group":
-            return p[2]
-        _, fn, col, alias = p
-        if alias:
-            return alias
-        if fn == "count" and col is None:
-            return "count(1)"
-        if fn == "cntd":
-            return f"count(DISTINCT {col})"
-        return f"{fn}({col})"
-
-    def _resolve_having_operand(self, text: str, parsed: list,
-                                gcols: list, case_sensitive: bool,
-                                rset: dict, ambiguous) -> int | None:
-        """Operand text → index into ``parsed`` (appending a HIDDEN
-        item for an expression not in the SELECT); ``None`` = outside
-        the grammar (caller falls back). Resolution order mirrors
-        Spark: grouping columns and aggregate expressions first, then
-        output aliases; an operand matching two outputs refuses (the
-        relational path would raise AMBIGUOUS_REFERENCE — never
-        answer a statement Spark itself rejects)."""
-        text = text.strip()
-        im = self._META_AGG_RE.match(text)
-        if im is not None:
-            if im.group(1) or im.group(4) or im.group(6):
-                return None  # an alias inside an operand is not SQL
-            if im.group(5):
-                fnk, col = "cntd", im.group(5)
-            elif im.group(2):
-                fnk, col = im.group(2).lower(), im.group(3)
-            else:
-                fnk, col = "count", None
-            colk = (col if case_sensitive or col is None
-                    else col.lower())
-            for i, p in enumerate(parsed):
-                if p[0] != "agg" or p[1] != fnk:
-                    continue
-                pk = (p[2] if case_sensitive or p[2] is None
-                      else p[2].lower())
-                if pk == colk:
-                    return i
-            parsed.append(("agg", fnk, col, f"__hav{len(parsed)}"))
-            return len(parsed) - 1
-        bm = self._BARE_COL_RE.match(text)
-        if bm is None or bm.group(2) or bm.group(1).isdigit():
-            return None
-        key = bm.group(1) if case_sensitive else bm.group(1).lower()
-        if key in ambiguous:
-            return None
-        rc = rset.get(key)
-        if rc is not None and rc in gcols:
-            for i, p in enumerate(parsed):
-                if p[0] == "group" and p[1] == rc:
-                    return i
-            parsed.append(("group", rc, f"__hav{len(parsed)}"))
-            return len(parsed) - 1
-        if key.startswith("__"):
-            # hidden machinery names (__havN/__hxN) are not user
-            # addressables — an operand spelling one is an unresolved
-            # column in the relational plan (and a user alias that
-            # happens to start with '__' refuses into the fallback,
-            # which resolves it itself)
-            return None
-        hits = [i for i, p in enumerate(parsed)
-                if (self._parsed_out_name(p) if case_sensitive
-                    else self._parsed_out_name(p).lower()) == key]
-        return hits[0] if len(hits) == 1 else None
-
-    # ------------------------------------- arithmetic operand exprs
-    # (r15) HAVING / ORDER BY items may be ARITHMETIC over provable
-    # operands — ratios and sums of aggregates (sum(a)/count(*),
-    # sum(a)+sum(b)-count(*), avg chains) and comparisons between two
-    # operands — all derivable from the recorded exact stats. The
-    # replicated Spark 4.1 semantics (measured):
-    #   - int-family ÷ int-family and anything involving double is
-    #     DOUBLE IEEE arithmetic (bigint/bigint division IS double
-    #     division: float(a)/float(b) bit-for-bit);
-    #   - int-family +/- promotes to the wider operand type and, under
-    #     ANSI, ERRORS on overflow — a value outside the result type's
-    #     range REFUSES the statement so the relational path raises;
-    #   - division by zero ERRORS under ANSI — same refusal;
-    #   - decimal/float operands refuse (decimal precision algebra and
-    #     float32 rounding are not replicated — fall back);
-    #   - NULL operands propagate to NULL (dropped by HAVING, ordered
-    #     by the NULLS clause).
-
-    _INT_ARITH_BOUNDS = {
-        "tinyint": 1 << 7, "smallint": 1 << 15, "int": 1 << 31,
-        "integer": 1 << 31, "bigint": 1 << 63, "long": 1 << 63,
-    }
-
-    @classmethod
-    def _split_arith(cls, text: str) -> list | None:
-        """``"sum(a)/count(*) + x"`` → ``["sum(a)", "/", "count(*)",
-        "+", "x"]`` split at depth-0 unquoted +, -, / — ``None`` when
-        there is no operator (not an expression) or a piece is empty
-        (unary signs, trailing operators: refuse)."""
-        parts, buf, depth, i, n = [], "", 0, 0, len(text)
-        in_q = False
-        while i < n:
-            c = text[i]
-            if in_q:
-                buf += c
-                in_q = c != "'"
-            elif c == "'":
-                buf += c
-                in_q = True
-            elif c == "(":
-                depth += 1
-                buf += c
-            elif c == ")":
-                depth -= 1
-                buf += c
-            elif depth == 0 and c in "+-/":
-                if not buf.strip():
-                    return None  # unary / doubled operator
-                parts += [buf.strip(), c]
-                buf = ""
-            else:
-                buf += c
-            i += 1
-        if depth != 0 or in_q or not buf.strip() or len(parts) < 2:
-            return None
-        parts.append(buf.strip())
-        return parts
-
-    def _resolve_operand_expr(self, text: str, parsed: list,
-                              gcols: list, case_sensitive: bool,
-                              rset: dict, ambiguous,
-                              visible_only: int | None = None
-                              ) -> int | None:
-        """Operand text → index into ``parsed``: a simple operand via
-        :meth:`_resolve_having_operand`, else an ARITHMETIC expression
-        over simple operands appended as a hidden ``("expr", node)``
-        item (node = leaf index | ("arith", op, l, r), '/' binding
-        tighter than +/-, left-associative). ``visible_only`` bounds
-        every LEAF to the SELECT items — the measured Spark-4.1 rule
-        for aggregate-expression ORDER BY items, whose leaves must
-        resolve against the project output (an unselected aggregate
-        leaf is an analyzer error the fallback reproduces)."""
-        idx = self._resolve_having_operand(
-            text, parsed, gcols, case_sensitive, rset, ambiguous)
-        if idx is not None:
-            if visible_only is not None and idx >= visible_only:
-                return None
-            return idx
-        parts = self._split_arith(text)
-        if parts is None:
-            return None
-        leaves = []
-        for j in range(0, len(parts), 2):
-            li = self._resolve_having_operand(
-                parts[j], parsed, gcols, case_sensitive, rset,
-                ambiguous)
-            if li is None or (visible_only is not None
-                              and li >= visible_only):
-                return None
-            leaves.append(li)
-        # precedence: fold '/' chains into terms first, then +/-
-        terms: list = [leaves[0]]
-        ops: list = []
-        for j, op in enumerate(parts[1::2]):
-            nxt = leaves[j + 1]
-            if op == "/":
-                terms[-1] = ("arith", "/", terms[-1], nxt)
-            else:
-                ops.append(op)
-                terms.append(nxt)
-        node = terms[0]
-        for op, t in zip(ops, terms[1:]):
-            node = ("arith", op, node, t)
-        parsed.append(("expr", node, None, f"__hx{len(parsed)}"))
-        return len(parsed) - 1
-
-    @classmethod
-    def _arith_result_type(cls, op: str, lt: str, rt: str):
-        """Spark's result type for one arithmetic step, or ``None``
-        for any pairing outside the replicated set (decimals, float32,
-        strings, dates — fall back)."""
-        ints = cls._INT_ARITH_BOUNDS
-        num = lambda t: t in ints or t == "double"  # noqa: E731
-        if not (num(lt) and num(rt)):
-            return None
-        if op == "/" or lt == "double" or rt == "double":
-            return "double"
-        return lt if ints[lt] >= ints[rt] else rt
-
-    def _expr_spec(self, node, specs):
-        """Spec entry pieces for an ``("expr", node)`` parsed item:
-        ``(carrier, cast_to, value_fn)`` with the value_fn taking the
-        row-so-far (leaf indices are always lower — operands resolve
-        before the expr is appended), or ``None`` when any type step
-        is outside the replicated arithmetic."""
-        def ntype(nd):
-            if isinstance(nd, int):
-                return (specs[nd][2] or specs[nd][1]).lower()
-            _, op, l, r = nd
-            lt, rt = ntype(l), ntype(r)
-            if lt is None or rt is None:
-                return None
-            return self._arith_result_type(op, lt, rt)
-
-        rt = ntype(node)
-        if rt is None:
-            return None
-        ints = self._INT_ARITH_BOUNDS
-
-        def ev(nd, row):
-            if isinstance(nd, int):
-                v = row[nd]
-                if v is None or v is _REFUSE:
-                    return v
-                t = (specs[nd][2] or specs[nd][1]).lower()
-                return float(v) if t == "double" else int(v)
-            _, op, l, r = nd
-            lv, rv = ev(l, row), ev(r, row)
-            if lv is _REFUSE or rv is _REFUSE:
-                return _REFUSE
-            if lv is None or rv is None:
-                return None
-            t = ntype(nd)
-            if t == "double":
-                lf, rf = float(lv), float(rv)
-                if op == "/":
-                    if rf == 0.0:
-                        # ANSI DIVIDE_BY_ZERO: the relational path
-                        # raises — never answer what Spark rejects
-                        return _REFUSE
-                    return lf / rf
-                return lf + rf if op == "+" else lf - rf
-            res = lv + rv if op == "+" else lv - rv
-            if not (-ints[t] <= res < ints[t]):
-                return _REFUSE  # ANSI overflow: the fallback raises
-            return res
-
-        carrier = "string" if rt == "double" else "bigint"
-        cast_to = "double" if rt == "double" else (
-            None if rt in ("bigint", "long") else rt)
-
-        def fv(key, gf, row):
-            v = ev(node, row)
-            if v is _REFUSE or v is None:
-                return v
-            return repr(v) if rt == "double" else int(v)
-
-        fv._needs_row = True
-        return carrier, cast_to, fv
-
-    @staticmethod
-    def _hav_tokens(text: str) -> list | None:
-        """HAVING text → tokens: LP/RP (top-level grouping parens),
-        AND/OR/NOT keywords, and ATOM runs. Parens inside an already-
-        started atom (``count(*)``) and anything inside quotes stay in
-        the atom; an unbalanced tail returns None."""
-        toks: list = []
-        buf = ""
-        depth = 0
-        i, n = 0, len(text)
-
-        def flush():
-            nonlocal buf
-            if buf.strip():
-                toks.append(("ATOM", buf.strip()))
-            buf = ""
-
-        while i < n:
-            c = text[i]
-            if c == "'":
-                j = text.find("'", i + 1)
-                if j < 0:
-                    return None
-                buf += text[i:j + 1]
-                i = j + 1
-                continue
-            if c == "(":
-                if not buf.strip():
-                    flush()
-                    toks.append(("LP", "("))
-                else:
-                    depth += 1
-                    buf += c
-                i += 1
-                continue
-            if c == ")":
-                if depth == 0:
-                    flush()
-                    toks.append(("RP", ")"))
-                else:
-                    depth -= 1
-                    buf += c
-                i += 1
-                continue
-            if depth == 0:
-                mkw = re.match(r"(AND|OR|NOT)\b", text[i:], re.I)
-                if mkw and (i == 0 or not (text[i - 1].isalnum()
-                                           or text[i - 1] == "_")):
-                    kw = mkw.group(1).upper()
-                    # a NOT after atom text belongs to the atom (`IS
-                    # NOT NULL`, `NOT BETWEEN`, `NOT IN`): boolean NOT
-                    # only ever starts a factor, where the buffer is
-                    # empty (r14)
-                    if kw == "NOT" and buf.strip():
-                        buf += mkw.group(1)
-                        i += len(mkw.group(1))
-                        continue
-                    # the first AND after an unclosed BETWEEN is the
-                    # range separator, not a boolean conjunction
-                    # (quoted spans stripped so a 'BETWEEN' inside a
-                    # string literal can't absorb a real AND) (r14)
-                    if kw == "AND" and re.search(
-                            r"\bBETWEEN\b(?!.*\bAND\b)",
-                            re.sub(r"'[^']*'", "", buf),
-                            re.I | re.S):
-                        buf += mkw.group(1)
-                        i += len(mkw.group(1))
-                        continue
-                    flush()
-                    toks.append((kw, mkw.group(1)))
-                    i += len(mkw.group(1))
-                    continue
-            buf += c
-            i += 1
-        if depth != 0:
-            return None
-        flush()
-        return toks
-
-    def _parse_having_text(self, text, parsed, gcols, case_sensitive,
-                           rset, ambiguous):
-        toks = self._hav_tokens(text)
-        if toks is None:
-            return None
-        ctx = (parsed, gcols, case_sensitive, rset, ambiguous)
-        ast, pos = self._hav_expr(toks, 0, ctx)
-        if ast is None or pos != len(toks):
-            return None
-        return ast
-
-    def _hav_expr(self, toks, pos, ctx):
-        left, pos = self._hav_term(toks, pos, ctx)
-        if left is None:
-            return None, pos
-        while pos < len(toks) and toks[pos][0] == "OR":
-            right, pos = self._hav_term(toks, pos + 1, ctx)
-            if right is None:
-                return None, pos
-            left = ("or", left, right)
-        return left, pos
-
-    def _hav_term(self, toks, pos, ctx):
-        left, pos = self._hav_factor(toks, pos, ctx)
-        if left is None:
-            return None, pos
-        while pos < len(toks) and toks[pos][0] == "AND":
-            right, pos = self._hav_factor(toks, pos + 1, ctx)
-            if right is None:
-                return None, pos
-            left = ("and", left, right)
-        return left, pos
-
-    def _hav_factor(self, toks, pos, ctx):
-        if pos >= len(toks):
-            return None, pos
-        kind, _val = toks[pos]
-        if kind == "NOT":
-            inner, pos = self._hav_factor(toks, pos + 1, ctx)
-            if inner is None:
-                return None, pos
-            return ("not", inner), pos
-        if kind == "LP":
-            inner, pos = self._hav_expr(toks, pos + 1, ctx)
-            if (inner is None or pos >= len(toks)
-                    or toks[pos][0] != "RP"):
-                return None, pos
-            return inner, pos + 1
-        if kind == "ATOM":
-            atom = self._hav_atom(_val, ctx)
-            if atom is None:
-                return None, pos
-            return atom, pos + 1
-        return None, pos
-
-    def _hav_atom(self, text, ctx):
-        parsed, gcols, case_sensitive, rset, ambiguous = ctx
-
-        def resolve(lhs):
-            # r15: operands may be arithmetic over simple operands
-            return self._resolve_operand_expr(
-                lhs, parsed, gcols, case_sensitive, rset, ambiguous)
-
-        nm = self._HAV_NULL_RE.match(text)
-        if nm is not None:
-            idx = resolve(nm.group("lhs"))
-            if idx is None:
-                return None
-            return ("null", idx, bool(nm.group("neg")))
-        cm = self._HAV_CMP_RE.match(text)
-        cm_saved = cm
-        if cm is not None:
-            lit = self._hav_literal(cm.group("lit"))
-            if lit is None:
-                # escapes/columns fall back — but first let the
-                # BETWEEN/IN matchers below try the atom: a string
-                # literal CONTAINING an operator char (p IN ('a=b'),
-                # x BETWEEN 'a<b' AND 'z') greedily matches the CMP
-                # regex with a truncated "literal", while the
-                # quote-aware matchers parse it whole; an
-                # operand-shaped RHS (sum(a) > sum(b)) is retried as
-                # an operand comparison after those
-                cm = None
-            else:
-                idx = resolve(cm.group("lhs"))
-                if idx is None:
-                    return None
-                op = cm.group("op")
-                op = "!=" if op == "<>" else ("=" if op == "==" else op)
-                return ("cmp", idx, op, *lit)
-        bm = self._HAV_BETWEEN_RE.match(text)
-        if bm is not None:
-            # Spark itself desugars Between(a,l,u) to a>=l AND a<=u
-            # with each comparison coerced INDEPENDENTLY — exactly
-            # this AST, so mixed-kind bounds need no guard
-            lo = self._hav_literal(bm.group("lo"))
-            hi = self._hav_literal(bm.group("hi"))
-            if lo is None or hi is None:
-                return None
-            idx = resolve(bm.group("lhs"))
-            if idx is None:
-                return None
-            ast = ("and", ("cmp", idx, ">=", *lo),
-                   ("cmp", idx, "<=", *hi))
-            return ("not", ast) if bm.group("neg") else ast
-        im = self._HAV_IN_RE.match(text)
-        if im is not None:
-            parts = _split_top(im.group("list"))
-            if not parts:
-                return None  # IN () is a Spark parse error — surface it
-            lits = [self._hav_literal(p) for p in parts]
-            if any(lt is None for lt in lits):
-                return None
-            if len({k for k, _v in lits}) > 1:
-                # Spark coerces the WHOLE in-list + operand to one
-                # common type; a mixed exact+double list collapses
-                # int operands past 2^53 where per-element domains
-                # would not — refuse rather than risk divergence
-                return None
-            idx = resolve(im.group("lhs"))
-            if idx is None:
-                return None
-            ast = ("cmp", idx, "=", *lits[0])
-            for lt in lits[1:]:
-                ast = ("or", ast, ("cmp", idx, "=", *lt))
-            # x NOT IN (a, b) ≡ NOT(x = a OR x = b), Kleene-exact:
-            # a NULL operand stays NULL through the negation
-            return ("not", ast) if im.group("neg") else ast
-        if cm_saved is not None:
-            # r15: comparison between two OPERANDS (sum(a) > sum(b),
-            # sum(a)+sum(b) > count(*)) — both sides resolve as
-            # (possibly arithmetic) operand expressions
-            ridx = resolve(cm_saved.group("lit"))
-            if ridx is None:
-                return None
-            lidx = resolve(cm_saved.group("lhs"))
-            if lidx is None:
-                return None
-            op = cm_saved.group("op")
-            op = "!=" if op == "<>" else ("=" if op == "==" else op)
-            return ("cmpop", lidx, op, ridx)
-        return None
-
-    @staticmethod
-    def _hav_predicate(ast, specs):
-        """AST → row predicate returning Kleene True/False/None (a
-        group survives only on TRUE), or ``None`` when an operand's
-        type has no provable comparison domain. Domains replicate
-        Spark's coercions (measured): fractional literals are
-        DECIMALS (exact against int/decimal operands); scientific /
-        D-suffixed literals and float/double operands force the
-        DOUBLE domain, where ``_dbl_order_key`` reproduces Spark's
-        NaN-above-everything comparison semantics (``NaN = NaN`` is
-        true, ``NaN > 1e308`` is true) and ``float(Decimal)`` is the
-        same correctly-rounded cast Spark applies; strings compare
-        binary (codepoint == UTF-8 byte order)."""
-        import decimal
-
-        _OPS = {
-            "=": lambda a, b: a == b,
-            "!=": lambda a, b: a != b,
-            "<": lambda a, b: a < b,
-            "<=": lambda a, b: a <= b,
-            ">": lambda a, b: a > b,
-            ">=": lambda a, b: a >= b,
-        }
-        _INTS = ("tinyint", "smallint", "int", "integer", "bigint",
-                 "long")
-
-        def build(node):
-            tag = node[0]
-            if tag in ("and", "or"):
-                lf, rf = build(node[1]), build(node[2])
-                if lf is None or rf is None:
-                    return None
-                if tag == "and":
-                    def f(row, _l=lf, _r=rf):
-                        a, b = _l(row), _r(row)
-                        if a is False or b is False:
-                            return False
-                        if a is None or b is None:
-                            return None
-                        return True
-                else:
-                    def f(row, _l=lf, _r=rf):
-                        a, b = _l(row), _r(row)
-                        if a is True or b is True:
-                            return True
-                        if a is None or b is None:
-                            return None
-                        return False
-                return f
-            if tag == "not":
-                inner = build(node[1])
-                if inner is None:
-                    return None
-
-                def f(row, _i=inner):
-                    v = _i(row)
-                    return None if v is None else (not v)
-                return f
-            if tag == "null":
-                _, idx, neg = node
-
-                def f(row, _i=idx, _n=neg):
-                    isnull = row[_i] is None
-                    return (not isnull) if _n else isnull
-                return f
-            if tag == "cmpop":
-                # r15: comparison between two OPERANDS — a common
-                # comparison domain must be provable for both result
-                # types (exact↔exact compares as DECIMAL, any double
-                # forces the IEEE domain with NaN-above-everything,
-                # string↔string binary, date↔date as dates — mixed
-                # families refuse to the relational coercion)
-                _, li, op, ri = node
-                lrt = (specs[li][2] or specs[li][1]).lower()
-                rrt = (specs[ri][2] or specs[ri][1]).lower()
-
-                def dom(rt0):
-                    if rt0 in _INTS or rt0.startswith("decimal("):
-                        return "exact"
-                    if rt0 in ("double", "float"):
-                        return "double"
-                    return rt0
-                ld, rd = dom(lrt), dom(rrt)
-                if {ld, rd} <= {"exact", "double"}:
-                    if "double" in (ld, rd):
-                        def conv2(v):
-                            return _dbl_order_key(float(v))
-                    else:
-                        def conv2(v):
-                            return decimal.Decimal(str(v))
-                elif ld == rd == "string":
-                    conv2 = str
-                elif ld == rd == "date":
-                    import datetime as _dt
-
-                    def conv2(v):
-                        return _dt.date.fromisoformat(str(v))
-                else:
-                    return None
-
-                def f(row, _l=li, _r=ri, _c=conv2, _op=_OPS[op]):
-                    a, b = row[_l], row[_r]
-                    if a is None or b is None:
-                        return None
-                    return _op(_c(a), _c(b))
-                return f
-            _, idx, op, lk, lv = node
-            rt = (specs[idx][2] or specs[idx][1]).lower()
-            if rt == "date" and lk in ("str", "date"):
-                # strict zero-padded ISO literal only — Spark's cast
-                # also accepts loose forms ('2024-1-2'), which refuse
-                # into the fallback rather than risk a different parse
-                import datetime as _dt
-                try:
-                    lit = _date_desc(lv)
-                except ValueError:
-                    return None
-
-                def conv(v):
-                    return _dt.date.fromisoformat(str(v))
-            elif lk == "date":
-                return None  # a DATE literal against a non-date operand
-            elif lk == "str":
-                if rt != "string":
-                    return None
-                conv, lit = str, lv
-            elif rt in ("double", "float") or lk == "double":
-                if not (rt in ("double", "float") or rt in _INTS
-                        or rt.startswith("decimal(")):
-                    return None
-
-                def conv(v):
-                    return _dbl_order_key(float(v))
-                lit = _dbl_order_key(float(lv))
-            elif rt in _INTS or rt.startswith("decimal("):
-                def conv(v):
-                    return decimal.Decimal(str(v))
-                lit = decimal.Decimal(lv)
-            else:
-                return None  # dates/timestamps: fall back
-
-            def f(row, _i=idx, _c=conv, _lit=lit, _op=_OPS[op]):
-                v = row[_i]
-                if v is None:
-                    return None  # SQL: comparison with NULL = unknown
-                return _op(_c(v), _lit)
-            return f
-
-        return build(ast)
-
-    def _rewrite_order_aggs(self, text, parsed, gcols, case_sensitive,
-                            rset, ambiguous, extra: dict,
-                            n_visible: int | None = None):
-        """ORDER BY tail with AGGREGATE (or r15: ARITHMETIC) items
-        resolved to (possibly hidden) spec positions — Spark sorts by
-        the aggregate value whether or not it is selected, and by
-        arithmetic over SELECTED outputs (an expression with an
-        unselected aggregate leaf is an analyzer error — measured —
-        so expression leaves are bounded to the first ``n_visible``
-        items and anything past that refuses into the fallback, which
-        reproduces the error). Rewrites each such item to a
-        placeholder recorded in ``extra`` (auto-named outputs like
-        ``sum(x)`` are not word-shaped, so a textual rewrite to the
-        output name could not resolve); plain items pass through.
-        ``None`` = outside the grammar."""
-        out_items = []
-        for item in _split_top(text):
-            item = item.strip()
-            if self._ORDER_ITEM_RE.match(item):
-                out_items.append(item)
-                continue
-            sm = re.match(r"^(?P<body>.+?)(?P<suf>(?:\s+(?:ASC|DESC))?"
-                          r"(?:\s+NULLS\s+(?:FIRST|LAST))?)$",
-                          item, re.I | re.S)
-            body = sm.group("body").strip()
-            if self._META_AGG_RE.match(body) is not None:
-                idx = self._resolve_having_operand(
-                    body, parsed, gcols, case_sensitive, rset,
-                    ambiguous)
-            else:
-                idx = self._resolve_operand_expr(
-                    body, parsed, gcols, case_sensitive, rset,
-                    ambiguous, visible_only=n_visible)
-                if idx is not None and parsed[idx][0] != "expr":
-                    # a plain non-agg body (e.g. a bare alias the
-                    # ORDER_ITEM regex already covers, or a grouping
-                    # column) gained nothing here — keep the strict
-                    # grammar: only genuine expressions pass
-                    return None
-            if idx is None:
-                return None
-            ph = f"__ob{len(extra)}"
-            extra[ph] = idx
-            out_items.append(ph + sm.group("suf"))
-        return ", ".join(out_items)
-
-    @staticmethod
-    def _sum_checked(t, snap, cname: str, st: str):
-        """:meth:`_sum_render` over a snapshot-resolved sum."""
-        res = t._sum_from(snap, cname)
-        if res is None:
-            return None
-        return Catalog._sum_render(res, st)
-
-    @staticmethod
-    def _avg_dec_result_type(st: str) -> str:
-        """Spark's AVG result type for a decimal input:
-        ``decimal(p,s)`` → ``decimal(p+4, s+4)`` (callers refuse
-        p+4 > 38 before asking)."""
-        p, s = (int(x) for x in st[len("decimal("):-1].split(","))
-        return f"decimal({p + 4},{s + 4})"
-
-    @staticmethod
-    def _sum_result_type(st: str) -> str:
-        """Spark's SUM result type for an exact input type: integer
-        family → ``bigint``; ``decimal(p,s)`` →
-        ``decimal(min(38,p+10),s)``. The ONE source both the GROUP BY
-        carrier cast and :meth:`_sum_render`'s overflow bound use —
-        drifting copies would let a value pass a bound its cast type
-        cannot hold."""
-        if st.startswith("decimal("):
-            p, s = (int(x) for x in st[len("decimal("):-1].split(","))
-            return f"decimal({min(38, p + 10)},{s})"
-        return "bigint"
-
-    @staticmethod
-    def _sum_render(res: tuple, st: str):
-        """``(value_string_or_None, result_type)`` for an exact
-        ``(sum, nonnull)`` pair, in the relational path's RESULT TYPE
-        (:meth:`_sum_result_type`); value ``None`` = SQL NULL (zero
-        non-null rows). Returns ``None`` (refuse → fallback) when the
-        sum would overflow that type — non-ANSI Spark wraps/NULLs
-        there, and the fallback reproduces whatever Spark does rather
-        than guessing."""
-        import decimal
-
-        total, nonnull = res
-        rt = Catalog._sum_result_type(st).upper()
-        if rt.startswith("DECIMAL("):
-            rp, rs = (int(x)
-                      for x in rt[len("DECIMAL("):-1].split(","))
-            if nonnull == 0:
-                return (None, rt)
-            if abs(total) >= decimal.Decimal(10) ** (rp - rs):
-                return None
-            return (str(total), rt)
-        if nonnull == 0:
-            return (None, "BIGINT")
-        if not (-(2 ** 63) <= int(total) < 2 ** 63):
-            return None
-        return (str(int(total)), "BIGINT")
-
-    @classmethod
-    def _sum_literal(cls, t, snap, cname: str, st: str) -> str | None:
-        """:meth:`_sum_checked` rendered as a one-row SQL literal."""
-        r = cls._sum_checked(t, snap, cname, st)
-        if r is None:
-            return None
-        v, rt = r
-        if v is None:
-            return f"CAST(NULL AS {rt})"
-        # string-cast render: the relational SUM is nullable=True and
-        # a bare int literal cast would analyze non-nullable
-        return f"CAST('{v}' AS {rt})"
+            null = (0,) if nulls_first != desc else (2,)
+            # layered stable sorts, last key first
+            rows.sort(key=lambda r, j=j, null=null: (
+                null if r[j] is None
+                else (1, 1, 0.0) if isinstance(r[j], float)
+                and math.isnan(r[j]) else (1, 0, r[j])), reverse=desc)
+        return [r[0] for r in rows]
 
     _TC_RE = re.compile(
         r"table_changes\(\s*'([\w.`]+)'\s*,\s*(\d+)\s*(?:,\s*(\d+))?\s*\)",
@@ -3468,34 +2042,6 @@ class Catalog:
             on_cols.append(lcol)
         merge_into(target, source, on_cols)
         return None
-
-
-def _flt_sql_str(v: float) -> str:
-    """A float as the string Spark's string→float/double cast parses
-    back to the identical value: Java ``Double.parseDouble`` accepts
-    ``NaN``/``Infinity``/``-Infinity`` (not Python's ``nan``/``inf``)
-    and is correctly rounded on ``repr``'s shortest decimal."""
-    import math
-
-    if math.isnan(v):
-        return "NaN"
-    if math.isinf(v):
-        return "Infinity" if v > 0 else "-Infinity"
-    return repr(v)
-
-
-def _nullable_str_lit(s: str) -> str:
-    """A string value as a SQL expression that (a) parses back to
-    exactly ``s`` under EVERY parser mode — base64 transport, no
-    literal-escaping hazards (the ``local_df`` rendering contract) —
-    and (b) analyzes as ``nullable=True``, matching the relational
-    MIN/MAX aggregate's schema (a plain literal or a binary→string
-    cast is non-nullable; ``nullif(x, NULL)`` is an identity that
-    adds nullability and still constant-folds to a LocalRelation)."""
-    import base64
-
-    enc = base64.b64encode(s.encode("utf-8")).decode("ascii")
-    return f"nullif(CAST(unbase64('{enc}') AS STRING), NULL)"
 
 
 def _rx(pattern: str, stmt: str) -> "re.Match":

@@ -111,7 +111,8 @@ def _render(v, t: str) -> str:
         d = _decimal.Decimal(str(v))
         if not d.is_finite():
             raise ValueError(f"non-finite decimal value {v!r}")
-        return f"CAST({d} AS {t})"
+        return f"CAST({d:f} AS {t})"  # never exponent form: `1E-7`
+        # is a DOUBLE literal in Spark SQL
     if tl == "boolean":
         return "true" if v else "false"
     if tl == "date":
@@ -146,10 +147,7 @@ def local_df(spark: SparkSession, rows: list, schema_ddl: str, *,
     ``nullable=True`` makes every column nullable whatever the data (the
     schema a file scan of the same columns reports).
     """
-    cols = []
-    for part in _split_top(schema_ddl):
-        name, t = part.strip().split(None, 1)
-        cols.append((name.strip("`"), t.strip()))
+    cols = _ddl_cols(schema_ddl)
     if len(rows) > MAX_LOCAL_ROWS or _n_scalars(rows) > MAX_LOCAL_SCALARS:
         # normalize numpy values first: PySpark's schema verifier
         # rejects ndarray/np.scalar, but the SQL path below renders
@@ -158,6 +156,22 @@ def local_df(spark: SparkSession, rows: list, schema_ddl: str, *,
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema_ddl
         )
+    if nullable and rows:
+        # a trailing all-NULL row makes every column nullable; the LIMIT
+        # drops it again, folded into the LocalRelation (still zero jobs)
+        rel = values_sql([*rows, (None,) * len(cols)], schema_ddl)
+        return spark.sql(f"SELECT * FROM {rel} LIMIT {len(rows)}")
+    return spark.sql(f"SELECT * FROM {values_sql(rows, schema_ddl)}")
+
+
+def values_sql(rows: list, schema_ddl: str) -> str:
+    """``rows`` as the text of a FROM-clause relation with DDL schema
+    ``schema_ddl`` — the VALUES literal :func:`local_df` parses into a
+    ``LocalRelation``, for callers that wrap it in SQL of their own
+    (one parsed statement instead of a DataFrame call chain). The
+    caller keeps ``rows`` inside the size guards."""
+    cols = _ddl_cols(schema_ddl)
+    col_sql = ",".join(f"`{n}`" for n, _ in cols)
     if not rows:
         # a NULL-typed row filtered by a false literal: the optimizer's
         # PropagateEmptyRelation folds it to an EMPTY LocalRelation —
@@ -165,23 +179,22 @@ def local_df(spark: SparkSession, rows: list, schema_ddl: str, *,
         # empty RDD scan still schedules one
         row_sql = "(" + ",".join(f"CAST(NULL AS {t})"
                                  for _, t in cols) + ")"
-        col_sql = ",".join(f"`{n}`" for n, _ in cols)
-        return spark.sql(
-            f"SELECT * FROM (VALUES {row_sql}) AS t({col_sql}) WHERE 1=0"
-        )
+        return (f"(SELECT * FROM (VALUES {row_sql}) AS t({col_sql})"
+                " WHERE 1=0)")
     row_sql = ",".join(
         "(" + ",".join(_render(v, t) for v, (_, t) in zip(r, cols)) + ")"
         for r in rows
     )
-    col_sql = ",".join(f"`{n}`" for n, _ in cols)
-    limit = ""
-    if nullable:
-        # a trailing all-NULL row makes every column nullable; the LIMIT
-        # drops it again, folded into the LocalRelation (still zero jobs)
-        row_sql += ",(" + ",".join(f"CAST(NULL AS {t})" for _, t in cols) + ")"
-        limit = f" LIMIT {len(rows)}"
-    return spark.sql(
-        f"SELECT * FROM (VALUES {row_sql}) AS t({col_sql}){limit}")
+    return f"(VALUES {row_sql}) AS t({col_sql})"
+
+
+def _ddl_cols(schema_ddl: str) -> list[tuple[str, str]]:
+    """``"a int, b decimal(10,2)"`` → ``[(name, type), ...]``."""
+    cols = []
+    for part in _split_top(schema_ddl):
+        name, t = part.strip().split(None, 1)
+        cols.append((name.strip("`"), t.strip()))
+    return cols
 
 
 def _split_top(ddl: str) -> list[str]:

@@ -71,7 +71,7 @@ def _json_flt(v: float):
     ride as the Java-parseable sentinel strings ``"Infinity"`` /
     ``"-Infinity"`` — every Python reader already funnels the slot
     through ``float()`` (which accepts them), and the SQL renderer
-    (``_flt_sql_str``) spells them the same way."""
+    (``functions/local_df._render``) spells them the same way."""
     if math.isinf(v):
         return "Infinity" if v > 0 else "-Infinity"
     return v

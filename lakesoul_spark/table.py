@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -49,6 +50,119 @@ READ_INCREMENTAL = "incremental"
 # (S3-style stores scale per-connection); override for very high- or
 # low-latency stores.
 CLONE_COPY_WORKERS = 16
+
+# distinct from None (a legitimate SQL NULL value) in the metadata
+# aggregate folds (LakeSoulTable._agg_fold): "this file list cannot
+# prove the value — fall back"
+_REFUSE = object()
+
+
+def _refused(v):
+    """A stats kernel's ``None`` ("cannot prove") as ``_REFUSE``."""
+    return _REFUSE if v is None else v
+
+
+def _pick(pair, i: int, suffix: str = ""):
+    """Slot ``i`` of a kernel's result pair (``None`` pair = refuse)."""
+    if pair is None:
+        return _REFUSE
+    v = pair[i]
+    return v + suffix if v is not None and suffix else v
+
+
+def _decimal_ps(st: str) -> tuple[int, int]:
+    """``'decimal(p,s)'`` → ``(p, s)``."""
+    p, s = (int(x) for x in st[len("decimal("):-1].split(","))
+    return p, s
+
+
+def _sum_result_type(st: str) -> str:
+    """Spark's SUM result type for an exact input type: integer family
+    → ``bigint``; ``decimal(p,s)`` → ``decimal(min(38,p+10),s)``. The
+    ONE source both the column type and :func:`_sum_value`'s overflow
+    bound use — drifting copies would let a value pass a bound its
+    type cannot hold."""
+    if st.startswith("decimal("):
+        p, s = _decimal_ps(st)
+        return f"decimal({min(38, p + 10)},{s})"
+    return "bigint"
+
+
+def _sum_value(res, rt: str):
+    """The SUM of an exact ``(sum, nonnull)`` pair in result type
+    ``rt``: ``None`` (SQL NULL) for zero non-null rows, ``_REFUSE``
+    when unprovable (``res`` None) or when the sum overflows ``rt`` —
+    Spark raises or wraps there, and the fallback reproduces whatever
+    Spark does rather than this path guessing."""
+    import decimal
+
+    if res is None:
+        return _REFUSE
+    total, nonnull = res
+    if nonnull == 0:
+        return None
+    if rt.startswith("decimal("):
+        p, s = _decimal_ps(rt)
+        return (total if abs(total) < decimal.Decimal(10) ** (p - s)
+                else _REFUSE)
+    return int(total) if -(2 ** 63) <= total < 2 ** 63 else _REFUSE
+
+
+_INT_DESC_RE = re.compile(r"^[+-]?[0-9]+$")
+
+
+def _int_desc(v: str, bits: int) -> int:
+    """STRICT integer parse of a partition-desc value: only the forms
+    Spark's string→int CAST accepts and only in-range values (Python's
+    int() would happily parse '1_0' as 10 and any magnitude, where the
+    CAST yields NULL — the metadata answer must never merge or order
+    groups differently than the relational one)."""
+    if not _INT_DESC_RE.match(v):
+        raise ValueError(f"non-canonical int desc value {v!r}")
+    n = int(v)
+    if not (-(1 << (bits - 1)) <= n < (1 << (bits - 1))):
+        raise ValueError(f"desc value {v!r} overflows {bits}-bit int")
+    return n
+
+
+_DATE_DESC_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
+
+
+def _date_desc(v: str):
+    """STRICT ISO date parse (zero-padded extended form only): a
+    CONVERT TO LAKESOUL import can carry 'd=2024-1-2' dirs, which
+    Spark's CAST merges with '2024-01-02' while a string key would
+    keep them distinct and order them wrong — parse canonically or
+    raise (→ fall back to a scan). The regex guard exists because
+    Python ≥3.11 ``fromisoformat`` also accepts the BASIC form
+    '20240102', which Spark's CAST does not."""
+    import datetime
+
+    if not _DATE_DESC_RE.match(v):
+        raise ValueError(f"non-canonical date desc value {v!r}")
+    return datetime.date.fromisoformat(v)
+
+
+# range-partition desc values order correctly under these declared
+# types (ints numerically after the strict parse; dates as
+# datetime.date; plain strings lexicographically); anything else
+# (float/bool/timestamp) refuses. The typed parses are STRICT —
+# exactly the strings Spark's string→type CAST accepts, normalized
+# to one canonical value per equivalence class: Python's bare
+# int() accepts '1_0' (→ 10) where the CAST yields NULL, and a
+# CONVERT TO LAKESOUL import can bring non-zero-padded date dirs
+# ('2024-1-2') whose lexicographic order and distinctness diverge
+# from the relational cast. Any unparseable / out-of-range desc
+# value raises → the statement falls back to a real scan.
+_PART_VALUE_KEYS = {
+    "tinyint": lambda v: _int_desc(v, 8),
+    "smallint": lambda v: _int_desc(v, 16),
+    "int": lambda v: _int_desc(v, 32),
+    "integer": lambda v: _int_desc(v, 32),
+    "bigint": lambda v: _int_desc(v, 64),
+    "long": lambda v: _int_desc(v, 64),
+    "date": _date_desc, "string": str,
+}
 
 
 def _parallel_copy(copies: list[tuple[str, str]]) -> None:
@@ -768,22 +882,29 @@ class LakeSoulTable:
         cannot prove physical == logical (including any condition
         touching a non-partition column), or any live file predates
         the num_rows-recording writer."""
-        return self._count_from(self._provable_snapshot(condition))
+        return self._fold_fast("count", None, condition)
 
-    @staticmethod
-    def _count_from(snap) -> int | None:
-        """Count over an already-resolved provable snapshot — the
-        statement-level SQL fast path resolves ONE snapshot and reads
-        every aggregate from it, so a concurrent commit can never
-        produce a row mixing two table versions."""
+    def _fold_fast(self, fn: str, col: str | None,
+                   condition: str | None):
+        """One :meth:`_agg_fold` kind over the provable snapshot —
+        the value, or ``None`` when the table or the fold refuses."""
+        field = None
+        if col is not None:
+            field = next((f for f in table_schema(self.info).fields
+                          if f.name == col), None)
+            if field is None:
+                return None
+        agg = self._agg_fold(self.info, fn, field)
+        snap = agg and self._provable_snapshot(condition)
         if snap is None:
             return None
-        return LakeSoulTable._count_files(snap.files)
+        v = agg[1](snap.files)
+        return None if v is _REFUSE else v
 
     @staticmethod
     def _count_files(files) -> int | None:
-        """Row count over a live-file list (the GROUP BY fast path
-        calls this per partition group with all gates pre-resolved)."""
+        """Row count over a live-file list — ``None`` when a file
+        predates num_rows recording."""
         total = 0
         for f in files:
             if f.num_rows < 0:
@@ -824,30 +945,16 @@ class LakeSoulTable:
         same contract as :meth:`count_fast`. Values are in the stats
         encoding: integers raw, timestamps/dates ISO strings
         (order-preserving). SQL min/max semantics — nulls ignored."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
         # cheap type gate FIRST: an unsupported column type refuses
         # without paying the snapshot resolution (and any
         # partition-predicate evaluation inside it)
         dtype = next(
-            (f.dataType.simpleString() for f in _ts(self.info).fields
-             if f.name == col), "",
+            (f.dataType.simpleString() for f in table_schema(self.info)
+             .fields if f.name == col), "",
         )
         if dtype not in self._MINMAX_EXACT_TYPES:
             return None
-        return self._minmax_from(self._provable_snapshot(condition), col)
-
-    def _minmax_from(self, snap, col: str) -> tuple | None:
-        """Min/max over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
-        dtype = next(
-            (f.dataType.simpleString() for f in _ts(self.info).fields
-             if f.name == col), "",
-        )
-        if dtype not in self._MINMAX_EXACT_TYPES:
-            return None
+        snap = self._provable_snapshot(condition)
         if snap is None or not snap.files:
             return None
         return self._minmax_files(snap.files, col)
@@ -881,42 +988,31 @@ class LakeSoulTable:
         file itself). Files that physically lack the column contribute
         nothing when its fill is NULL; a declared default would
         contribute ``default × num_rows`` — refused rather than
-        guessed. ``nonnull_count == 0`` means the SQL result is NULL.
+        guessed. A range-partition column refuses too: it is
+        materialized from the desc, never physically in files, so the
+        NULL-fill rule would claim an all-NULL sum (the SQL path sums
+        it from the descs through :meth:`_agg_fold`).
+        ``nonnull_count == 0`` means the SQL result is NULL.
         ``condition`` scopes to range partitions like
         :meth:`count_fast`. Sum is a python int for integer columns,
         ``Decimal`` for decimal columns."""
-        return self._sum_from(self._provable_snapshot(condition), col)
-
-    def _sum_from(self, snap, col: str) -> tuple | None:
-        """Sum over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
         info = self.info
-        if col in info.range_partitions:
-            # a range-partition column is materialized from the desc —
-            # never physically in files, never NULL — so the
-            # missing-column-means-NULL-fill rule below would claim an
-            # all-NULL sum; its true sum is value × rows per partition,
-            # which nothing here records. Refuse, never guess.
-            return None
         dtype = next(
-            (f.dataType.simpleString() for f in _ts(info).fields
+            (f.dataType.simpleString() for f in table_schema(info).fields
              if f.name == col), "",
         )
-        if not (dtype in self._SUM_EXACT_TYPES
+        if col in info.range_partitions or not (
+                dtype in self._SUM_EXACT_TYPES
                 or dtype.startswith("decimal(")):
             return None
+        snap = self._provable_snapshot(condition)
         if snap is None:
             return None
-        has_default = info.column_defaults().get(col) is not None
-        res = self._sum_files(snap.files, col, has_default)
-        if res is None:
-            return None
-        total, nonnull = res
-        if dtype.startswith("decimal("):
-            return (total, nonnull)
-        return (int(total), nonnull)
+        res = self._sum_files(snap.files, col,
+                              info.column_defaults().get(col) is not None)
+        if res is None or dtype.startswith("decimal("):
+            return res
+        return (int(res[0]), res[1])
 
     @staticmethod
     def _sum_files(files, col: str, has_default: bool) -> tuple | None:
@@ -970,27 +1066,7 @@ class LakeSoulTable:
         every row count — derivable, but entangled with later default
         changes, so refused like :meth:`sum_fast`. ``condition``
         scopes to range partitions like :meth:`count_fast`."""
-        return self._count_col_from(self._provable_snapshot(condition),
-                                    col)
-
-    def _count_col_from(self, snap, col: str) -> int | None:
-        """COUNT(col) over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
-        if snap is None:
-            return None
-        info = self.info
-        if col in info.range_partitions:
-            from lakesoul_spark.io import partition as part_enc
-
-            total = 0
-            for f in snap.files:
-                if f.num_rows < 0:
-                    return None
-                v = part_enc.parse_desc(f.partition_desc).get(col)
-                total += f.num_rows if v is not None else 0
-            return total
-        has_default = info.column_defaults().get(col) is not None
-        return self._count_col_files(snap.files, col, has_default)
+        return self._fold_fast("count", col, condition)
 
     @staticmethod
     def _count_col_files(files, col: str,
@@ -1012,9 +1088,10 @@ class LakeSoulTable:
             total += int(ent[1])
         return total
 
-    def _minmax_exact_from(self, snap, col: str,
-                           kind: str) -> tuple | None:
-        """Exact ``(min, max)`` over a provable snapshot, from the
+    @staticmethod
+    def _minmax_exact_files(files, col: str, has_default: bool,
+                            kind: str) -> tuple | None:
+        """Exact ``(min, max)`` over a live-file list, from the
         writer's computed-from-values extrema (``io/stats.py
         file_sums`` — footer binary stats may be truncated prefixes
         and float footer stats may omit NaN, so the claimed-exact
@@ -1022,18 +1099,7 @@ class LakeSoulTable:
         (SQL min/max = NULL); ``None`` = cannot prove. A file lacking
         the column contributes nothing under NULL fill and refuses
         under a declared default (the default value would be a live
-        extremum candidate nothing records)."""
-        if snap is None:
-            return None
-        has_default = self.info.column_defaults().get(col) is not None
-        return self._minmax_exact_files(snap.files, col, has_default,
-                                        kind)
-
-    @staticmethod
-    def _minmax_exact_files(files, col: str, has_default: bool,
-                            kind: str) -> tuple | None:
-        """Exact extrema over a live-file list (the GROUP BY fast
-        path calls this per partition group). ``kind``:
+        extremum candidate nothing records). ``kind``:
 
         - ``'str'`` — Python str comparison is codepoint order ==
           UTF-8 byte order, the total order Spark and DuckDB use for
@@ -1080,47 +1146,6 @@ class LakeSoulTable:
                 lo = float("nan")
         return (lo, hi)
 
-    def _avg_from(self, snap, col: str) -> tuple | None:
-        """Exact ``AVG(col)`` for an integer-family declared stats
-        column, bit-identical to the relational result, or ``None``
-        when unprovable. Spark's ``Average`` accumulates integer input
-        in DOUBLE; a double add is exact while every partial sum stays
-        under 2^53, and partial sums (any grouping Spark's partial-agg
-        tree picks) are bounded by Σ|x| ≤ Σ_files nonnull ×
-        max(|min|,|max|) — provable from the same per-file stats. When
-        that bound holds, double-accumulation equals the exact integer
-        sum in EVERY execution order, and the final ``sum/count``
-        IEEE division here reproduces Spark's bit-for-bit. Returns
-        ``(float_avg_or_None, nonnull)`` — ``None`` avg = SQL NULL
-        (zero non-null rows). Floats/decimals are never claimed
-        (order-dependent rounding / decimal divide semantics)."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
-        info = self.info
-        if col in info.range_partitions:
-            return None  # desc-materialized: no per-file sums exist
-        dtype = next(
-            (f.dataType.simpleString() for f in _ts(info).fields
-             if f.name == col), "",
-        )
-        if dtype not in self._SUM_EXACT_TYPES:
-            return None
-        if snap is None:
-            return None
-        has_default = info.column_defaults().get(col) is not None
-        return self._avg_files(snap.files, col, has_default)
-
-    def _avg_dec_from(self, snap, col: str, st: str) -> tuple | None:
-        """Exact ``AVG(col)`` for a DECIMAL declared stats column —
-        ``(value_string_or_None, result_type)`` with value ``None`` =
-        SQL NULL — or ``None`` when unprovable (see
-        :meth:`_avg_dec_files` for the proof obligations)."""
-        info = self.info
-        if col in info.range_partitions or snap is None:
-            return None
-        has_default = info.column_defaults().get(col) is not None
-        return self._avg_dec_files(snap.files, col, has_default, st)
-
     @staticmethod
     def _avg_dec_files(files, col: str, has_default: bool,
                        st: str) -> tuple | None:
@@ -1145,7 +1170,7 @@ class LakeSoulTable:
         ``|sum| < 10^(p+10-s)`` (sum accumulator type)."""
         import decimal
 
-        p, s = (int(x) for x in st[len("decimal("):-1].split(","))
+        p, s = _decimal_ps(st)
         if p + 4 > 38:
             return None
         rt = f"decimal({p + 4},{s + 4})"
@@ -1180,10 +1205,20 @@ class LakeSoulTable:
 
     @staticmethod
     def _avg_files(files, col: str, has_default: bool) -> tuple | None:
-        """Provably-exact integer AVG over a live-file list (the GROUP
-        BY fast path calls this per partition group) — type and
-        range-partition gates are the CALLER's job (:meth:`_avg_from`
-        documents the 2^53 double-accumulation proof)."""
+        """Exact ``AVG(col)`` for an integer-family stats column over
+        a live-file list, bit-identical to the relational result, or
+        ``None`` when unprovable. Spark's ``Average`` accumulates
+        integer input in DOUBLE; a double add is exact while every
+        partial sum stays under 2^53, and partial sums (any grouping
+        Spark's partial-agg tree picks) are bounded by Σ|x| ≤ Σ_files
+        nonnull × max(|min|,|max|) — provable from the same per-file
+        stats. When that bound holds, double-accumulation equals the
+        exact integer sum in EVERY execution order, and the final
+        ``sum/count`` IEEE division here reproduces Spark's
+        bit-for-bit. Returns ``(float_avg_or_None, nonnull)`` —
+        ``None`` avg = SQL NULL (zero non-null rows). Floats/decimals
+        are never claimed here (order-dependent rounding / decimal
+        divide semantics: see :meth:`_avg_dec_files`)."""
         res = LakeSoulTable._sum_files(files, col, has_default)
         if res is None:
             return None
@@ -1205,6 +1240,113 @@ class LakeSoulTable:
         if nonnull == 0:
             return (None, 0)
         return (float(int(total)) / nonnull, nonnull)
+
+    @staticmethod
+    def _agg_fold(info, fn: str, field) -> tuple | None:
+        """THE metadata-aggregate fold table: ``(Spark result type,
+        fold)`` for one aggregate kind — ``count`` (``field`` None =
+        COUNT(*)), ``cntd`` (COUNT(DISTINCT)), ``min``, ``max``,
+        ``sum``, ``avg`` — or ``None`` when no fold proves that kind
+        for that column. ``fold(files)`` maps one provable live-file
+        list (a whole scoped snapshot or one GROUP BY group) to the
+        result value in Spark's result type, ``None`` for SQL NULL,
+        or ``_REFUSE`` when that file list cannot prove it. Every
+        gate resolves HERE, once per statement; the folds touch only
+        the file list. A range-partition column is a value source of
+        its own (:meth:`_part_fold`): its desc IS the value."""
+        T = LakeSoulTable
+        if field is None:
+            return "bigint", lambda fs: _refused(T._count_files(fs))
+        col, st = field.name, field.dataType.simpleString()
+        if col in info.range_partitions:
+            return T._part_fold(fn, col, st)
+        dflt = info.column_defaults().get(col) is not None
+        if fn == "count":
+            return "bigint", lambda fs: _refused(
+                T._count_col_files(fs, col, dflt))
+        if fn == "sum" and (st in T._SUM_EXACT_TYPES
+                            or st.startswith("decimal(")):
+            rt = _sum_result_type(st)
+            return rt, lambda fs: _sum_value(
+                T._sum_files(fs, col, dflt), rt)
+        if fn == "avg" and st.startswith("decimal("):
+            p, s = _decimal_ps(st)
+            if p + 4 > 38:
+                return None
+            return f"decimal({p + 4},{s + 4})", lambda fs: _pick(
+                T._avg_dec_files(fs, col, dflt, st), 0)
+        if fn == "avg" and st in T._SUM_EXACT_TYPES:
+            return "double", lambda fs: _pick(
+                T._avg_files(fs, col, dflt), 0)
+        if fn not in ("min", "max"):
+            return None  # a data-column DISTINCT needs a real scan
+        i = 0 if fn == "min" else 1
+        kind = ("str" if st == "string"
+                else "dec" if st.startswith("decimal(")
+                else "flt" if st in ("float", "double") else None)
+        if kind is not None:
+            return st, lambda fs: _pick(
+                T._minmax_exact_files(fs, col, dflt, kind), i)
+        if st not in T._MINMAX_EXACT_TYPES:
+            return None
+        # timestamps: naive-UTC ISO stats + Z suffix, so the string→
+        # timestamp cast names the same instant in every session zone
+        z = "Z" if st == "timestamp" else ""
+        return st, lambda fs: _pick(T._minmax_files(fs, col), i, z)
+
+    @staticmethod
+    def _part_fold(fn: str, col: str, st: str) -> tuple | None:
+        """The :meth:`_agg_fold` entry of a range-partition column:
+        the typed desc value (``_PART_VALUE_KEYS``; two encodings of
+        one value collapse exactly as the relational cast merges
+        them) weighted by each file's ``num_rows``. A partition
+        contributes its value only while it holds >0 rows, and the
+        NULL-sentinel partition holds SQL NULLs. SUM/AVG are the
+        integer family only: ``Σ value × rows`` under the bigint
+        overflow bound, and AVG under the 2^53 ``Σ|value| × rows``
+        double-accumulation bound (see :meth:`_avg_files`)."""
+        key = _PART_VALUE_KEYS.get(st)
+        if key is None:
+            return None
+        ints = st in LakeSoulTable._SUM_EXACT_TYPES
+
+        def avg(vals):
+            n = sum(vals.values())
+            if sum(abs(v) * k for v, k in vals.items()) >= 2 ** 53:
+                return _REFUSE
+            return None if n == 0 else float(
+                sum(v * k for v, k in vals.items())) / n
+
+        if fn in ("count", "cntd"):
+            rt, agg = "bigint", (len if fn == "cntd"
+                                 else lambda vals: sum(vals.values()))
+        elif fn in ("min", "max"):
+            rt, agg = st, lambda vals: (
+                (min if fn == "min" else max)(vals) if vals else None)
+        elif fn == "sum" and ints:
+            rt, agg = "bigint", lambda vals: _sum_value(
+                (sum(v * k for v, k in vals.items()),
+                 sum(vals.values())), "bigint")
+        elif fn == "avg" and ints:
+            rt, agg = "double", avg
+        else:
+            return None
+
+        def fold(files):
+            vals: dict = {}
+            for f in files:
+                if f.num_rows < 0:
+                    return _REFUSE  # predates num_rows recording
+                v = part_enc.parse_desc(f.partition_desc).get(col)
+                if v is None or f.num_rows == 0:
+                    continue
+                try:
+                    tv = key(v)
+                except (TypeError, ValueError):
+                    return _REFUSE  # outside the canonical typed form
+                vals[tv] = vals.get(tv, 0) + f.num_rows
+            return agg(vals)
+        return rt, fold
 
     def to_df(self, file_filters: list | None = None,
               bucket_filter: set | None = None) -> DataFrame:

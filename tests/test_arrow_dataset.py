@@ -553,6 +553,31 @@ def test_arrow_count_rows_metadata_fast_path(spark, tmp_path):
     ) == streamed
 
 
+def test_arrow_count_rows_proves_only_its_partition(spark, tmp_path,
+                                                    monkeypatch):
+    """count_rows() over ``partitions={...}`` proves its count over
+    that partition's files alone: PK churn in another partition must
+    not force it to stream every batch, and the churned partition
+    itself still streams and stays exact."""
+    path = str(tmp_path / "t")
+    write(_df(spark, [(i, "a" if i % 2 else "b", i) for i in range(40)],
+              "id int, p string, v int"),
+          path, mode="overwrite", range_partitions=["p"],
+          hash_partitions=["id"], hash_bucket_num=2)
+    LakeSoulTable.for_path(spark, path).upsert(
+        _df(spark, [(1, "a", 100), (3, "a", 300)],
+            "id int, p string, v int"))
+    churned = LakeSoulArrowDataset(path, partitions={"p": "a"})
+    assert churned.count_rows() == 20
+
+    def boom(self):
+        raise AssertionError("a provable count must not read batches")
+
+    monkeypatch.setattr(LakeSoulArrowDataset, "to_batches", boom)
+    assert LakeSoulArrowDataset(path, partitions={"p": "b"}) \
+        .count_rows() == 20
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_fuzz_arrow_merge_ops_parity(spark, tmp_path, seed):
     """Random upsert histories over a table declaring the associative

@@ -1581,6 +1581,9 @@ def test_minmax_sql_fast_path_fuzz(cat, spark):
         # draws); count(*) denominators are never zero in a group
         " ORDER BY sum(i)+count(i) DESC, p",
         " ORDER BY sum(i)/count(*), p",
+        # expression keys Spark evaluates over the per-group relation
+        " ORDER BY sum(dd) / count(*) DESC, p",
+        " ORDER BY max(i) - min(i), p LIMIT 2",
     ])
     # r13: HAVING tails (atoms over aggregates incl. UNSELECTED ones,
     # aliases, the group key; AND/OR/NOT; IS [NOT] NULL) — the fast
@@ -1614,6 +1617,13 @@ def test_minmax_sql_fast_path_fuzz(cat, spark):
         " HAVING sum(i)-count(*) NOT BETWEEN 0 AND 10",
         " HAVING min(d) <= DATE '2000-01-15'",
         " HAVING max(d) BETWEEN DATE '2000-01-05' AND DATE '2000-03-01'",
+        # literal arithmetic, decimal + and /, a mixed-type IN list and
+        # a column-bound BETWEEN — evaluated by Spark over the groups
+        " HAVING count(*) + 1 > 26",
+        " HAVING sum(dd) + 0.25 > 10",
+        " HAVING sum(dd) / count(*) > 0.5",
+        " HAVING count(*) IN (30, 2.9e1, 31.0)",
+        " HAVING count(i) BETWEEN 0 AND count(*)",
     ])
 
     @settings(max_examples=50, deadline=None,
@@ -2008,8 +2018,9 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
     zero-scan LocalRelation. Comparison domains replicate Spark's
     coercions (fractional literals are decimals; scientific/D
     literals and double operands compare as doubles with NaN above
-    everything). Everything outside the grammar refuses into the
-    relational path, including statements Spark itself rejects."""
+    everything). Arithmetic, mixed-type IN lists and column-bound
+    BETWEEN answer zero-scan too; statements Spark itself rejects
+    refuse into the relational path, which raises the error."""
     cat.sql(spark, """
         CREATE TABLE hvq (k BIGINT, i INT, dd DECIMAL(10,2), s STRING,
                           f DOUBLE, p STRING, q INT)
@@ -2106,6 +2117,15 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         "HAVING max(f)+count(*) > 3 ORDER BY p",
         "SELECT p, q, sum(i) AS si FROM hvq GROUP BY p, q "
         "HAVING sum(i)/count(*) BETWEEN 2 AND 9 ORDER BY p, q",
+        # literal arithmetic, decimal arithmetic, a mixed-type IN list
+        # and a column-bound BETWEEN: Spark evaluates them over the
+        # per-group relation
+        "SELECT p FROM hvq GROUP BY p HAVING count(*) + 1 > 3",
+        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)+sum(dd) > 0",
+        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)/count(*) > 1",
+        "SELECT p FROM hvq GROUP BY p HAVING count(*) IN (20, 2.1e1)",
+        "SELECT p FROM hvq GROUP BY p "
+        "HAVING count(i) BETWEEN 0 AND count(*)",
     ]
     for stq in fast_cases:
         got = cat.sql(spark, stq)
@@ -2123,28 +2143,6 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         if "ORDER BY" not in stq:
             g, x = sorted(g), sorted(x)
         assert g == x, (stq, g[:3], x[:3])
-    # outside the grammar: refuse into the relational path (values
-    # still right there) — literal arithmetic, decimal arithmetic
-    for stq in [
-        "SELECT p FROM hvq GROUP BY p HAVING count(*) + 1 > 3",
-        # decimal +/- and division: Spark's precision-adjustment
-        # algebra is not replicated — fall back
-        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)+sum(dd) > 0",
-        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)/count(*) > 1",
-        # a MIXED exact+double IN list: Spark coerces the whole list
-        # to one common type, which per-element domains can diverge
-        # from past 2^53 — must refuse into the relational path
-        "SELECT p FROM hvq GROUP BY p HAVING count(*) IN (20, 2.1e1)",
-        # BETWEEN with a column bound is outside the literal grammar
-        "SELECT p FROM hvq GROUP BY p "
-        "HAVING count(i) BETWEEN 0 AND count(*)",
-    ]:
-        got = cat.sql(spark, stq)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "Scan parquet" in plan, stq
-        want = spark.sql(stq.replace("FROM hvq", "FROM hvq_rel"))
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, want.collect())), stq
     # error parity: a non-grouped data column in HAVING must surface
     # Spark's own analysis error, never a fast-path answer
     with pytest.raises(Exception, match="UNRESOLVED|cannot be resolved"):
@@ -2169,9 +2167,9 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         with pytest.raises(Exception):
             spark.sql(stq.replace("FROM hvq", "FROM hvq_rel")).collect()
     # error parity (r15): a division whose denominator is ZERO in some
-    # group is an ANSI DIVIDE_BY_ZERO error — the expr evaluator
-    # refuses the statement and the fallback raises Spark's own error
-    # (group 'a' contains id=0, so min(i)=0 there)
+    # group is an ANSI DIVIDE_BY_ZERO error — Spark raises it over the
+    # per-group relation as over the table (group 'a' contains id=0,
+    # so min(i)=0 there)
     stq = ("SELECT p, sum(i) AS si, min(i) AS mi FROM hvq GROUP BY p "
            "HAVING sum(i)/min(i) > 1")
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
@@ -2180,13 +2178,62 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         spark.sql(stq.replace("FROM hvq", "FROM hvq_rel")).collect()
 
 
+def test_metadata_agg_refusals_match_relational(cat, spark):
+    """The metadata path's failure mode is a wrong answer from the
+    per-group relation, so every shape it cannot evaluate like the
+    table must run the relational plan and return its answer — or
+    raise its error: an unrecognized aggregate, an aggregate over an
+    expression, windows, a scalar subquery, an ORDER BY ordinal and
+    an output alias named like a grouping column."""
+    cat.sql(spark, """
+        CREATE TABLE rfz (k BIGINT, i INT, p STRING) USING lakesoul
+        PARTITIONED BY (p)
+        TBLPROPERTIES('hashPartitions'='k','hashBucketNum'='2',
+                      'lakesoul.statsColumns'='i')
+    """)
+    cat.sql(spark, """INSERT INTO rfz SELECT id, CAST(id % 13 AS INT),
+        CASE WHEN id % 3 = 0 THEN 'a' WHEN id % 3 = 1 THEN 'b'
+             ELSE 'c' END FROM range(60)""")
+    cat.get_table(spark, "rfz").to_df().createOrReplaceTempView(
+        "rfz_rel")
+    for stq in [
+        "SELECT p, first(p) FROM rfz GROUP BY p",
+        "SELECT p, count(*) FROM rfz GROUP BY p HAVING max(i + 1) > 3",
+        "SELECT p, stddev(i) FROM rfz GROUP BY p",
+        "SELECT p, sum(i) OVER () FROM rfz GROUP BY p",
+        "SELECT p, count(*) FROM rfz GROUP BY p "
+        "HAVING sum(i) > (SELECT 150)",
+        "SELECT p, sum(i) FROM rfz GROUP BY p ORDER BY 1",
+        "SELECT max(i) AS p FROM rfz GROUP BY p HAVING p > 'a'",
+        "SELECT max(i) AS p, count(*) FROM rfz GROUP BY p ORDER BY p",
+        "SELECT p, count(*) FROM rfz GROUP BY p "
+        "ORDER BY rank() OVER (ORDER BY p DESC)",
+    ]:
+        try:
+            want = spark.sql(stq.replace("FROM rfz", "FROM rfz_rel"))
+            want_rows = want.collect()
+        except Exception as e:
+            with pytest.raises(type(e)):
+                cat.sql(spark, stq).collect()
+            continue
+        got = cat.sql(spark, stq)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Scan parquet" in plan, (stq, plan)
+        canon = lambda r: tuple((v is None, str(v)) for v in r)
+        g = [canon(r) for r in got.collect()]
+        x = [canon(r) for r in want_rows]
+        if "ORDER BY" not in stq:
+            g, x = sorted(g), sorted(x)
+        assert g == x, (stq, g, x)
+
+
 def test_groupby_fast_path_date_literals(cat, spark):
     """DATE literals in HAVING atoms (r15): the strict zero-padded
     ``DATE '…'`` / quoted-ISO forms answer zero-scan against date
     grouping columns and date MIN/MAX stats (BETWEEN and IN ride the
-    same desugaring; date↔date operand comparisons too); any looser
-    spelling Spark's cast would accept refuses into the relational
-    path, which applies that cast itself."""
+    same desugaring; date↔date operand comparisons too), and so do
+    looser spellings Spark's cast accepts — Spark applies that cast
+    over the per-group relation."""
     cat.sql(spark, """
         CREATE TABLE hvd (k BIGINT, dt DATE, v INT, d DATE)
         USING lakesoul PARTITIONED BY (d)
@@ -2213,6 +2260,7 @@ def test_groupby_fast_path_date_literals(cat, spark):
         "SELECT d, max(dt) AS mx, min(dt) AS mn FROM hvd GROUP BY d "
         "HAVING max(dt) > min(dt) ORDER BY d",
         "SELECT d FROM hvd GROUP BY d HAVING d = '2024-03-02'",
+        "SELECT d FROM hvd GROUP BY d HAVING d > '2024-3-2'",
     ]
     for stq in fast_cases:
         got = cat.sql(spark, stq)
@@ -2230,15 +2278,6 @@ def test_groupby_fast_path_date_literals(cat, spark):
         if "ORDER BY" not in stq:
             g, x = sorted(g), sorted(x)
         assert g == x, (stq, g[:3], x[:3])
-    # loose date spellings Spark's cast accepts refuse into the
-    # relational path (same values, real scan)
-    stq = "SELECT d FROM hvd GROUP BY d HAVING d > '2024-3-2'"
-    got = cat.sql(spark, stq)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" in plan, plan
-    want = spark.sql(stq.replace("FROM hvd", "FROM hvd_rel"))
-    assert sorted(map(str, got.collect())) == \
-        sorted(map(str, want.collect()))
 
 
 def test_partition_sum_avg_fast_path(cat, spark):
@@ -2429,7 +2468,7 @@ def test_groupby_fast_path_order_by_limit(cat, spark):
     (≤1024) group rows sort driver-side with typed keys (numeric
     carriers never string-sort), replicating Spark's defaults
     (ASC+NULLS FIRST, DESC+NULLS LAST) — still a LocalRelation, zero
-    scan jobs. Ordinals, expressions, and non-output columns refuse
+    scan jobs. Expression keys answer zero-scan too; ordinals refuse
     into the relational path."""
     cat.sql(spark, """
         CREATE TABLE obl (k BIGINT, v INT, d DECIMAL(12,2), p STRING,
@@ -2477,10 +2516,10 @@ def test_groupby_fast_path_order_by_limit(cat, spark):
     assert len(cat.sql(
         spark, "SELECT p, count(*) FROM obl GROUP BY p LIMIT 2"
     ).collect()) == 2
-    # ordinal / expression tails refuse into the relational path
+    check("SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY n + 1")
+    # ordinal tails refuse into the relational path
     for sql in (
         "SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY 1",
-        "SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY n + 1",
     ):
         plan = cat.sql(spark, sql) \
             ._jdf.queryExecution().executedPlan().toString()

@@ -805,7 +805,7 @@ def test_stateful_first_event_strict_mode(spark, tmp_path):
 
 
 def test_latest_state_stream(spark, tmp_path):
-    """transformWithStateInPandas latest-state maintenance (the Flink
+    """applyInPandasWithState latest-state maintenance (the Flink
     keyed-state + timers analog): last-writer-wins by order across
     micro-batches, stale rows emit nothing, out-of-order late rows
     lose."""
